@@ -40,28 +40,20 @@ import org.apache.spark.sql.functions._
   */
 object Prefix {
 
-  /** Sentinel: resolve `ranges` from session configuration at call
-    * time — `spark.graft.prefix.ranges` if set, else
-    * `spark.sql.shuffle.partitions`. This is the default, so the slice
-    * count tracks cluster scale instead of freezing at a constant: a
-    * 1000-executor session with 2000 shuffle partitions gets 2000-way
-    * prefix parallelism, not 32-way (~3 TB/slice at 100 TB). */
+  /** Sentinel: resolve `ranges` from the session's
+    * `spark.sql.shuffle.partitions` at call time. This is the default,
+    * so the slice count tracks cluster scale instead of freezing at a
+    * constant: a 1000-executor session with 2000 shuffle partitions
+    * gets 2000-way prefix parallelism, not 32-way (~3 TB/slice at
+    * 100 TB). */
   val AutoRanges: Int = 0
 
-  /** Conf key overriding the auto-resolved slice count. */
-  val RangesConf = "spark.graft.prefix.ranges"
-
-  /** Explicit `ranges` wins; otherwise [[RangesConf]], otherwise the
-    * session's `spark.sql.shuffle.partitions` (floored at 2 — the
-    * slicing degenerates gracefully but requires ≥ 2 requested). */
+  /** Explicit `ranges` wins; otherwise the session's
+    * `spark.sql.shuffle.partitions` (floored at 2 — the slicing
+    * degenerates gracefully but requires ≥ 2 requested). */
   private[graft] def resolveRanges(df: DataFrame, ranges: Int): Int =
     if (ranges > 0) ranges
-    else {
-      val conf = df.sparkSession.conf.get(RangesConf, "").trim
-      val n = if (conf.nonEmpty) conf.toInt
-              else df.sparkSession.sessionState.conf.numShufflePartitions
-      math.max(2, n)
-    }
+    else math.max(2, df.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** Slice boundaries for `key` (cast to double): the 1/n .. (n-1)/n
     * approximate quantiles, deduplicated. Rows compare strictly against

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** One change event off the stream (ts in epoch micros). */
 case class ChangeEvent(event_id: Long, user_id: Long, op: String, value: Double, ts_us: Long)
 
-/** Latest-state row maintained per key. */
+/** Latest-state row per key: applyLatest's state and a CDC lake row. */
 case class KeyState(user_id: Long, last_event_id: Long, last_op: String, last_value: Double)
 
 /** One MinHash band-bucket row of a streaming document. */
@@ -40,19 +40,26 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   * Debezium→Kafka→target apply loop, re-expressed as
   * readStream → stateful transform → sink.
   *
-  * `applyLatest` is the Debezium sink: per-key last-writer-wins kept in
-  * `GroupState` via flatMapGroupsWithState — the idiomatic Spark tool for
-  * custom CDC state (upsert/delete precedence by offset). State size is
-  * O(live keys), partitioned by key hash across executors; each
+  * `streamApplyToLakeOf` is the Debezium sink: a stateless foreachBatch
+  * whose target holds the state. Each micro-batch folds its raw events
+  * with the lake rows of the buckets it touches (last-writer-wins by
+  * offset, [[graft.cdc.CdcOps.latestStateOf]]) and overwrites those
+  * buckets. Lake rows carry `last_op`, and deleted keys stay as
+  * tombstones (`last_op = 'D'`), just as a keyed state store keeps them;
+  * direct readers of the lake filter `last_op <> 'D'`.
+  *
+  * `applyLatest` is the same LWW rule kept in `GroupState` via
+  * flatMapGroupsWithState, for stream_cdc_apply's replay. State size is
+  * O(keys ever seen), partitioned by key hash across executors; each
   * micro-batch shuffles only its new events.
   *
   * `windowCounts` is the operational monitor: watermarked sliding-window
   * op counts (the Kafka-topic-monitoring shape).
   *
-  * Tests drive both through MemoryStream (StreamingSpec); the
-  * SparkEntry entries replay the events parquet through a file source
-  * with Trigger.AvailableNow — same code path batch would take at the
-  * real 100 TB deployment's backfill.
+  * Tests drive `applyLatest` and `windowCounts` through MemoryStream
+  * (StreamingSpec); the SparkEntry entries replay the events parquet
+  * through a file source with Trigger.AvailableNow — same code path
+  * batch would take at the real 100 TB deployment's backfill.
   */
 object CdcStream {
 
@@ -83,11 +90,6 @@ object CdcStream {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     exitScratch.add(p); p
   }
-
-  /** True when the auto-chosen provider is the in-memory one, i.e. the
-    * post-replay state-size guard applies. */
-  private def inMemoryStoreChosen(autoStore: String): Boolean =
-    autoStore.contains("HDFSBackedStateStoreProvider")
 
   /** Epoch-micros column for the `ts` field under any of the three
     * parquet encodings the generator has shipped (long nanos,
@@ -172,13 +174,8 @@ object CdcStream {
                      transform: DataFrame => DataFrame,
                      normalize: Boolean = true,
                      table: String = "events"): DataFrame = {
-    val profT0 = System.nanoTime()
-    def prof(phase: String): Unit =
-      if (sys.env.contains("GRAFT_STREAM_PROF"))
-        println(f"SPROF $name%-22s $phase%-12s ${(System.nanoTime() - profT0) / 1e9}%7.3fs")
     spark.catalog.dropTempView(name) // allow re-running in one session
     val schema = graft.core.Tables.load(spark, dir, table).schema
-    prof("schema")
     // The file stream source wants a directory of data FILES; stage the
     // table behind symlinks (at deployment the source would already be a
     // directory of log segments). A single-file table links as-is; a
@@ -218,12 +215,11 @@ object CdcStream {
     // partition per ~2 MB of compressed input, capped at the session's
     // parallelism. A real deployment sizes this to live-key volume; the
     // setting is sticky per query via its (fresh) checkpoint, so batch
-    // queries in the session are unaffected. GRAFT_STREAM_PARTS overrides.
+    // queries in the session are unaffected.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val autoParts = math.max(8, math.min(spark.sparkContext.defaultParallelism,
       (stagedBytes / (2L << 20)).toInt))
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_PARTS", autoParts.toString))
+    spark.conf.set("spark.sql.shuffle.partitions", autoParts.toString)
     // Keyed state must NOT live as JVM objects at scale: the in-memory
     // provider holds every (key → state) entry of every retained version
     // on-heap, and at sf10 the band-bucket state of stream_near_dedup
@@ -240,16 +236,16 @@ object CdcStream {
     // manage (measured at sf0.1: the 8-query stateful stream subset runs
     // 0.75× under the in-memory provider — 15.2 s → 11.4 s — while sf1+
     // inputs stay on RocksDB, whose sf10 necessity is measured above).
-    // GRAFT_STREAM_STORE pins either backend explicitly. Restored after
-    // the replay so tests that pin a provider's behavior are unaffected.
+    // Restored after the replay so tests that pin a provider's behavior
+    // are unaffected.
     val prevStore = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    val inMemoryStore = stagedBytes <= (8L << 20)
     val autoStore =
-      if (stagedBytes <= (8L << 20))
+      if (inMemoryStore)
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
       else
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      sys.env.getOrElse("GRAFT_STREAM_STORE", autoStore))
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", autoStore)
     // RocksDB's row-count metric does a READ BEFORE EVERY WRITE to
     // detect insert-vs-update; with millions of fresh bucket keys per
     // replay (stream_near_dedup at sf10) that doubles state-store work
@@ -288,7 +284,6 @@ object CdcStream {
     // pass, and every Update consumer in this file folds the emission
     // union idempotently (per-key min/max/max_by), so a duplicate batch
     // could not change a result even if one occurred.
-    prof("staged")
     val transformed = transform(if (normalize) toChangeEvents(stream) else stream)
     val fileSink = outputMode != OutputMode.Complete
     val sinkDir = java.nio.file.Files.createTempDirectory("graft-sink")
@@ -304,17 +299,7 @@ object CdcStream {
             batch.write.mode("append").parquet(sinkDir.toString)
           }.start()
         else w.format("memory").queryName(name).start()
-      prof("started")
       q.awaitTermination()
-      prof("terminated")
-      if (sys.env.contains("GRAFT_STREAM_PROF"))
-        q.recentProgress.foreach { p =>
-          println(s"SPROF $name batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs} state=" +
-            p.stateOperators.map(s =>
-              s"(rows=${s.numRowsTotal} mem=${s.memoryUsedBytes} commit=${s.commitTimeMs}ms)")
-              .mkString(";"))
-        }
       // Guard on the auto in-memory state-store choice (it trusts staged
       // bytes as a STATE proxy): assert the realized keyed state actually
       // stayed small, so a future operator with a larger key-state
@@ -322,14 +307,14 @@ object CdcStream {
       // instead of silently building multi-GB heap state. 2 GiB is ~8×
       // the worst legitimate state observed under the 8 MB input
       // threshold and ~1/12 of the replay heap.
-      if (!sys.env.contains("GRAFT_STREAM_STORE") && inMemoryStoreChosen(autoStore)) {
+      if (inMemoryStore) {
         val maxStateBytes = q.recentProgress
           .map(_.stateOperators.map(_.memoryUsedBytes).sum)
           .foldLeft(0L)(math.max)
         require(maxStateBytes < (2L << 30),
           s"in-memory state store grew to $maxStateBytes bytes on ${stagedBytes}B " +
             "of staged input — state amplification exceeds the volume heuristic's " +
-            "assumptions; pin GRAFT_STREAM_STORE=rocksdb or lower the threshold")
+            "assumptions; lower replay's 8 MB in-memory store threshold")
       }
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -667,16 +652,18 @@ object CdcStream {
       |JOIN nation n ON c.c_nationkey = n.n_nationkey
       |GROUP BY 1, 2 ORDER BY n_name, op""".stripMargin
 
-  /** End-to-end streaming pipeline: stateful apply → foreachBatch →
+  /** End-to-end streaming pipeline: change events → foreachBatch →
     * idempotent bucket-partitioned lake snapshot (Sinks.writeSnapshot).
-    * Each micro-batch upserts only the keys it changed: the batch's
-    * updates are merged over the current snapshot per bucket, and dynamic
-    * partition overwrite rewrites only the touched buckets — a retried
-    * micro-batch rewrites the same buckets to the same bytes
-    * (idempotent exactly-once sink semantics on top of at-least-once
-    * foreachBatch, the reference's jdbc upsert sink re-expressed on the
-    * lake). Returns the final snapshot read back from the lake.
-    * StreamingSpec asserts it equals the batch latest-state. */
+    * The lake itself is the apply state — no stateful operator, no state
+    * store: each micro-batch unions its raw events with the lake rows of
+    * the buckets it touches, folds the union once per key with
+    * [[graft.cdc.CdcOps.latestStateOf]] (the same last-writer-wins
+    * `applyLogOf` runs in batch), and dynamic partition overwrite
+    * rewrites only those buckets. A retried micro-batch rewrites the same
+    * buckets to the same bytes (idempotent exactly-once sink semantics on
+    * top of at-least-once foreachBatch, the reference's jdbc upsert sink
+    * re-expressed on the lake). Returns the live snapshot read back from
+    * the lake. StreamingSpec asserts it equals the batch latest-state. */
   def streamApplyToLake(spark: SparkSession, dir: String, path: String,
                         buckets: Int = 16): DataFrame = {
     val schema = graft.core.Tables.load(spark, dir, "events").schema
@@ -689,68 +676,75 @@ object CdcStream {
   }
 
   /** [[streamApplyToLake]] over ANY streaming change-event frame
-    * (event_id, user_id, op, value, ts_us) — the generic apply→lake
-    * path the end-to-end lifecycle test drives from a CSV feed stream.
-    * Draining is AvailableNow: each call applies everything currently
-    * readable and returns the resulting snapshot; re-running after more
-    * input arrives is the reference's catch-up replication cycle (the
-    * LWW bucket merge makes reprocessing idempotent). */
+    * (event_id, user_id, op, value, ts_us — typed through [[ChangeEvent]])
+    * — the generic apply→lake path the end-to-end lifecycle test drives
+    * from a CSV feed stream. Draining is AvailableNow: each call applies
+    * everything currently readable and returns the resulting live
+    * snapshot; re-running after more input arrives is the reference's
+    * catch-up replication cycle (the LWW bucket fold makes reprocessing
+    * idempotent).
+    *
+    * Lake rows are [[KeyState]]s (user_id, last_event_id, last_op,
+    * last_value) partitioned by `_bucket`, and a key whose latest op is a
+    * delete stays in the lake as a tombstone (`last_op = 'D'`) — exactly
+    * as a keyed state store would keep it. The tombstone is what makes
+    * the fold order-free: a feed file applied after a delete with a
+    * lower offset cannot resurrect the key, and a delete that empties a
+    * bucket still rewrites that bucket. Anyone reading `path` directly
+    * must therefore filter `last_op <> 'D'`; the returned frame already
+    * does. A live-only lake (no tombstones) is still valid input.
+    * Tombstone garbage collection is out of scope.
+    *
+    * `checkpoint` persists the source offsets across restarts (a
+    * restarted query resumes at the first uncommitted batch instead of
+    * reprocessing the feed); there is no operator state to persist.
+    * `onBatchApplied(batchId)` fires AFTER the bucket snapshot is written
+    * but BEFORE the micro-batch commits — a hook that throws there
+    * simulates the worst-case crash window (sink side-effect durable,
+    * offset not), which the idempotent bucket overwrite must absorb on
+    * retry. RecoverySpec kills a run mid-stream through this hook,
+    * restarts from the same checkpoint, and asserts the lake equals the
+    * uninterrupted run's. */
   def streamApplyToLakeOf(spark: SparkSession, changeEvents: DataFrame,
-                          path: String, buckets: Int = 16): DataFrame =
-    streamApplyToLakeOf(spark, changeEvents, path, buckets, None, _ => ())
-
-  /** [[streamApplyToLakeOf]] with a durable checkpoint and a per-batch
-    * hook, the crash-recovery harness surface: `checkpoint` persists
-    * offsets + the flatMapGroupsWithState state store across restarts
-    * (a restarted query resumes at the first uncommitted batch instead
-    * of reprocessing the feed), and `onBatchApplied(batchId)` fires
-    * AFTER the bucket snapshot is written but BEFORE the micro-batch
-    * commits — a hook that throws there simulates the worst-case crash
-    * window (sink side-effect durable, offset not), which the
-    * idempotent bucket overwrite must absorb on retry. RecoverySpec
-    * kills a run mid-stream through this hook, restarts from the same
-    * checkpoint, and asserts the lake equals the uninterrupted run's. */
-  def streamApplyToLakeOf(spark: SparkSession, changeEvents: DataFrame,
-                          path: String, buckets: Int,
-                          checkpoint: Option[String],
-                          onBatchApplied: Long => Unit): DataFrame = {
-    val writer = applyLatest(spark, changeEvents).writeStream
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val updates = batch.toDF().persist()
+                          path: String, buckets: Int = 16,
+                          checkpoint: Option[String] = None,
+                          onBatchApplied: Long => Unit = _ => ()): DataFrame = {
+    import spark.implicits._
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val writer = changeEvents.as[ChangeEvent].writeStream
+      .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
+        val events = batch.select(col("user_id").cast("long"), col("event_id").cast("long"),
+          col("op"), col("value").cast("double")).persist()
         // buckets touched by this micro-batch: bounded by `buckets`, so the
         // driver-side collect is O(buckets), never O(keys)
         val bucketOf = pmod(xxhash64(col("user_id")), lit(buckets.toLong))
-        val touched = updates.select(bucketOf.as("b")).distinct()
+        val touched = events.select(bucketOf.as("b")).distinct()
           .collect().map(_.getLong(0))
         // Existence is checked explicitly: a transient READ failure must
         // fail the batch (streaming retries it), never be mistaken for
         // "no snapshot yet" — that would overwrite touched buckets with
         // only this batch's keys and silently drop the rest.
-        val hPath = new org.apache.hadoop.fs.Path(path)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val current =
-          if (!fs.exists(hPath)) spark.emptyDataFrame
-          else spark.read.parquet(path) // partition-pruned to touched buckets
-            .filter(col("_bucket").isin(touched: _*)).drop("_bucket")
-        val merged =
-          if (current.columns.isEmpty) updates
-          else current.unionByName(updates)
-            .groupBy(col("user_id"))
-            .agg(max_by(struct(col("last_event_id"), col("last_op"), col("last_value")),
-              col("last_event_id")).as("s"))
-            .select(col("user_id"), col("s.last_event_id"), col("s.last_op"),
-              col("s.last_value"))
-        graft.sources.Sinks.writeSnapshot(
-          merged.filter(col("last_op") =!= "D"), "user_id", path, buckets)
-        updates.unpersist()
+        val log =
+          if (!fs.exists(hPath)) events
+          else events.unionByName(spark.read.parquet(path) // pruned to touched buckets
+            .filter(col("_bucket").isin(touched: _*))
+            .select(col("user_id"), col("last_event_id").as("event_id"),
+              col("last_op").as("op"), col("last_value").as("value")))
+        if (touched.nonEmpty)
+          graft.sources.Sinks.writeSnapshot(
+            graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
+            "user_id", path, buckets)
+        events.unpersist()
         onBatchApplied(batchId)
-        ()
       }
     val q = checkpoint.fold(writer)(ck => writer.option("checkpointLocation", ck))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    spark.read.parquet(path).drop("_bucket")
+    val lake =
+      if (fs.exists(hPath)) spark.read.parquet(path).drop("_bucket")
+      else spark.emptyDataset[KeyState].toDF()
+    lake.filter(col("last_op") =!= "D")
   }
 
   /** One fold step of the versioned-swap parquet state shared by

@@ -90,7 +90,7 @@ object LifecycleScale {
         .groupBy(col("customer_id").as("user_id"))
         .agg(max_by(col("amount"), unix_micros(col("timestamp"))).as("amount"))
     def lakeState(): DataFrame =
-      spark.read.parquet(lakePath).drop("_bucket")
+      spark.read.parquet(lakePath).drop("_bucket").filter(col("last_op") =!= "D")
         .select(col("user_id"), col("last_value").as("amount"))
 
     // ---- generate: 6 hourly batches, 1.5M rows -----------------------------

@@ -71,7 +71,7 @@ class PrefixSpec extends SparkSpec {
     assert(got.toSeq === want.toSeq)
   }
 
-  test("default ranges tracks spark.sql.shuffle.partitions and the graft conf") {
+  test("default ranges tracks spark.sql.shuffle.partitions") {
     // explicit argument wins
     assert(Prefix.resolveRanges(df, 16) === 16)
     // AutoRanges falls back to the session's shuffle partitions
@@ -81,10 +81,7 @@ class PrefixSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "48")
       assert(Prefix.resolveRanges(df, Prefix.AutoRanges) === 48)
-      // dedicated conf overrides shuffle partitions
-      spark.conf.set(Prefix.RangesConf, "7")
-      assert(Prefix.resolveRanges(df, Prefix.AutoRanges) === 7)
-      // and a full run under the overridden conf is still exact
+      // and a full run under 48 shuffle partitions is still exact
       val got = Prefix.runningSum(df, Seq("g"), Seq(col("id")), col("v"), "cum")
         .orderBy("g", "id").select("g", "id", "cum").collect()
       val w = Window.partitionBy("g").orderBy("id")
@@ -93,7 +90,6 @@ class PrefixSpec extends SparkSpec {
         .orderBy("g", "id").select("g", "id", "cum").collect()
       assert(got.toSeq === want.toSeq)
     } finally {
-      spark.conf.unset(Prefix.RangesConf)
       spark.conf.set("spark.sql.shuffle.partitions", saved)
     }
   }

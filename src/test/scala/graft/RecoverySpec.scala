@@ -16,7 +16,8 @@ import graft.streaming.CdcStream
   *    resume instead of reprocessing committed batches, and (b)
   *    converge to the bit-identical lake of an uninterrupted run —
   *    exactly-once semantics built from at-least-once foreachBatch +
-  *    idempotent bucket overwrite + durable offsets/state-store.
+  *    idempotent bucket overwrite + durable source offsets. The lake
+  *    is the only apply state: the checkpoint holds no state store.
   *
   * 2. foldVersionedState: the versioned-swap digest state replayed
   *    under the crash-retry schedule that broke the round-8
@@ -110,6 +111,10 @@ class RecoverySpec extends SparkSpec {
       .select(col("user_id"), col("s.event_id").as("last_event_id"),
         col("s.op").as("last_op"), col("s.value").as("last_value"))
     assert(lakeRows(recovered) === lakeRows(truth))
+    // no stateful operator on the apply path: the checkpoint holds
+    // offsets and commits only
+    assert(!new java.io.File(ckB, "state").exists(),
+      "streamApplyToLakeOf must not keep a state store in its checkpoint")
   }
 
   test("foldVersionedState: crash-retry schedule keeps the accumulated digest exact, GC stays bounded") {

@@ -217,6 +217,43 @@ class StreamingSpec extends SparkSpec {
     assert(again.exceptAll(batch).count() === 0 && batch.exceptAll(again).count() === 0)
   }
 
+  test("streamApplyToLakeOf: tombstones delete lone keys, survive stale updates, seed a fresh lake") {
+    import spark.implicits._
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // one feed directory per call: every call drains exactly its events
+    def applyTo(lake: String, events: ChangeEvent*): Set[(Long, Long, String)] = {
+      val feed = tmp("graft-tomb-feed") + "/f"
+      events.toDF().coalesce(1).write.parquet(feed)
+      val stream = spark.readStream.schema(events.toDF().schema).parquet(feed)
+      CdcStream.streamApplyToLakeOf(spark, stream, lake).collect()
+        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("last_event_id"),
+          r.getAs[String]("last_op"))).toSet
+    }
+    // precondition: key 1 is the only one of {1, 2, 3} in its bucket
+    val bucketOf = Seq(1L, 2L, 3L).toDF("k")
+      .select(col("k"), pmod(xxhash64(col("k")), lit(16L))).as[(Long, Long)]
+      .collect().toMap
+    assert(bucketOf(1L) != bucketOf(2L) && bucketOf(1L) != bucketOf(3L))
+
+    // (b) an empty and then a delete-only first micro-batch on a fresh
+    // lake both succeed
+    val fresh = tmp("graft-tomb-fresh") + "/lake"
+    assert(applyTo(fresh).isEmpty)
+    assert(applyTo(fresh, ChangeEvent(7, 1, "D", 0.0, 7)).isEmpty)
+
+    val lake = tmp("graft-tomb-lake") + "/lake"
+    assert(applyTo(lake, ChangeEvent(1, 1, "I", 1.0, 1), ChangeEvent(2, 2, "I", 2.0, 2),
+      ChangeEvent(3, 3, "I", 3.0, 3)) === Set((1L, 1L, "I"), (2L, 2L, "I"), (3L, 3L, "I")))
+    // (a) deleting the lone key of a bucket removes it
+    assert(applyTo(lake, ChangeEvent(10, 1, "D", 0.0, 10)) === Set((2L, 2L, "I"), (3L, 3L, "I")))
+    // (c) a later-arriving update with a lower offset than the delete
+    // must not resurrect the key
+    assert(applyTo(lake, ChangeEvent(5, 1, "U", 5.0, 5)) === Set((2L, 2L, "I"), (3L, 3L, "I")))
+    // the lake keeps the tombstone; direct readers filter it
+    assert(spark.read.parquet(lake).filter(col("user_id") === 1L)
+      .select("last_event_id", "last_op").as[(Long, String)].collect().toSeq === Seq((10L, "D")))
+  }
+
   test("stream_scd2: replayed live history equals the batch SCD2 bit-for-bit") {
     val streamed = CdcStream.streamScd2(spark, sf)
     val batch = CdcOps.scd2History(spark, sf)
