@@ -1302,9 +1302,9 @@ object Dedup {
   private[graft] val StarSalt = 64
 
   /** The exact-duplicate STAR edge emitter (group-min → members over
-    * the normalized-text fingerprint) shared by [[dupPairs]] and the
-    * HubScale stress — factored out so the planted-hub proofs exercise
-    * the very code the pipeline runs. Emitted as a TWO-LEVEL star:
+    * the normalized-text fingerprint) that [[dupPairs]] unions in —
+    * factored out so a planted-hub stress can exercise the very code
+    * the pipeline runs. Emitted as a TWO-LEVEL star:
     * members hook onto a per-(fp, doc_id mod [[StarSalt]]) local
     * minimum, and the ≤ StarSalt local minima hook onto the group
     * minimum (a tiny second window over the distinct local roots) —

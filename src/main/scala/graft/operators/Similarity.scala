@@ -436,7 +436,7 @@ object Similarity {
     * [[pqShortlistFor]] shortlist keeps the closest by
     * (adc_d2, neighbor_id). Exact vectors enter only AFTER the
     * shortlist — the batch composite's own post-shortlist discipline
-    * ([[knnIvfPqTuned]]): two stream-static equi-joins fetch the
+    * ([[knnIvfPq]]): two stream-static equi-joins fetch the
     * query's and each surviving neighbor's exact vector from the
     * corpus (≤ shortlist rows per query), and a second Append-mode
     * state function re-ranks top-[[K]] by (cos desc, neighbor_id) —
@@ -446,9 +446,9 @@ object Similarity {
     * micro-batch, so output is batching-invariant (pinned by
     * StreamingSpec). Oracle: the batch [[knnIvfPqSql]] verbatim. */
   /** The CODE-WIDTH serving index [[knnIvfPqServe]] probes, factored
-    * out so the IndexWidth measurement tool prices exactly the frames
-    * the operator serves from (never a reconstruction that could
-    * drift): the persisted (cent_id, neighbor_id, codes) index, the
+    * out so a test or measurement inspects exactly the frames the
+    * operator serves from (never a reconstruction that could drift):
+    * the persisted (cent_id, neighbor_id, codes) index, the
     * broadcast ADC codebook, and the adaptive (roster, nprobe,
     * shortlistN) for the corpus at hand. */
   private[graft] def ivfPqServeIndex(spark: SparkSession, e: DataFrame)
@@ -502,9 +502,9 @@ object Similarity {
     (index, cbJoin, roster, nprobe, shortlistN)
   }
 
-  /** Exact-vector frame for the IndexWidth tool — [[vecs]] with the
-    * serving index's column naming, package-visible for measurement
-    * only. */
+  /** Exact-vector frame the serving index is built from — [[vecs]]
+    * with the serving index's column naming, package-visible for tests
+    * and measurement only. */
   private[graft] def exactVecsFor(spark: SparkSession, dir: String): DataFrame =
     vecs(spark, dir)
 
@@ -1462,17 +1462,7 @@ object Similarity {
     * the oracle replays assignment, probing, candidate ADC, and the
     * re-rank bit-for-bit. Rows-only recall is measured in
     * SimilaritySpec against knn_brute. */
-  def knnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    knnIvfPqTuned(spark, dir, None, None)
-
-  /** [[knnIvfPq]] with its two serving knobs exposed for the recall/cost
-    * sweep (tools.IvfScale): `nprobeOpt` overrides the adaptive
-    * [[ivfNprobeFor]] probe count, `shortlistOpt` the adaptive
-    * [[pqShortlistFor]] ADC re-rank depth. The production operator is
-    * this with (None, None) — bit-identical plan, so the oracle gate
-    * covers it. */
-  private[graft] def knnIvfPqTuned(spark: SparkSession, dir: String,
-      nprobeOpt: Option[Int], shortlistOpt: Option[Int]): DataFrame = {
+  def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
     // --- IVF prune (as in knn_ivf): rank-1 cell per vector via the
     // roster-broadcast kernel, adaptive Nprobe per query
@@ -1482,8 +1472,7 @@ object Similarity {
       element_at(ivfAssignCol(col("v"), roster, 1), 1).as("cent_id"))
     val probes = e.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"),
-        explode(ivfAssignCol(col("v"), roster,
-          nprobeOpt.getOrElse(ivfNprobeFor(nVecs)))).as("cent_id"))
+        explode(ivfAssignCol(col("v"), roster, ivfNprobeFor(nVecs))).as("cent_id"))
     // each vector lives in exactly one cell (rank-1) — no candidate dups
     val cand = cells.join(broadcast(probes), Seq("cent_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
@@ -1518,7 +1507,7 @@ object Similarity {
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_d2"), col("neighbor_id"))
     val shortlisted = adc.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= shortlistOpt.getOrElse(pqShortlistFor(nVecs)))
+      .filter(col("adc_rank") <= pqShortlistFor(nVecs))
       .select(col("query_id"), col("neighbor_id"))
     // --- exact re-rank of the shortlist
     val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -2659,24 +2648,10 @@ object Similarity {
     * (query, neighbor) edge key; 3-row output. Degenerate truncations
     * (all-zero prefix) are filtered on BOTH engines before ranking so
     * no NaN ever enters an ORDER BY. */
-  def knnTruncationRecall(spark: SparkSession, dir: String): DataFrame =
-    truncationRecallOf(spark, dir, _ => lit(true))
-
-  /** [[knnTruncationRecall]] over a 1/`mod` sample of the serving batch
-    * — the NarrowReplay discipline for SFs where the full O(Q×N)×4
-    * DuckDB oracle exceeds the sandbox: the narrowing predicate hits
-    * only the QUERY batch (both engines), and per-query independence of
-    * top-K ranking makes the sample exact, not approximate. */
-  def knnTruncationRecallNarrow(spark: SparkSession, dir: String, mod: Long): DataFrame = {
-    require(mod % 100 == 0, s"mod must be a multiple of 100, got $mod")
-    truncationRecallOf(spark, dir, c => c % mod === 0)
-  }
-
-  private def truncationRecallOf(spark: SparkSession, dir: String,
-      keep: Column => Column): DataFrame = {
+  def knnTruncationRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = vecs(spark, dir)
-    val full = knnBrute(spark, dir).filter(keep(col("query_id")))
+    val full = knnBrute(spark, dir)
       .select(col("query_id"), col("neighbor_id"))
     // The three widths' top-K sets union with a trunc_dim tag and share
     // ONE join against the full-width ground truth, and the denominator
@@ -2690,7 +2665,7 @@ object Similarity {
       val ed = e.withColumn("vd", slice(col("v"), 1, d))
         .withColumn("nd", qdot(col("vd"), col("vd")))
         .filter(col("nd") > 0L)
-      val q = ed.filter(isQuery(col("vec_id")) && keep(col("vec_id")))
+      val q = ed.filter(isQuery(col("vec_id")))
         .select(col("vec_id").as("query_id"), col("vd").as("qv"), col("nd").as("qn"))
       knnOf(q,
         ed.select(col("vec_id").as("neighbor_id"), col("vd").as("v"), col("nd").as("nrm")), K)

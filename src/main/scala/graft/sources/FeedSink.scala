@@ -23,26 +23,20 @@ object FeedSink {
     * with customer_id in [1,1000], amount in [10.00, 1000.00] on the
     * cent grid, timestamps advancing one second per row from a per-batch
     * base — the same shape as random.randint/uniform/now() with the
-    * randomness replaced by the repo-standard affine hash. */
+    * randomness replaced by the repo-standard affine hash. Each batch
+    * owns the hour slot starting `batchId` hours past the base, so for
+    * batches of at most 3600 rows feed position (= timestamp) stays
+    * globally monotone across batches. */
   def genBatch(spark: SparkSession, batchId: Long, rows: Int): DataFrame =
-    genBatch(spark, batchId, rows, 1000L, 1.0d)
-
-  /** [[genBatch]] with a parameterized customer key space and per-row
-    * timestamp step — the scale knob for the sf1 lifecycle run
-    * (tools.LifecycleScale): a 150k-key, 250k-row batch at a 1 ms step
-    * still fits inside its hour slot, so feed position (= timestamp)
-    * stays globally monotone across batches. */
-  def genBatch(spark: SparkSession, batchId: Long, rows: Int,
-               keySpace: Long, stepSecs: Double): DataFrame =
     spark.range(rows).select(
       (pmod((col("id") + lit(batchId) * 100000L) * 2654435761L, lit(1000000007L)))
         .as("h"), col("id"))
       .select(
-        (pmod(col("h"), lit(keySpace)) + 1L).as("customer_id"),
+        (pmod(col("h"), lit(1000L)) + 1L).as("customer_id"),
         ((pmod(col("h"), lit(99001L)) + 1000L).cast("double") / 100.0d).as("amount"),
         (to_timestamp(lit("2024-01-01 00:00:00"))
           + make_interval(lit(0), lit(0), lit(0), lit(0), lit(batchId),
-              lit(0), col("id").cast("double") * stepSecs))
+              lit(0), col("id").cast("double")))
           .as("timestamp"))
 
   /** Publish `df` (customer_id, amount, timestamp) as

@@ -716,26 +716,29 @@ object CdcStream {
       .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
         val events = batch.select(col("user_id").cast("long"), col("event_id").cast("long"),
           col("op"), col("value").cast("double")).persist()
-        // buckets touched by this micro-batch: bounded by `buckets`, so the
-        // driver-side collect is O(buckets), never O(keys)
-        val bucketOf = pmod(xxhash64(col("user_id")), lit(buckets.toLong))
-        val touched = events.select(bucketOf.as("b")).distinct()
-          .collect().map(_.getLong(0))
-        // Existence is checked explicitly: a transient READ failure must
-        // fail the batch (streaming retries it), never be mistaken for
-        // "no snapshot yet" — that would overwrite touched buckets with
-        // only this batch's keys and silently drop the rest.
-        val log =
-          if (!fs.exists(hPath)) events
-          else events.unionByName(spark.read.parquet(path) // pruned to touched buckets
-            .filter(col("_bucket").isin(touched: _*))
-            .select(col("user_id"), col("last_event_id").as("event_id"),
-              col("last_op").as("op"), col("last_value").as("value")))
-        if (touched.nonEmpty)
-          graft.sources.Sinks.writeSnapshot(
-            graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
-            "user_id", path, buckets)
-        events.unpersist()
+        // a batch that throws must still release its cached input: every
+        // streaming retry would otherwise register another cache entry
+        try {
+          // buckets touched by this micro-batch: bounded by `buckets`, so the
+          // driver-side collect is O(buckets), never O(keys)
+          val bucketOf = pmod(xxhash64(col("user_id")), lit(buckets.toLong))
+          val touched = events.select(bucketOf.as("b")).distinct()
+            .collect().map(_.getLong(0))
+          // Existence is checked explicitly: a transient READ failure must
+          // fail the batch (streaming retries it), never be mistaken for
+          // "no snapshot yet" — that would overwrite touched buckets with
+          // only this batch's keys and silently drop the rest.
+          val log =
+            if (!fs.exists(hPath)) events
+            else events.unionByName(spark.read.parquet(path) // pruned to touched buckets
+              .filter(col("_bucket").isin(touched: _*))
+              .select(col("user_id"), col("last_event_id").as("event_id"),
+                col("last_op").as("op"), col("last_value").as("value")))
+          if (touched.nonEmpty)
+            graft.sources.Sinks.writeSnapshot(
+              graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
+              "user_id", path, buckets)
+        } finally events.unpersist()
         onBatchApplied(batchId)
       }
     val q = checkpoint.fold(writer)(ck => writer.option("checkpointLocation", ck))

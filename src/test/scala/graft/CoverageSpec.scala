@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** SURVEY.md §2 is the coverage contract the judge reads line by line;
   * SparkEntry.queries is what the driver actually verifies. Round 4
@@ -57,5 +58,25 @@ class CoverageSpec extends AnyFunSuite {
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(rowsOnly.isEmpty,
       s"queries with only a rows>0 check (add an oracle or justify): ${rowsOnly.mkString(", ")}")
+  }
+
+  test("only Bench, Verify and ScaleGen are entry points or read the environment") {
+    // measurement harnesses live in graftbench/; a library main or a
+    // per-tool environment knob under src/main/scala fails here
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val text = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p)).toMap
+      finally walk.close()
+    }
+    val allowed = Set("graft/Bench.scala", "graft/Verify.scala", "graft/tools/ScaleGen.scala")
+    val mains = text.collect { case (f, t) if "def main\\s*\\(".r.findFirstIn(t).nonEmpty => f }
+    val envReads = text.collect {
+      case (f, t) if t.contains("sys.env") || t.contains("System.getenv") => f
+    }
+    assert(mains.toSet === allowed)
+    assert((envReads.toSet -- allowed).isEmpty,
+      s"environment read outside the entry points: ${(envReads.toSet -- allowed).toSeq.sorted}")
   }
 }

@@ -256,4 +256,13 @@ class LibraryApiSpec extends SparkSpec {
       r.getAs[Long]("n"), r.getAs[Double]("p"))).toSeq
     assert(cells === Seq(("A", "B", 3L, 1.0), ("B", "A", 1L, 1.0)))
   }
+
+  test("Tables.load: a table rewritten in place is re-read, not served from the memo") {
+    val sfDir = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    val path = s"$sfDir/t.parquet"
+    spark.range(10).write.parquet(path)
+    assert(graft.core.Tables.load(spark, sfDir, "t").count() === 10L)
+    spark.range(25).write.mode("overwrite").parquet(path)
+    assert(graft.core.Tables.load(spark, sfDir, "t").count() === 25L)
+  }
 }

@@ -415,8 +415,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("unpartitioned windows: exactly the bounded-input allowlist (VERDICT r15 #8)") {
-    // Enumerated by tools.WarnSweep at sf0.01 (WindowExec's "No Partition
-    // Defined" warning attributed per query). Every allowlisted window runs
+    // Enumerated at sf0.01 from WindowExec's "No Partition Defined"
+    // warning, attributed per query. Every allowlisted window runs
     // over AGGREGATE-LEVEL input bounded by construction, never by corpus
     // rows: calendar days/weeks (q39_trend_slope, events_anomaly,
     // events_mix_drift, recon_backfill_plan), the batch control ledger
@@ -425,8 +425,9 @@ class PlanSpec extends SparkSpec {
     // top-20 (events_power_users), and the per-source interleave schedule
     // (sample_interleave_schedule). A data-proportional unpartitioned
     // window added anywhere else fails this test. stream_* replay paths
-    // execute end-to-end on construction, so they are swept by WarnSweep
-    // instead (zero hits at sf0.01); here the batch surface is pinned.
+    // execute end-to-end on construction, so they were swept by that
+    // warning scan instead (zero hits at sf0.01); here the batch surface
+    // is pinned.
     val allow = Set("batch_settle_ready", "batch_status", "dedup_threshold_sweep",
       "events_anomaly", "events_mix_drift", "events_power_users",
       "latest_batch_status", "q39_trend_slope", "recon_backfill_plan",

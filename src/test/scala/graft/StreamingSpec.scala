@@ -254,6 +254,22 @@ class StreamingSpec extends SparkSpec {
       .select("last_event_id", "last_op").as[(Long, String)].collect().toSeq === Seq((10L, "D")))
   }
 
+  test("streamApplyToLakeOf: a failed micro-batch releases its cached input") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    spark.catalog.clearCache()
+    // the lake path is a plain file, so reading the touched buckets throws
+    // inside the micro-batch, after its input was persisted
+    val lake = java.nio.file.Files.createTempFile("graft-bad-lake", ".txt")
+    java.nio.file.Files.writeString(lake, "not a parquet table")
+    val input = MemoryStream[ChangeEvent]
+    input.addData(ChangeEvent(1, 1, "I", 1.0, 1))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CdcStream.streamApplyToLakeOf(spark, input.toDF(), lake.toString)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("stream_scd2: replayed live history equals the batch SCD2 bit-for-bit") {
     val streamed = CdcStream.streamScd2(spark, sf)
     val batch = CdcOps.scd2History(spark, sf)
