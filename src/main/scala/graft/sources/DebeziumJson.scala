@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * (e.g. a Kafka `value` column) — `from_json` is a pure projection, so
   * the parse keeps whole-stage codegen and imposes no shuffle. The
   * output shape plugs straight into CdcOps.latestStateOf /
-  * applyLogOf / CdcStream.applyLatest, and, renamed to the
+  * applyLogOf, and, renamed to the
   * `ChangeEvent` columns, into the streaming lake sink
   * CdcStream.streamApplyToLakeOf.
   */

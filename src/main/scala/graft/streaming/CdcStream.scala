@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** One change event off the stream (ts in epoch micros). */
 case class ChangeEvent(event_id: Long, user_id: Long, op: String, value: Double, ts_us: Long)
 
-/** Latest-state row per key: applyLatest's state and a CDC lake row. */
+/** A CDC lake row: a key's latest change (tombstone when `last_op = 'D'`). */
 case class KeyState(user_id: Long, last_event_id: Long, last_op: String, last_value: Double)
 
 /** One MinHash band-bucket row of a streaming document. */
@@ -38,28 +38,27 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
 
 /** Structured-streaming CDC (SURVEY.md §2.A): the reference's
   * Debezium→Kafka→target apply loop, re-expressed as
-  * readStream → stateful transform → sink.
+  * readStream → foreachBatch → lake.
   *
-  * `streamApplyToLakeOf` is the Debezium sink: a stateless foreachBatch
-  * whose target holds the state. Each micro-batch folds its raw events
-  * with the lake rows of the buckets it touches (last-writer-wins by
-  * offset, [[graft.cdc.CdcOps.latestStateOf]]) and overwrites those
-  * buckets. Lake rows carry `last_op`, and deleted keys stay as
-  * tombstones (`last_op = 'D'`), just as a keyed state store keeps them;
-  * direct readers of the lake filter `last_op <> 'D'`.
-  *
-  * `applyLatest` is the same LWW rule kept in `GroupState` via
-  * flatMapGroupsWithState, for stream_cdc_apply's replay. State size is
-  * O(keys ever seen), partitioned by key hash across executors; each
-  * micro-batch shuffles only its new events.
+  * CDC apply has one mechanism: `streamApplyToLakeOf`, the Debezium
+  * sink. It is a stateless foreachBatch whose target holds the state.
+  * Each micro-batch folds its raw events with the lake rows of the
+  * buckets it touches (last-writer-wins by offset,
+  * [[graft.cdc.CdcOps.latestStateOf]], the fold batch `applyLogOf`
+  * runs) and overwrites those buckets. Lake rows carry `last_op`, and
+  * deleted keys stay as tombstones (`last_op = 'D'`); direct readers of
+  * the lake filter `last_op <> 'D'`. stream_cdc_apply replays the
+  * events table into a scratch lake and returns it tombstones included.
   *
   * `windowCounts` is the operational monitor: watermarked sliding-window
-  * op counts (the Kafka-topic-monitoring shape).
+  * op counts (the Kafka-topic-monitoring shape). The other `stream_*`
+  * operators keep keyed GroupState for their own per-key aggregates.
   *
-  * Tests drive `applyLatest` and `windowCounts` through MemoryStream
-  * (StreamingSpec); the SparkEntry entries replay the events parquet
-  * through a file source with Trigger.AvailableNow — same code path
-  * batch would take at the real 100 TB deployment's backfill.
+  * Tests drive the lake sink and `windowCounts` through MemoryStream
+  * and feed directories (StreamingSpec); the SparkEntry entries replay
+  * the events parquet through a file source with Trigger.AvailableNow —
+  * same code path batch would take at the real 100 TB deployment's
+  * backfill.
   */
 object CdcStream {
 
@@ -121,28 +120,6 @@ object CdcStream {
       tsUs.as("ts_us"))
   }
 
-  /** Per-key last-writer-wins with delete precedence, as a stateful
-    * stream transform. Emits the key's latest state every micro-batch it
-    * changes in; a key whose latest op is D emits a tombstone
-    * (last_op = "D") so the sink can delete. */
-  def applyLatest(spark: SparkSession, changeEvents: DataFrame): DataFrame = {
-    import spark.implicits._
-    changeEvents.as[ChangeEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeyState, KeyState](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, events: Iterator[ChangeEvent], state: GroupState[KeyState]) =>
-          val latest = events.foldLeft(state.getOption.orNull) { (best, e) =>
-            if (best == null || e.event_id > best.last_event_id)
-              KeyState(key, e.event_id, e.op, e.value)
-            else best
-          }
-          if (latest == null) Iterator.empty
-          else { state.update(latest); Iterator.single(latest) }
-      }
-      .toDF()
-  }
-
   /** Native session_window sessionization over the change stream —
     * the streaming twin of Analytics.q12Sessionize (same 30-minute gap):
     * state-backed session merging instead of a lag/cumsum window, so
@@ -166,25 +143,18 @@ object CdcStream {
       .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
         col("op"), col("n_changes"))
 
-  /** Replay the events parquet through a real file stream source and run
-    * `transform` to completion (Trigger.AvailableNow), returning the sink
-    * table. */
-  private def replay(spark: SparkSession, dir: String, name: String,
-                     outputMode: OutputMode,
-                     transform: DataFrame => DataFrame,
-                     normalize: Boolean = true,
-                     table: String = "events"): DataFrame = {
-    spark.catalog.dropTempView(name) // allow re-running in one session
+  /** Stage `$dir/$table.parquet` as a streaming file source: returns the
+    * stream, its stage directory and the staged bytes. The file stream
+    * source wants a directory of data FILES, so the table sits behind
+    * symlinks (at deployment the source would already be a directory of
+    * log segments). A single-file table links as-is; a directory table
+    * (the ScaleGen outputs) links each part file — the source does NOT
+    * descend into subdirectories and would silently stream zero rows.
+    * Link targets are absolute: a relative `dir` would otherwise leave
+    * the links dangling relative to the stage directory. */
+  private def stageFeed(spark: SparkSession, dir: String,
+                        table: String): (DataFrame, java.nio.file.Path, Long) = {
     val schema = graft.core.Tables.load(spark, dir, table).schema
-    // The file stream source wants a directory of data FILES; stage the
-    // table behind symlinks (at deployment the source would already be a
-    // directory of log segments). A single-file table links as-is; a
-    // directory table (the ScaleGen outputs) links each part file —
-    // the source does NOT descend into subdirectories, and silently
-    // streaming zero rows poisoned every committed stream-op time at
-    // sf1/sf10 until round 9 caught it.
-    // (absolute link targets: a relative `dir` would otherwise leave
-    // the links dangling relative to the stage directory)
     val stage = scratchDir("graft-stream")
     val src = java.nio.file.Paths.get(s"$dir/$table.parquet").toAbsolutePath
     var stagedBytes = 0L
@@ -204,7 +174,19 @@ object CdcStream {
       java.nio.file.Files.createSymbolicLink(stage.resolve(s"$table.parquet"), src)
       stagedBytes = java.nio.file.Files.size(src)
     }
-    val stream = spark.readStream.schema(schema).parquet(stage.toString)
+    (spark.readStream.schema(schema).parquet(stage.toString), stage, stagedBytes)
+  }
+
+  /** Replay the events parquet through a real file stream source and run
+    * `transform` to completion (Trigger.AvailableNow), returning the sink
+    * table. */
+  private def replay(spark: SparkSession, dir: String, name: String,
+                     outputMode: OutputMode,
+                     transform: DataFrame => DataFrame,
+                     normalize: Boolean = true,
+                     table: String = "events"): DataFrame = {
+    spark.catalog.dropTempView(name) // allow re-running in one session
+    val (stream, stage, stagedBytes) = stageFeed(spark, dir, table)
     // A stateful query instantiates one state store per shuffle partition
     // per stateful operator, and the right parallelism is a function of
     // INGEST VOLUME, not CPU count: per-partition store init (dir +
@@ -354,18 +336,17 @@ object CdcStream {
     }
   }
 
-  /** stream_cdc_apply — final emitted latest-state per key after
-    * replaying the full log (single AvailableNow batch ⇒ one update per
-    * key, deduped defensively by max event_id). Oracle-checked: the
-    * stateful stream's final state must equal the batch arg-max. */
-  def streamCdcApply(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_cdc_apply_sink", OutputMode.Update,
-      df => applyLatest(spark, df))
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("last_event_id"), col("last_op"), col("last_value")),
-        col("last_event_id")).as("s"))
-      .select(col("user_id"), col("s.last_event_id"), col("s.last_op"), col("s.last_value"))
-      .orderBy(col("user_id"))
+  /** stream_cdc_apply — the latest state per key after replaying the
+    * full log through [[streamApplyToLake]] into a scratch lake, read
+    * back WITH its tombstones (deleted keys stay as `last_op = 'D'`
+    * rows). The lake holds one row per key by construction.
+    * Oracle-checked: the streamed lake must equal the batch arg-max. */
+  def streamCdcApply(spark: SparkSession, dir: String): DataFrame = {
+    // a path that does not exist yet: the sink reads an existing one as a lake
+    val lake = scratchDir("graft-cdc-apply").resolve("lake").toString
+    streamApplyToLake(spark, dir, lake)
+    spark.read.parquet(lake).drop("_bucket").orderBy(col("user_id"))
+  }
 
   val streamCdcApplySql: String =
     """SELECT user_id,
@@ -666,12 +647,7 @@ object CdcStream {
     * the lake. StreamingSpec asserts it equals the batch latest-state. */
   def streamApplyToLake(spark: SparkSession, dir: String, path: String,
                         buckets: Int = 16): DataFrame = {
-    val schema = graft.core.Tables.load(spark, dir, "events").schema
-    val stage = scratchDir("graft-lake-stream")
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val stream = spark.readStream.schema(schema).parquet(stage.toString)
+    val (stream, _, _) = stageFeed(spark, dir, "events")
     streamApplyToLakeOf(spark, toChangeEvents(stream), path, buckets)
   }
 
@@ -804,16 +780,13 @@ object CdcStream {
       versions.maxBy(p => p.substring(p.lastIndexOf("_v") + 2).toLong))
   }
 
-  /** stream_recon_digest — the reconciliation digest maintained
-    * INCREMENTALLY under streaming ingest (recon_incremental's
-    * foreachBatch twin): the orders feed replays as a multi-file
+  /** Streaming digest fold shared by stream_recon_digest and
+    * stream_recon_incremental: the orders feed replays as a multi-file
     * stream (maxFilesPerTrigger=1 forces several micro-batches), and
-    * each micro-batch folds its per-bucket (row count, digest sum)
-    * partial into a 64-row persistent state table. Per-batch cost is
-    * ∝ the batch's rows — the table is never re-scanned — because the
-    * row digest is an order-independent additive sum, the same
-    * additivity recon_merkle's ladder exploits: digest(all rows) =
-    * Σ digest(batch).
+    * each micro-batch folds the per-bucket (row count, digest sum)
+    * partial of its `slice` into a `buckets`-row persistent state
+    * table. After replay the final state joins the `slice` of the
+    * drifted target's digests into recon_hash_bucket's output shape.
     *
     * State is versioned-swap parquet (read v(b-1), write v(b),
     * garbage-collect v(b-2) — see [[foldVersionedState]] for the
@@ -822,16 +795,14 @@ object CdcStream {
     * foreachBatch's at-least-once contract, the same discipline as
     * streamApplyToLake's bucket overwrite, and never reads the path
     * it is writing. State rows ∝ buckets (metadata-sized), shuffled
-    * once per batch with map-side combine.
-    *
-    * After replay the final state joins the target's digests into
-    * exactly recon_hash_bucket's output shape — and recon_hash_bucket
-    * IS the oracle: the incrementally maintained digest must equal
-    * the full-table batch compare bit-for-bit. */
-  def streamReconDigest(spark: SparkSession, dir: String): DataFrame = {
+    * once per batch with map-side combine. */
+  private def streamDigestFold(spark: SparkSession, dir: String,
+                               slice: DataFrame => DataFrame,
+                               buckets: Int): DataFrame = {
     import graft.cdc.Reconcile
     val src = graft.core.Tables.load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
+    val digest = Reconcile.rowDigest(col("o_orderkey"), col("o_totalprice"))
     val stage = scratchDir("graft-recon-stream")
     // stage the feed as several files so AvailableNow actually runs
     // multiple incremental batches (a single file would be one batch);
@@ -848,11 +819,10 @@ object CdcStream {
       .option("maxFilesPerTrigger", "1").parquet(s"$stage/feed")
     val q = stream.writeStream
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         foldVersionedState(spark, stateBase,
-          Reconcile.bucketDigestsOf(batch.toDF(), "o_orderkey",
-            Reconcile.rowDigest(col("o_orderkey"), col("o_totalprice")), 64,
-            "src_count", "src_digest"),
+          Reconcile.bucketDigestsOf(slice(batch.toDF()), "o_orderkey",
+            digest, buckets, "src_count", "src_digest"),
           batchId, Seq("src_count", "src_digest"))
         ()
       }
@@ -860,11 +830,22 @@ object CdcStream {
     q.awaitTermination()
     Reconcile.digestJoin(
       latestVersionedState(spark, stateBase),
-      Reconcile.bucketDigestsOf(Reconcile.driftedTarget(spark, dir), "o_orderkey",
-        Reconcile.rowDigest(col("o_orderkey"), col("o_totalprice")), 64,
-        "tgt_count", "tgt_digest"))
+      Reconcile.bucketDigestsOf(slice(Reconcile.driftedTarget(spark, dir)),
+        "o_orderkey", digest, buckets, "tgt_count", "tgt_digest"))
       .orderBy(col("bucket"))
   }
+
+  /** stream_recon_digest — the reconciliation digest maintained
+    * INCREMENTALLY under streaming ingest (recon_incremental's
+    * foreachBatch twin): [[streamDigestFold]] over every row into 64
+    * buckets. Per-batch cost is ∝ the batch's rows — the table is never
+    * re-scanned — because the row digest is an order-independent
+    * additive sum, the same additivity recon_merkle's ladder exploits:
+    * digest(all rows) = Σ digest(batch). recon_hash_bucket IS the
+    * oracle: the incrementally maintained digest must equal the
+    * full-table batch compare bit-for-bit. */
+  def streamReconDigest(spark: SparkSession, dir: String): DataFrame =
+    streamDigestFold(spark, dir, identity, 64)
 
   /** stream_recon_incremental — recon_incremental maintained under
     * streaming ingest: the watermark ("key deciles 0-7 were verified
@@ -882,41 +863,15 @@ object CdcStream {
     * the "daily verify proportional to the day's churn" contract of
     * the batch op, now paid as the churn ARRIVES.
     *
-    * Oracle ≡ batch recon_incremental (Reconcile.scala:201): after
+    * Oracle ≡ batch recon_incremental (Reconcile.reconIncremental): after
     * replay the folded slice digests join the target's recent digests
     * into the identical 16-bucket compare, bit-for-bit. */
   def streamReconIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.cdc.Reconcile
-    val src = graft.core.Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"))
     // Verified watermark from the ledger: one scalar, captured once.
-    val mxKey = src.agg(max(col("o_orderkey"))).collect()(0).getLong(0)
-    def recent(df: DataFrame) =
-      df.filter(floor(col("o_orderkey") * 10 / lit(mxKey + 1)) >= 8)
-    val digest = Reconcile.rowDigest(col("o_orderkey"), col("o_totalprice"))
-    val stage = scratchDir("graft-recon-inc-stream")
-    // hash-repartition, not round-robin — see streamReconDigest's note
-    src.repartition(4, col("o_orderkey")).write.mode("overwrite")
-      .parquet(s"$stage/feed")
-    val stateBase = scratchDir("graft-recon-inc-state").toString
-    val stream = spark.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$stage/feed")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldVersionedState(spark, stateBase,
-          Reconcile.bucketDigestsOf(recent(batch.toDF()), "o_orderkey",
-            digest, 16, "src_count", "src_digest"),
-          batchId, Seq("src_count", "src_digest"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    Reconcile.digestJoin(
-      latestVersionedState(spark, stateBase),
-      Reconcile.bucketDigestsOf(recent(Reconcile.driftedTarget(spark, dir)),
-        "o_orderkey", digest, 16, "tgt_count", "tgt_digest"))
-      .orderBy(col("bucket"))
+    val mxKey = graft.core.Tables.load(spark, dir, "orders")
+      .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
+    streamDigestFold(spark, dir,
+      _.filter(floor(col("o_orderkey") * 10 / lit(mxKey + 1)) >= 8), 16)
   }
 
   /** Per-purchase attribution emitted by the stateful stream. */
@@ -941,11 +896,9 @@ object CdcStream {
     * marketing-attribution feed), non-purchase events only update the
     * per-user (first_code, last_code) pair. Touch codes are the same
     * `event_id*8 + channel` longs as the batch op, so min/max ARE
-    * first/last. State is two longs per user — O(live users), far
-    * smaller than applyLatest's payload state. Events sort by event_id
-    * within each micro-batch (the log order); across batches the
-    * offset-ordered source delivers segments in order, the same
-    * discipline as the CDC apply.
+    * first/last. State is two longs per user — O(live users). Events
+    * sort by event_id within each micro-batch (the log order); across
+    * batches the offset-ordered source delivers segments in order.
     *
     * Order contract (StreamingSpec pins both sides): disorder WITHIN a
     * micro-batch is fully repaired by the sort; a touch that crosses a
@@ -1224,8 +1177,8 @@ object CdcStream {
     * hash-rank sample exactly (the oracle): a live crawl can keep a
     * statistically fixed per-source eyeball set without ever re-scanning.
     * Each micro-batch emits a key's current sample with a version
-    * counter; the Update fold keeps the max version (idempotent under
-    * retries, the stream_cdc_apply discipline). */
+    * counter; the Update fold keeps each key's max-version emission
+    * (idempotent under retries). */
   def streamSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     def transform(docs: DataFrame): DataFrame = {

@@ -8,31 +8,6 @@ import graft.cdc.CdcOps
 
 class StreamingSpec extends SparkSpec {
 
-  test("applyLatest over MemoryStream: per-key last-writer-wins across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[ChangeEvent]
-    val q = CdcStream.applyLatest(spark, input.toDF())
-      .writeStream.format("memory").queryName("t_apply")
-      .outputMode(OutputMode.Update).start()
-    // batch 1: key 1 insert + update; key 2 insert
-    input.addData(ChangeEvent(1, 1, "I", 1.0, 0), ChangeEvent(3, 1, "U", 3.0, 2),
-      ChangeEvent(2, 2, "I", 2.0, 1))
-    q.processAllAvailable()
-    // batch 2: key 2 delete; key 1 stale event (lower offset — must not win)
-    input.addData(ChangeEvent(5, 2, "D", 0.0, 4), ChangeEvent(0, 1, "U", 9.0, 0))
-    q.processAllAvailable()
-    q.stop()
-    val latest = spark.table("t_apply")
-      .groupBy("user_id")
-      .agg(max_by(struct(col("last_event_id"), col("last_op"), col("last_value")),
-        col("last_event_id")).as("s"))
-      .select(col("user_id"), col("s.last_event_id"), col("s.last_op"), col("s.last_value"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2), r.getDouble(3)))).toMap
-    assert(latest(1L) === ((3L, "U", 3.0)))  // stale offset-0 event ignored
-    assert(latest(2L) === ((5L, "D", 0.0)))  // tombstone emitted
-  }
-
   test("attributeStream over MemoryStream: touch state carries across batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -138,6 +113,15 @@ class StreamingSpec extends SparkSpec {
       .select("user_id", "last_event_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed === batch)
+    // every column, tombstones included, equals the batch fold
+    val full = CdcStream.streamCdcApply(spark, sf)
+      .select("user_id", "last_event_id", "last_op", "last_value")
+    val expected = CdcOps.latestStateOf(
+      CdcStream.toChangeEvents(graft.core.Tables.events(spark, sf)
+        .withColumn("ts", expr("unix_micros(ts) * 1000"))),
+      "user_id", "event_id", Seq("op", "value"))
+    assert(full.exceptAll(expected).count() === 0)
+    assert(expected.exceptAll(full).count() === 0)
   }
 
   test("stream_sessionize replay matches batch q12 sessionization") {
@@ -215,6 +199,44 @@ class StreamingSpec extends SparkSpec {
     val again = CdcStream.streamApplyToLake(spark, sf, out)
       .select(col("user_id"), col("last_event_id"))
     assert(again.exceptAll(batch).count() === 0 && batch.exceptAll(again).count() === 0)
+  }
+
+  test("streamApplyToLake: a directory events table streams every part file") {
+    val sfDir = java.nio.file.Files.createTempDirectory("graft-dir-sf").toString
+    spark.read.parquet(s"$sf/events.parquet").repartition(2)
+      .write.parquet(s"$sfDir/events.parquet")
+    val out = java.nio.file.Files.createTempDirectory("graft-dir-lake").toString + "/snap"
+    val lake = CdcStream.streamApplyToLake(spark, sfDir, out)
+      .select(col("user_id"), col("last_event_id"))
+    val batch = CdcOps.applyUpsertDelete(spark, sf)
+      .select(col("user_id"), col("last_event_id"))
+    assert(lake.exceptAll(batch).count() === 0)
+    assert(batch.exceptAll(lake).count() === 0)
+  }
+
+  test("streamApplyToLakeOf: per-key last-writer-wins across micro-batches") {
+    import spark.implicits._
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val lake = tmp("graft-lww-lake") + "/lake"
+    // one feed directory per call: each call drains exactly one micro-batch
+    def applyBatch(events: ChangeEvent*): Unit = {
+      val feed = tmp("graft-lww-feed") + "/f"
+      events.toDF().coalesce(1).write.parquet(feed)
+      CdcStream.streamApplyToLakeOf(spark,
+        spark.readStream.schema(events.toDF().schema).parquet(feed), lake)
+      ()
+    }
+    // batch 1: key 1 insert + update; key 2 insert
+    applyBatch(ChangeEvent(1, 1, "I", 1.0, 0), ChangeEvent(3, 1, "U", 3.0, 2),
+      ChangeEvent(2, 2, "I", 2.0, 1))
+    // batch 2: key 2 delete; key 1 stale event (lower offset — must not win)
+    applyBatch(ChangeEvent(5, 2, "D", 0.0, 4), ChangeEvent(0, 1, "U", 9.0, 0))
+    val latest = spark.read.parquet(lake)
+      .select("user_id", "last_event_id", "last_op", "last_value")
+      .as[(Long, Long, String, Double)].collect()
+      .map { case (k, e, op, v) => k -> ((e, op, v)) }.toMap
+    assert(latest(1L) === ((3L, "U", 3.0)))  // stale offset-0 event ignored
+    assert(latest(2L) === ((5L, "D", 0.0)))  // tombstone kept in the lake
   }
 
   test("streamApplyToLakeOf: tombstones delete lone keys, survive stale updates, seed a fresh lake") {
