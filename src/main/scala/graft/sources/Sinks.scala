@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions._
   * applying the change stream to the target DB).
   *
   * Without a database in this environment, the idempotent-apply shape
-  * is expressed against the lake: the latest-state snapshot is written
-  * as parquet partitioned by a stable key bucket, so (a) re-running the
+  * is expressed against the lake: a latest-state snapshot is written as
+  * parquet partitioned by a stable key bucket, so (a) re-running a batch
   * apply overwrites only the partitions it recomputes (dynamic
   * partition overwrite = idempotent retries), and (b) a downstream
-  * reconciliation read of one bucket touches one directory —
-  * partition pruning does the work of an index. */
+  * reconciliation read of one bucket touches one directory (partition
+  * pruning as an index). CdcStream's lake writes only fresh versions. */
 object Sinks {
 
   /** Write a keyed snapshot partitioned by hash-bucket of the key.

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -42,13 +43,13 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   *
   * CDC apply has one mechanism: `streamApplyToLakeOf`, the Debezium
   * sink. It is a stateless foreachBatch whose target holds the state.
-  * Each micro-batch folds its raw events with the lake rows of the
-  * buckets it touches (last-writer-wins by offset,
-  * [[graft.cdc.CdcOps.latestStateOf]], the fold batch `applyLogOf`
-  * runs) and overwrites those buckets. Lake rows carry `last_op`, and
-  * deleted keys stay as tombstones (`last_op = 'D'`); direct readers of
-  * the lake filter `last_op <> 'D'`. stream_cdc_apply replays the
-  * events table into a scratch lake and returns it tombstones included.
+  * Each micro-batch folds its raw events with the lake's newest version
+  * ([[graft.cdc.CdcOps.latestStateOf]], batch `applyLogOf`'s fold) and
+  * publishes the next whole version through [[publishVersion]], as the
+  * recon digest state does. Deleted keys stay as tombstones
+  * (`last_op = 'D'`); [[readLake]] returns them, live readers filter
+  * `last_op <> 'D'`. stream_cdc_apply replays the events table into a
+  * scratch lake and returns it tombstones included.
   *
   * `windowCounts` is the operational monitor: watermarked sliding-window
   * op counts (the Kafka-topic-monitoring shape). The other `stream_*`
@@ -342,10 +343,9 @@ object CdcStream {
     * rows). The lake holds one row per key by construction.
     * Oracle-checked: the streamed lake must equal the batch arg-max. */
   def streamCdcApply(spark: SparkSession, dir: String): DataFrame = {
-    // a path that does not exist yet: the sink reads an existing one as a lake
-    val lake = scratchDir("graft-cdc-apply").resolve("lake").toString
+    val lake = scratchDir("graft-cdc-apply").toString
     streamApplyToLake(spark, dir, lake)
-    spark.read.parquet(lake).drop("_bucket").orderBy(col("user_id"))
+    readLake(spark, lake).orderBy(col("user_id"))
   }
 
   val streamCdcApplySql: String =
@@ -634,17 +634,9 @@ object CdcStream {
       |GROUP BY 1, 2 ORDER BY n_name, op""".stripMargin
 
   /** End-to-end streaming pipeline: change events → foreachBatch →
-    * idempotent bucket-partitioned lake snapshot (Sinks.writeSnapshot).
-    * The lake itself is the apply state — no stateful operator, no state
-    * store: each micro-batch unions its raw events with the lake rows of
-    * the buckets it touches, folds the union once per key with
-    * [[graft.cdc.CdcOps.latestStateOf]] (the same last-writer-wins
-    * `applyLogOf` runs in batch), and dynamic partition overwrite
-    * rewrites only those buckets. A retried micro-batch rewrites the same
-    * buckets to the same bytes (idempotent exactly-once sink semantics on
-    * top of at-least-once foreachBatch, the reference's jdbc upsert sink
-    * re-expressed on the lake). Returns the live snapshot read back from
-    * the lake. StreamingSpec asserts it equals the batch latest-state. */
+    * versioned bucket-partitioned lake; see [[streamApplyToLakeOf]].
+    * Returns the live snapshot read back from the lake. StreamingSpec
+    * asserts it equals the batch latest-state. */
   def streamApplyToLake(spark: SparkSession, dir: String, path: String,
                         buckets: Int = 16): DataFrame = {
     val (stream, _, _) = stageFeed(spark, dir, "events")
@@ -652,84 +644,99 @@ object CdcStream {
   }
 
   /** [[streamApplyToLake]] over ANY streaming change-event frame
-    * (event_id, user_id, op, value, ts_us — typed through [[ChangeEvent]])
-    * — the generic apply→lake path the end-to-end lifecycle test drives
-    * from a CSV feed stream. Draining is AvailableNow: each call applies
-    * everything currently readable and returns the resulting live
-    * snapshot; re-running after more input arrives is the reference's
-    * catch-up replication cycle (the LWW bucket fold makes reprocessing
-    * idempotent).
+    * (event_id, user_id, op, value, ts_us — typed through [[ChangeEvent]]).
+    * Draining is AvailableNow: each call applies everything currently
+    * readable and returns the live snapshot; re-running after more input
+    * arrives is the reference's catch-up replication cycle.
     *
-    * Lake rows are [[KeyState]]s (user_id, last_event_id, last_op,
-    * last_value) partitioned by `_bucket`, and a key whose latest op is a
-    * delete stays in the lake as a tombstone (`last_op = 'D'`) — exactly
-    * as a keyed state store would keep it. The tombstone is what makes
-    * the fold order-free: a feed file applied after a delete with a
-    * lower offset cannot resurrect the key, and a delete that empties a
-    * bucket still rewrites that bucket. Anyone reading `path` directly
-    * must therefore filter `last_op <> 'D'`; the returned frame already
-    * does. A live-only lake (no tombstones) is still valid input.
-    * Tombstone garbage collection is out of scope.
+    * The lake is the apply state; no state store. Each micro-batch, an
+    * empty one included, folds its raw events with the lake's newest
+    * version once per key (last-writer-wins,
+    * [[graft.cdc.CdcOps.latestStateOf]]) and publishes the fold as version
+    * newest + 1 ([[publishVersion]]): a whole lake of [[KeyState]]s
+    * partitioned by `_bucket` in `path/state_v<n>`. Batch ids restart at
+    * 0 without a checkpoint, so they are not version numbers. A retry
+    * re-folds the same events into an identical version (the reference's
+    * jdbc upsert sink as an idempotent lake sink). A `path` holding
+    * anything but versions fails the batch instead of being overwritten.
+    * Deleted keys stay as (never collected) tombstones, `last_op = 'D'`,
+    * so a stale update cannot resurrect them; the returned frame filters
+    * them and stays readable until two more versions are published.
     *
-    * `checkpoint` persists the source offsets across restarts (a
-    * restarted query resumes at the first uncommitted batch instead of
-    * reprocessing the feed); there is no operator state to persist.
-    * `onBatchApplied(batchId)` fires AFTER the bucket snapshot is written
-    * but BEFORE the micro-batch commits — a hook that throws there
-    * simulates the worst-case crash window (sink side-effect durable,
-    * offset not), which the idempotent bucket overwrite must absorb on
-    * retry. RecoverySpec kills a run mid-stream through this hook,
-    * restarts from the same checkpoint, and asserts the lake equals the
-    * uninterrupted run's. */
+    * `checkpoint` persists the source offsets. `onBatchApplied(batchId)`
+    * runs after the publish and before the offset commit: a hook that
+    * throws there is the worst-case crash window (RecoverySpec). */
   def streamApplyToLakeOf(spark: SparkSession, changeEvents: DataFrame,
                           path: String, buckets: Int = 16,
                           checkpoint: Option[String] = None,
                           onBatchApplied: Long => Unit = _ => ()): DataFrame = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = new Path(path)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val writer = changeEvents.as[ChangeEvent].writeStream
       .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
-        val events = batch.select(col("user_id").cast("long"), col("event_id").cast("long"),
-          col("op"), col("value").cast("double")).persist()
-        // a batch that throws must still release its cached input: every
-        // streaming retry would otherwise register another cache entry
-        try {
-          // buckets touched by this micro-batch: bounded by `buckets`, so the
-          // driver-side collect is O(buckets), never O(keys)
-          val bucketOf = pmod(xxhash64(col("user_id")), lit(buckets.toLong))
-          val touched = events.select(bucketOf.as("b")).distinct()
-            .collect().map(_.getLong(0))
-          // Existence is checked explicitly: a transient READ failure must
-          // fail the batch (streaming retries it), never be mistaken for
-          // "no snapshot yet" — that would overwrite touched buckets with
-          // only this batch's keys and silently drop the rest.
-          val log =
-            if (!fs.exists(hPath)) events
-            else events.unionByName(spark.read.parquet(path) // pruned to touched buckets
-              .filter(col("_bucket").isin(touched: _*))
-              .select(col("user_id"), col("last_event_id").as("event_id"),
-                col("last_op").as("op"), col("last_value").as("value")))
-          if (touched.nonEmpty)
-            graft.sources.Sinks.writeSnapshot(
-              graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
-              "user_id", path, buckets)
-        } finally events.unpersist()
+        val log = batch.select(col("user_id").cast("long"), col("event_id").cast("long"),
+            col("op"), col("value").cast("double"))
+          .unionByName(readLake(spark, path).select(col("user_id"),
+            col("last_event_id").as("event_id"), col("last_op").as("op"), col("last_value").as("value")))
+        publishVersion(fs, base, versions(fs, base).maxOption.fold(0L)(_ + 1))(tmp =>
+          graft.sources.Sinks.writeSnapshot(
+            graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
+            "user_id", tmp, buckets))
         onBatchApplied(batchId)
       }
     val q = checkpoint.fold(writer)(ck => writer.option("checkpointLocation", ck))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val lake =
-      if (fs.exists(hPath)) spark.read.parquet(path).drop("_bucket")
-      else spark.emptyDataset[KeyState].toDF()
-    lake.filter(col("last_op") =!= "D")
+    readLake(spark, path).filter(col("last_op") =!= "D")
   }
 
-  /** One fold step of the versioned-swap parquet state shared by
-    * stream_recon_digest / stream_recon_incremental: state_v(k) =
-    * per-bucket sum-merge of state_v(k-1) and `partial`, then
-    * garbage-collect state_v(k-2).
+  /** The CDC lake at `path` as [[KeyState]] rows, tombstones included:
+    * its newest version, read lazily (readable until two more versions
+    * are published), or an empty frame before the first one. */
+  def readLake(spark: SparkSession, path: String): DataFrame = {
+    val base = new Path(path)
+    val schema = org.apache.spark.sql.Encoders.product[KeyState].schema
+    versions(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base).maxOption
+      .fold(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))(n =>
+        spark.read.schema(schema).parquet(new Path(base, s"state_v$n").toString).drop("_bucket"))
+  }
+
+  private val Version = "(state|_tmp)_v(\\d+)".r
+
+  /** The n of every `state_v<n>` under `base` (none if it does not
+    * exist). Anything there but `state_v<n>` / `_tmp_v<n>` throws: such a
+    * path is not versioned state, and reading it as empty would
+    * overwrite it. */
+  private def versions(fs: FileSystem, base: Path): Seq[Long] =
+    (try fs.listStatus(base).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+      .flatMap(e => e.getPath.getName match {
+        case Version(kind, n) if e.isDirectory => Option.when(kind == "state")(n.toLong)
+        case _ => throw new IllegalStateException(s"$base is not a versioned lake: found ${e.getPath}")
+      })
+
+  /** Publish version `v` of the parquet state under `base` — the one way
+    * [[streamApplyToLakeOf]] and [[foldVersionedState]] keep state across
+    * micro-batches. `write` fills a fresh `_tmp_v<v>`, one rename makes it
+    * `state_v<v>`, and only then are the versions below v-1 deleted: a
+    * crash or failed rename at any step leaves v-1 whole for the retry
+    * (a dynamic-partition commit in place deletes each bucket before
+    * renaming its successor in). Only a retried digest batch finds an
+    * existing `state_v<v>`, which is replaced. */
+  private def publishVersion(fs: FileSystem, base: Path, v: Long)(write: String => Unit): Unit = {
+    val tmp = new Path(base, s"_tmp_v$v")
+    val dst = new Path(base, s"state_v$v")
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    fs.delete(dst, true)
+    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"could not rename $tmp to $dst")
+    versions(fs, base).filter(_ < v - 1).foreach(m => fs.delete(new Path(base, s"state_v$m"), true))
+  }
+
+  /** One fold step of the digest state of stream_recon_digest /
+    * stream_recon_incremental: state_v(k) = per-bucket sum-merge of
+    * state_v(k-1) and `partial`, published through [[publishVersion]]
+    * with k = batch id, since the fold re-reads its exact predecessor.
     *
     * Retry-idempotent under foreachBatch's at-least-once contract:
     * v(k) is a pure function of v(k-1) and the batch's rows, and only
@@ -737,19 +744,18 @@ object CdcStream {
     * offset log before batch k could start — is deleted. A retry of
     * batch k (crash anywhere after the fold, including after the GC
     * and a partial or complete v(k) write, before the offset commit)
-    * therefore always finds an intact v(k-1) and overwrites the
-    * identical v(k). Deleting v(k-1) inside batch k (the round-8
+    * therefore always finds an intact v(k-1) and replaces v(k) with an
+    * identical one. Deleting v(k-1) inside batch k (the round-8
     * formulation) left a crash window between the delete and the
     * commit in which the retry found no predecessor and silently
     * reset the accumulated digest to the batch's own partial —
-    * ReconRecoverySpec replays exactly that schedule. Live state is
-    * at most two versions × bucket-count rows (metadata-sized). */
+    * RecoverySpec's foldVersionedState case replays that schedule. Live
+    * state is at most two versions × bucket-count rows. */
   private[graft] def foldVersionedState(spark: SparkSession, stateBase: String,
       partial: DataFrame, batchId: Long, sumCols: Seq[String]): Unit = {
-    def statePath(v: Long) = s"$stateBase/state_v$v"
-    val fs = new org.apache.hadoop.fs.Path(stateBase)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = new org.apache.hadoop.fs.Path(statePath(batchId - 1))
+    val base = new Path(stateBase)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prev = new Path(base, s"state_v${batchId - 1}")
     val merged =
       if (!fs.exists(prev)) partial
       else {
@@ -762,22 +768,16 @@ object CdcStream {
     // right layout at any scale (guide §6 small-files point) — without
     // the coalesce each 16-64-row version lands as one part file per
     // shuffle partition, paying dozens of opens per micro-batch
-    merged.coalesce(1).write.mode("overwrite").parquet(statePath(batchId))
-    val gc = new org.apache.hadoop.fs.Path(statePath(batchId - 2))
-    if (fs.exists(gc)) fs.delete(gc, true)
+    publishVersion(fs, base, batchId)(merged.coalesce(1).write.parquet(_))
   }
 
   /** The newest state_v* table under `stateBase` (see
     * [[foldVersionedState]]). */
   private[graft] def latestVersionedState(spark: SparkSession, stateBase: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateBase)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(new org.apache.hadoop.fs.Path(stateBase))
-      .map(_.getPath.toString).filter(_.contains("state_v"))
-    require(versions.nonEmpty,
-      s"no state_v* under $stateBase — the stream processed zero batches")
-    spark.read.parquet(
-      versions.maxBy(p => p.substring(p.lastIndexOf("_v") + 2).toLong))
+    val base = new Path(stateBase)
+    val newest = versions(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base)
+    require(newest.nonEmpty, s"no state_v* under $stateBase — the stream processed zero batches")
+    spark.read.parquet(new Path(base, s"state_v${newest.max}").toString)
   }
 
   /** Streaming digest fold shared by stream_recon_digest and
@@ -788,13 +788,13 @@ object CdcStream {
     * table. After replay the final state joins the `slice` of the
     * drifted target's digests into recon_hash_bucket's output shape.
     *
-    * State is versioned-swap parquet (read v(b-1), write v(b),
+    * State is versioned parquet (read v(b-1), publish v(b),
     * garbage-collect v(b-2) — see [[foldVersionedState]] for the
     * retry-window proof): a retried micro-batch re-reads its intact
-    * predecessor and rewrites the same successor — idempotent under
-    * foreachBatch's at-least-once contract, the same discipline as
-    * streamApplyToLake's bucket overwrite, and never reads the path
-    * it is writing. State rows ∝ buckets (metadata-sized), shuffled
+    * predecessor and publishes the same successor — idempotent under
+    * foreachBatch's at-least-once contract, the same [[publishVersion]]
+    * the CDC lake commits through, and never reads the path it is
+    * writing. State rows ∝ buckets (metadata-sized), shuffled
     * once per batch with map-side combine. */
   private def streamDigestFold(spark: SparkSession, dir: String,
                                slice: DataFrame => DataFrame,

@@ -61,7 +61,7 @@ class LifecycleSpec extends SparkSpec {
     }
 
     def lakeState(): DataFrame =
-      spark.read.parquet(lakePath).drop("_bucket")
+      CdcStream.readLake(spark, lakePath)
         .select(col("user_id"), col("last_value").as("amount"))
 
     def ladderDiff(): Array[org.apache.spark.sql.Row] =

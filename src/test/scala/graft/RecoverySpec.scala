@@ -11,13 +11,15 @@ import graft.streaming.CdcStream
   * specs prove the failure path too.
   *
   * 1. streamApplyToLake: a run is KILLED mid-stream in the worst-case
-  *    window (bucket snapshot written, micro-batch offset NOT
+  *    window (lake version published, micro-batch offset NOT
   *    committed), restarted from the same checkpoint, and must (a)
   *    resume instead of reprocessing committed batches, and (b)
   *    converge to the bit-identical lake of an uninterrupted run —
   *    exactly-once semantics built from at-least-once foreachBatch +
-  *    idempotent bucket overwrite + durable source offsets. The lake
-  *    is the only apply state: the checkpoint holds no state store.
+  *    an idempotent versioned publish + durable source offsets. The
+  *    lake is the only apply state: the checkpoint holds no state
+  *    store. A rename that fails inside the lake commit must lose no
+  *    key either, and the restart must converge the same way.
   *
   * 2. foldVersionedState: the versioned-swap digest state replayed
   *    under the crash-retry schedule that broke the round-8
@@ -115,6 +117,47 @@ class RecoverySpec extends SparkSpec {
     // offsets and commits only
     assert(!new java.io.File(ckB, "state").exists(),
       "streamApplyToLakeOf must not keep a state store in its checkpoint")
+  }
+
+  test("streamApplyToLakeOf: a failed rename inside the lake commit loses no key, restart == uninterrupted run") {
+    val flat = writeFeed()
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val files = new java.io.File(flat).list().filter(_.endsWith(".parquet")).sorted.toSeq
+    val feed = tmp("graft-fault-feed")
+    def stage(names: Seq[String]): Unit = names.foreach(n =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(flat, n), java.nio.file.Paths.get(feed, n)))
+    def keys(df: DataFrame): Set[Long] = df.select("user_id").collect().map(_.getLong(0)).toSet
+
+    FaultyRenameFs.registered(spark.sparkContext.hadoopConfiguration) {
+      val lakeDir = tmp("graft-fault-lake") + "/lake"
+      val lake = "faulty://" + lakeDir
+      val ck = tmp("graft-fault-ck")
+      // batch 0 alone, committed
+      stage(files.take(1))
+      CdcStream.streamApplyToLakeOf(spark, feedStream(feed), lake, 16, Some(ck))
+      val batch0Keys = keys(spark.read.parquet(s"$flat/${files.head}"))
+
+      // batch 1 fails at the first rename into the lake root
+      stage(files.drop(1))
+      FaultyRenameFs.root.set(lakeDir)
+      FaultyRenameFs.armed.set(true)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        CdcStream.streamApplyToLakeOf(spark, feedStream(feed), lake, 16, Some(ck))
+      }
+      assert(!FaultyRenameFs.armed.get(), "the injected rename failure must have fired")
+      val kept = keys(CdcStream.readLake(spark, lake))
+      assert(batch0Keys.subsetOf(kept),
+        s"the failed commit lost batch-0 keys ${(batch0Keys -- kept).toSeq.sorted}")
+
+      // restart from the checkpoint == an uninterrupted run
+      val recovered = CdcStream.streamApplyToLakeOf(spark, feedStream(feed), lake, 16, Some(ck))
+      val cleanLake = tmp("graft-fault-clean") + "/lake"
+      val clean = CdcStream.streamApplyToLakeOf(spark, feedStream(flat), cleanLake, 16,
+        Some(tmp("graft-fault-ck-clean")))
+      assert(lakeRows(recovered) === lakeRows(clean))
+      assert(lakeRows(CdcStream.readLake(spark, lake)) === lakeRows(CdcStream.readLake(spark, cleanLake)),
+        "the recovered lake, tombstones included, must equal the uninterrupted run's")
+    }
   }
 
   test("foldVersionedState: crash-retry schedule keeps the accumulated digest exact, GC stays bounded") {

@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
       ChangeEvent(2, 2, "I", 2.0, 1))
     // batch 2: key 2 delete; key 1 stale event (lower offset — must not win)
     applyBatch(ChangeEvent(5, 2, "D", 0.0, 4), ChangeEvent(0, 1, "U", 9.0, 0))
-    val latest = spark.read.parquet(lake)
+    val latest = CdcStream.readLake(spark, lake)
       .select("user_id", "last_event_id", "last_op", "last_value")
       .as[(Long, Long, String, Double)].collect()
       .map { case (k, e, op, v) => k -> ((e, op, v)) }.toMap
@@ -272,7 +272,7 @@ class StreamingSpec extends SparkSpec {
     // must not resurrect the key
     assert(applyTo(lake, ChangeEvent(5, 1, "U", 5.0, 5)) === Set((2L, 2L, "I"), (3L, 3L, "I")))
     // the lake keeps the tombstone; direct readers filter it
-    assert(spark.read.parquet(lake).filter(col("user_id") === 1L)
+    assert(CdcStream.readLake(spark, lake).filter(col("user_id") === 1L)
       .select("last_event_id", "last_op").as[(Long, String)].collect().toSeq === Seq((10L, "D")))
   }
 
@@ -290,6 +290,24 @@ class StreamingSpec extends SparkSpec {
       CdcStream.streamApplyToLakeOf(spark, input.toDF(), lake.toString)
     }
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("streamApplyToLakeOf: refuses a path that is not a versioned lake") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // a lake of bare _bucket= directories, as an in-place writer leaves it
+    val lake = java.nio.file.Files.createTempDirectory("graft-bare-lake").toString + "/lake"
+    graft.sources.Sinks.writeSnapshot(
+      Seq(graft.streaming.KeyState(1, 1, "I", 1.0)).toDF(), "user_id", lake, 16)
+    val input = MemoryStream[ChangeEvent]
+    input.addData(ChangeEvent(2, 2, "I", 2.0, 2))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CdcStream.streamApplyToLakeOf(spark, input.toDF(), lake)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(lake)), "the failure must name the path")
+    // read neither as empty nor overwritten
+    assert(spark.read.parquet(lake).select("user_id").as[Long].collect().toSeq === Seq(1L))
   }
 
   test("stream_scd2: replayed live history equals the batch SCD2 bit-for-bit") {
