@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 
 /** Sinks (reference: jdbc-sink-connector-config.json — upsert-mode sink
@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * apply overwrites only the partitions it recomputes (dynamic
   * partition overwrite = idempotent retries), and (b) a downstream
   * reconciliation read of one bucket touches one directory (partition
-  * pruning as an index). CdcStream's lake writes only fresh versions. */
+  * pruning as an index). CdcStream's lake writes each version into a
+  * fresh directory through [[bucketedWriter]], with no overwrite. */
 object Sinks {
 
   /** Write a keyed snapshot partitioned by hash-bucket of the key.
@@ -20,14 +21,22 @@ object Sinks {
     * (at 100 TB: thousands). */
   def writeSnapshot(snapshot: DataFrame, keyCol: String, path: String,
                     buckets: Int): Unit =
+    bucketedWriter(snapshot, keyCol, buckets)
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .parquet(path)
+
+  /** `snapshot` with `_bucket = pmod(xxhash64(key), buckets)`, one task
+    * per bucket, as a writer partitioned by `_bucket`. A write into a
+    * fresh directory needs nothing more; [[writeSnapshot]] adds the
+    * dynamic overwrite that replaces existing buckets. */
+  private[graft] def bucketedWriter(snapshot: DataFrame, keyCol: String,
+                                    buckets: Int): DataFrameWriter[Row] =
     snapshot
       .withColumn("_bucket", pmod(xxhash64(col(keyCol)), lit(buckets.toLong)))
       .repartition(col("_bucket"))
       .write
       .partitionBy("_bucket")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(path)
 
   /** Write a catalog table bucketed + sorted on the join key — the
     * co-located-join layout: two tables bucketed the same way join with

@@ -56,10 +56,11 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   * operators keep keyed GroupState for their own per-key aggregates.
   *
   * Tests drive the lake sink and `windowCounts` through MemoryStream
-  * and feed directories (StreamingSpec); the SparkEntry entries replay
-  * the events parquet through a file source with Trigger.AvailableNow —
-  * same code path batch would take at the real 100 TB deployment's
-  * backfill.
+  * and feed directories (StreamingSpec). The SparkEntry `stream_*`
+  * operators stream a table's parquet through a file source with
+  * Trigger.AvailableNow. All but the lake and the recon digests run
+  * through [[replay]], whose one sink publishes each micro-batch's
+  * output as version <batch id> through the same [[publishVersion]].
   */
 object CdcStream {
 
@@ -69,22 +70,14 @@ object CdcStream {
         .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
     } catch { case _: Throwable => () }
 
-  /** File-sink dirs from prior [[replay]] calls, reclaimed lazily (next
-    * replay / JVM exit) — see the sink-lifetime note inside replay. */
-  private val staleSinks =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[java.nio.file.Path]())
-
   /** Per-call scratch whose contents may be LAZILY scanned after the
-    * call returns (versioned parquet state, symlink feed stages) — in-
-    * call deletion would break the returned frame, but leaving them
-    * accumulates /tmp residue across sessions (measured: 164 stale
-    * recon-state dirs before round 13). Reclaimed at JVM exit. */
+    * call returns (versioned parquet state, replay output, symlink feed
+    * stages) — in-call deletion would break the returned frame, but
+    * leaving them accumulates /tmp residue across sessions (measured:
+    * 164 stale recon-state dirs before round 13). Reclaimed at JVM exit. */
   private val exitScratch =
     java.util.Collections.synchronizedList(new java.util.ArrayList[java.nio.file.Path]())
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    staleSinks.forEach(rmTreeQuietly(_))
-    exitScratch.forEach(rmTreeQuietly(_))
-  }))
+  Runtime.getRuntime.addShutdownHook(new Thread(() => exitScratch.forEach(rmTreeQuietly(_))))
 
   private def scratchDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
@@ -178,15 +171,18 @@ object CdcStream {
     (spark.readStream.schema(schema).parquet(stage.toString), stage, stagedBytes)
   }
 
-  /** Replay the events parquet through a real file stream source and run
-    * `transform` to completion (Trigger.AvailableNow), returning the sink
-    * table. */
-  private def replay(spark: SparkSession, dir: String, name: String,
+  /** Replay `table` through a real file stream source and run `transform`
+    * to completion (Trigger.AvailableNow). Each micro-batch publishes its
+    * output as version <batch id> of a scratch sink through
+    * [[publishVersion]], so a retried batch replaces its own output and
+    * every output mode is exactly-once. Returns the newest version in
+    * Complete mode, every version in Append and Update mode, and an empty
+    * frame of the output schema when no batch ran. */
+  private def replay(spark: SparkSession, dir: String,
                      outputMode: OutputMode,
                      transform: DataFrame => DataFrame,
                      normalize: Boolean = true,
                      table: String = "events"): DataFrame = {
-    spark.catalog.dropTempView(name) // allow re-running in one session
     val (stream, stage, stagedBytes) = stageFeed(spark, dir, table)
     // A stateful query instantiates one state store per shuffle partition
     // per stateful operator, and the right parallelism is a function of
@@ -245,43 +241,24 @@ object CdcStream {
       "/dev/shm" else System.getProperty("java.io.tmpdir")
     val ck = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(ckBase), "graft-ck")
-    // in-call rmTree below covers the success path; the exit hook
+    // in-call rmTreeQuietly below covers the success path; the exit hook
     // covers a replay that THROWS (on /dev/shm the leak would be RAM)
     exitScratch.add(ck)
-    // Sink choice is a scale decision, not a convenience one. The memory
-    // sink pins every emitted row in the driver AS THE QUERY RUNS, and its
-    // per-batch collect is subject to spark.driver.maxResultSize — fine
-    // for Complete-mode results, whose size is the (bounded) aggregate
-    // state, fatal whenever emission volume grows with the DATA:
-    // Append-mode pair/event listers (measured: stream_near_dedup's
-    // candidate stream exhausts a 24g heap at sf10 mid-replay) and
-    // Update-mode change folds alike (measured: stream_scd2's history
-    // emissions, ∝ change volume not live keys, blow the 1 GiB
-    // maxResultSize in one sf10 micro-batch). Both therefore land in a
-    // parquet file sink — exactly where a production stream writes them —
-    // and are read back executor-side; only Complete mode keeps the
-    // memory sink. Append uses the native FileStreamSink (exactly-once
-    // via its metadata log); Update, which FileStreamSink rejects, goes
-    // through foreachBatch append — at-least-once under batch RETRY in
-    // general, but a replay is a single fresh-checkpoint AvailableNow
-    // pass, and every Update consumer in this file folds the emission
-    // union idempotently (per-key min/max/max_by), so a duplicate batch
-    // could not change a result even if one occurred.
+    // Output goes to disk and is read back on the executors, so neither
+    // the driver heap nor spark.driver.maxResultSize bounds it (measured
+    // at sf10: stream_near_dedup's candidate pairs exhaust a 24g heap,
+    // stream_scd2's history overflows a 1 GiB maxResultSize).
     val transformed = transform(if (normalize) toChangeEvents(stream) else stream)
-    val fileSink = outputMode != OutputMode.Complete
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-sink")
+    val sink = new Path(scratchDir("graft-sink").toString)
+    val fs = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      val w = transformed.writeStream.outputMode(outputMode)
+      val q = transformed.writeStream.outputMode(outputMode)
         .option("checkpointLocation", ck.toString)
         .trigger(Trigger.AvailableNow())
-      val q =
-        if (outputMode == OutputMode.Append)
-          w.format("parquet").option("path", sinkDir.toString).start()
-        else if (fileSink)
-          w.foreachBatch { (batch: Dataset[Row], _: Long) =>
-            batch.write.mode("append").parquet(sinkDir.toString)
-          }.start()
-        else w.format("memory").queryName(name).start()
+        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+          publishVersion(fs, sink, id)(batch.write.parquet(_))
+        }
+        .start()
       q.awaitTermination()
       // Guard on the auto in-memory state-store choice (it trusts staged
       // bytes as a STATE proxy): assert the realized keyed state actually
@@ -312,29 +289,13 @@ object CdcStream {
           "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
       }
     }
-    def rmTree(p: java.nio.file.Path): Unit = rmTreeQuietly(p)
-    rmTree(ck)
-    rmTree(stage)
-    if (fileSink) {
-      // Hand back the file-sink output as a lazy scan — re-materializing
-      // an unbounded pair list through the block manager would pay the
-      // write twice. The dir outlives this call (the caller still scans
-      // it); it is reclaimed at the NEXT replay in this session, by which
-      // point every caller (bench attempt, verify dump, spec assertion)
-      // has consumed its result, and at JVM exit as a backstop.
-      staleSinks.forEach(rmTree); staleSinks.clear()
-      staleSinks.add(sinkDir)
-      spark.read.schema(transformed.schema).parquet(sinkDir.toString)
-    } else {
-      // Bounded aggregate state: detach from the memory sink so the
-      // driver-pinned rows are droppable, then unregister the sink table
-      // (they otherwise accumulate across a multi-query bench run —
-      // measured as a cascading driver OOM at sf10).
-      val out = spark.table(name).localCheckpoint(true)
-      spark.catalog.dropTempView(name)
-      rmTree(sinkDir)
-      out
-    }
+    rmTreeQuietly(ck)
+    rmTreeQuietly(stage)
+    val written = versions(fs, sink)
+    val read = if (outputMode == OutputMode.Complete) written.maxOption.toSeq else written
+    if (read.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), transformed.schema)
+    else spark.read.schema(transformed.schema)
+      .parquet(read.map(v => new Path(sink, s"state_v$v").toString): _*)
   }
 
   /** stream_cdc_apply — the latest state per key after replaying the
@@ -392,8 +353,7 @@ object CdcStream {
     * Oracle: CdcOps.keyChurnSql — the stateful stream's final counters
     * must equal the batch group-by bit-for-bit. */
   def streamKeyChurn(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "stream_key_churn_sink", OutputMode.Update,
-      df => churnCounters(spark, df))
+    replay(spark, dir, OutputMode.Update, df => churnCounters(spark, df))
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_changes"), col("n_inserts"), col("n_updates"),
         col("n_deletes"), col("first_offset"), col("last_offset")),
@@ -415,7 +375,7 @@ object CdcStream {
     * aligns windows to the epoch, so each event lands in the two 12-hour
     * slides covering it — reproduced with integer epoch-µs arithmetic. */
   def streamWindowAgg(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_window_agg_sink", OutputMode.Complete, windowCounts)
+    replay(spark, dir, OutputMode.Complete, windowCounts)
       .orderBy(col("win_start"), col("op"))
 
   val streamWindowAggSql: String =
@@ -439,7 +399,7 @@ object CdcStream {
     * the batch mirror breaks on gap >= 30 min (vs q12's > 30 min) and
     * ends sessions at last_ts + gap. */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_sessionize_sink", OutputMode.Complete, sessionCounts)
+    replay(spark, dir, OutputMode.Complete, sessionCounts)
       .orderBy(col("user_id"), col("session_start"))
 
   val streamSessionizeSql: String =
@@ -482,8 +442,7 @@ object CdcStream {
     * back to the original log, so per-op counts must equal the plain
     * events table's. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_dedup_sink", OutputMode.Append,
-      dedupDeliveries)
+    replay(spark, dir, OutputMode.Append, dedupDeliveries)
       .groupBy(col("op"))
       .agg(count(lit(1)).as("n_events"),
            countDistinct(col("user_id")).as("n_keys"))
@@ -547,7 +506,7 @@ object CdcStream {
     * knn_brute verbatim — the stream must reproduce the batch
     * retrieval bit-for-bit. */
   def streamKnn(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_knn_sink", OutputMode.Append,
+    replay(spark, dir, OutputMode.Append,
       graft.operators.Similarity.knnServe(spark, dir),
       normalize = false, table = "embeddings")
       .orderBy(col("query_id"), col("knn_rank"))
@@ -558,7 +517,7 @@ object CdcStream {
     * whole corpus per batch — the serving shape that survives a 100 TB
     * corpus. Oracle-checked against the batch knn_lsh SQL verbatim. */
   def streamKnnLsh(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_knn_lsh_sink", OutputMode.Append,
+    replay(spark, dir, OutputMode.Append,
       graft.operators.Similarity.knnLshServe(spark, dir),
       normalize = false, table = "embeddings")
       .orderBy(col("query_id"), col("knn_rank"))
@@ -571,7 +530,7 @@ object CdcStream {
     * serves from. Oracle-checked against the batch knn_ivfpq SQL
     * verbatim. */
   def streamKnnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_knn_ivfpq_sink", OutputMode.Append,
+    replay(spark, dir, OutputMode.Append,
       graft.operators.Similarity.knnIvfPqServe(spark, dir),
       normalize = false, table = "embeddings")
       .orderBy(col("query_id"), col("knn_rank"))
@@ -582,11 +541,11 @@ object CdcStream {
     * replay (Dedup.streamNearDedupSql); at gate SFs no bucket exceeds
     * the cap, so this equals dedup_minhash's pair set exactly. */
   def streamNearDedup(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_near_dedup_sink", OutputMode.Append,
+    replay(spark, dir, OutputMode.Append,
       nearDupBandHits(spark), normalize = false, table = "documents")
       .groupBy(col("doc_a"), col("doc_b"))
-      // one emission per shared band (see BandPairHit), and the file
-      // sink is exactly-once, so count ≡ countDistinct(band) — a
+      // one emission per shared band (see BandPairHit), and each batch
+      // id publishes once, so count ≡ countDistinct(band) — a
       // single-shuffle partial-agg count instead of a distinct agg
       .agg(count(lit(1)).as("n_shared_bands"))
       .filter(col("n_shared_bands") >= 2)
@@ -619,8 +578,7 @@ object CdcStream {
     * stream after full replay (Complete mode). Oracle-checked: the
     * stateless stream-static join must equal the batch join. */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_enrich_sink", OutputMode.Complete,
-      enrichCounts(spark, dir))
+    replay(spark, dir, OutputMode.Complete, enrichCounts(spark, dir))
       .orderBy(col("n_name"), col("op"))
 
   val streamEnrichSql: String =
@@ -679,10 +637,11 @@ object CdcStream {
             col("op"), col("value").cast("double"))
           .unionByName(readLake(spark, path).select(col("user_id"),
             col("last_event_id").as("event_id"), col("last_op").as("op"), col("last_value").as("value")))
-        publishVersion(fs, base, versions(fs, base).maxOption.fold(0L)(_ + 1))(tmp =>
-          graft.sources.Sinks.writeSnapshot(
-            graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
-            "user_id", tmp, buckets))
+        val v = versions(fs, base).maxOption.fold(0L)(_ + 1)
+        publishVersion(fs, base, v)(graft.sources.Sinks.bucketedWriter(
+          graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
+          "user_id", buckets).parquet(_))
+        dropVersionsBelow(fs, base, v - 1)
         onBatchApplied(batchId)
       }
     val q = checkpoint.fold(writer)(ck => writer.option("checkpointLocation", ck))
@@ -716,13 +675,13 @@ object CdcStream {
       })
 
   /** Publish version `v` of the parquet state under `base` — the one way
-    * [[streamApplyToLakeOf]] and [[foldVersionedState]] keep state across
-    * micro-batches. `write` fills a fresh `_tmp_v<v>`, one rename makes it
-    * `state_v<v>`, and only then are the versions below v-1 deleted: a
-    * crash or failed rename at any step leaves v-1 whole for the retry
-    * (a dynamic-partition commit in place deletes each bucket before
-    * renaming its successor in). Only a retried digest batch finds an
-    * existing `state_v<v>`, which is replaced. */
+    * [[streamApplyToLakeOf]], [[foldVersionedState]] and [[replay]] keep
+    * parquet across micro-batches. `write` fills a fresh `_tmp_v<v>` and
+    * one rename makes it `state_v<v>`, so a crash or failed rename at any
+    * step leaves the earlier versions whole for the retry (a
+    * dynamic-partition commit in place deletes each bucket before renaming
+    * its successor in). A retried batch that finds its own `state_v<v>`
+    * replaces it. Deleting old versions is the caller's choice. */
   private def publishVersion(fs: FileSystem, base: Path, v: Long)(write: String => Unit): Unit = {
     val tmp = new Path(base, s"_tmp_v$v")
     val dst = new Path(base, s"state_v$v")
@@ -730,8 +689,11 @@ object CdcStream {
     write(tmp.toString)
     fs.delete(dst, true)
     if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"could not rename $tmp to $dst")
-    versions(fs, base).filter(_ < v - 1).foreach(m => fs.delete(new Path(base, s"state_v$m"), true))
   }
+
+  /** Delete every `state_v<m>` under `base` with m < `keep`. */
+  private def dropVersionsBelow(fs: FileSystem, base: Path, keep: Long): Unit =
+    versions(fs, base).filter(_ < keep).foreach(m => fs.delete(new Path(base, s"state_v$m"), true))
 
   /** One fold step of the digest state of stream_recon_digest /
     * stream_recon_incremental: state_v(k) = per-bucket sum-merge of
@@ -769,6 +731,7 @@ object CdcStream {
     // the coalesce each 16-64-row version lands as one part file per
     // shuffle partition, paying dozens of opens per micro-batch
     publishVersion(fs, base, batchId)(merged.coalesce(1).write.parquet(_))
+    dropVersionsBelow(fs, base, batchId - 1)
   }
 
   /** The newest state_v* table under `stateBase` (see
@@ -942,7 +905,7 @@ object CdcStream {
     * Oracle-checked against the BATCH attribution SQL: the stateful
     * stream must land on exactly the batch matrix. */
   def streamAttribution(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, s"stream_attribution_sink", OutputMode.Append,
+    replay(spark, dir, OutputMode.Append,
       df => attributeStream(spark, df), normalize = false)
       .groupBy(col("first_touch"), col("last_touch"))
       .agg(count(lit(1)).as("n_conversions"),
@@ -992,8 +955,7 @@ object CdcStream {
     * batch one bit-for-bit. */
   def streamBurstiness(spark: SparkSession, dir: String): DataFrame = {
     val finalStates =
-      replay(spark, dir, "stream_burstiness_sink", OutputMode.Update,
-        df => burstCounters(spark, df))
+      replay(spark, dir, OutputMode.Update, df => burstCounters(spark, df))
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_gaps"), col("sx"), col("sxx")),
         col("n_events")).as("s"))
@@ -1119,8 +1081,7 @@ object CdcStream {
     * after full replay the assembled history equals the batch
     * cdc_scd2 bit-for-bit. */
   def streamScd2(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "stream_scd2_sink", OutputMode.Update,
-        df => scd2Fold(spark, df))
+    replay(spark, dir, OutputMode.Update, df => scd2Fold(spark, df))
       .groupBy(col("user_id"), col("version"))
       .agg(min(col("valid_from_id")).as("valid_from_id"),
         max(col("valid_to_id")).as("valid_to_id"),
@@ -1136,7 +1097,7 @@ object CdcStream {
     * events_funnel bit-for-bit (n_events is monotone, so max_by picks
     * each user's last emission from the Update-mode sink). */
   def streamFunnel(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "stream_funnel_sink", OutputMode.Update,
+    replay(spark, dir, OutputMode.Update,
         df => funnelCounts(spark, df), normalize = false)
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_events"), col("funnel_stage")),
@@ -1200,7 +1161,7 @@ object CdcStream {
         }
         .toDF()
     }
-    replay(spark, dir, "stream_sample_sink", OutputMode.Update,
+    replay(spark, dir, OutputMode.Update,
       transform, normalize = false, table = "documents")
       .groupBy(col("source"))
       .agg(max_by(col("members"), col("ver")).as("members"))
@@ -1233,14 +1194,14 @@ object CdcStream {
 
   /** stream_chunk_index — the retrieval chunk table built AT INGEST:
     * each arriving document emits its 256/224-token chunk rows
-    * ([[chunkRows]]) into an Append file sink — exactly how a streaming
+    * ([[chunkRows]]) into an Append parquet sink — exactly how a streaming
     * corpus keeps its RAG index current. Stateless (no watermark, no
     * keyed state, no shuffle before the sink), so ingest cost is one
     * map pass per doc and the sink is the only I/O; oracle-checked
     * against the batch text_chunks SQL, and spec-pinned bit-equal to
     * the batch operator's explode + groupBy formulation. */
   def streamChunkIndex(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "stream_chunk_index_sink", OutputMode.Append,
+    replay(spark, dir, OutputMode.Append,
       chunkRows, normalize = false, table = "documents")
       .orderBy(col("doc_id"), col("chunk_idx"))
 
@@ -1254,7 +1215,7 @@ object CdcStream {
     * classification means no watermark and no keyed state beyond the
     * sources × 3 aggregate rows. */
   def streamQualityGate(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "stream_quality_gate_sink", OutputMode.Complete,
+    replay(spark, dir, OutputMode.Complete,
       qualityGateCounts, normalize = false, table = "documents")
       .orderBy(col("source"), col("quality_class"))
 

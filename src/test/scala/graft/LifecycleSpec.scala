@@ -43,9 +43,8 @@ class LifecycleSpec extends SparkSpec {
       .agg(max_by(col("amount"), unix_micros(col("timestamp"))).as("amount"))
 
   test("full lifecycle: generate → stream-apply → poll → ladder → repair → re-verify") {
-    val feedDir = java.nio.file.Files.createTempDirectory("graft-e2e-feed").toString
-    val lakePath = java.nio.file.Files.createTempDirectory("graft-e2e-lake")
-      .resolve("lake").toString
+    val feedDir = tempDir("graft-e2e-feed")
+    val lakePath = tempDir("graft-e2e-lake") + "/lake"
     val rows = 200
 
     def publish(b: Long): Unit =

@@ -41,7 +41,7 @@ class RecoverySpec extends SparkSpec {
     * event_id, a few deletes, so LWW state genuinely spans batches. */
   private def writeFeed(): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-recovery-feed").toString
+    val dir = tempDir("graft-recovery-feed")
     (0 until 4).foreach { f =>
       (0 until 100).map { i =>
         val id = f * 1000L + i
@@ -52,7 +52,7 @@ class RecoverySpec extends SparkSpec {
         .coalesce(1).write.parquet(s"$dir/f$f")
     }
     // one flat dir of files for the stream source
-    val flat = java.nio.file.Files.createTempDirectory("graft-recovery-flat").toString
+    val flat = tempDir("graft-recovery-flat")
     val src = new java.io.File(dir)
     src.listFiles().foreach { d =>
       d.listFiles().filter(_.getName.endsWith(".parquet")).foreach { p =>
@@ -75,17 +75,16 @@ class RecoverySpec extends SparkSpec {
 
   test("streamApplyToLake: kill after sink write pre-commit, restart from checkpoint == uninterrupted run") {
     val flat = writeFeed()
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
 
     // run A: uninterrupted reference
-    val lakeA = tmp("graft-lakeA") + "/lake"
+    val lakeA = tempDir("graft-lakeA") + "/lake"
     val cleanRun = CdcStream.streamApplyToLakeOf(spark, feedStream(flat), lakeA, 16,
-      Some(tmp("graft-ckA")), _ => ())
+      Some(tempDir("graft-ckA")), _ => ())
 
     // run B: crash in the worst-case window of batch 1 — the bucket
     // snapshot for batch 1 is already durable, its offset is not
-    val lakeB = tmp("graft-lakeB") + "/lake"
-    val ckB = tmp("graft-ckB")
+    val lakeB = tempDir("graft-lakeB") + "/lake"
+    val ckB = tempDir("graft-ckB")
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val thrown = intercept[Exception] {
       CdcStream.streamApplyToLakeOf(spark, feedStream(flat), lakeB, 16, Some(ckB),
@@ -121,17 +120,16 @@ class RecoverySpec extends SparkSpec {
 
   test("streamApplyToLakeOf: a failed rename inside the lake commit loses no key, restart == uninterrupted run") {
     val flat = writeFeed()
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val files = new java.io.File(flat).list().filter(_.endsWith(".parquet")).sorted.toSeq
-    val feed = tmp("graft-fault-feed")
+    val feed = tempDir("graft-fault-feed")
     def stage(names: Seq[String]): Unit = names.foreach(n =>
       java.nio.file.Files.copy(java.nio.file.Paths.get(flat, n), java.nio.file.Paths.get(feed, n)))
     def keys(df: DataFrame): Set[Long] = df.select("user_id").collect().map(_.getLong(0)).toSet
 
     FaultyRenameFs.registered(spark.sparkContext.hadoopConfiguration) {
-      val lakeDir = tmp("graft-fault-lake") + "/lake"
+      val lakeDir = tempDir("graft-fault-lake") + "/lake"
       val lake = "faulty://" + lakeDir
-      val ck = tmp("graft-fault-ck")
+      val ck = tempDir("graft-fault-ck")
       // batch 0 alone, committed
       stage(files.take(1))
       CdcStream.streamApplyToLakeOf(spark, feedStream(feed), lake, 16, Some(ck))
@@ -151,9 +149,9 @@ class RecoverySpec extends SparkSpec {
 
       // restart from the checkpoint == an uninterrupted run
       val recovered = CdcStream.streamApplyToLakeOf(spark, feedStream(feed), lake, 16, Some(ck))
-      val cleanLake = tmp("graft-fault-clean") + "/lake"
+      val cleanLake = tempDir("graft-fault-clean") + "/lake"
       val clean = CdcStream.streamApplyToLakeOf(spark, feedStream(flat), cleanLake, 16,
-        Some(tmp("graft-fault-ck-clean")))
+        Some(tempDir("graft-fault-ck-clean")))
       assert(lakeRows(recovered) === lakeRows(clean))
       assert(lakeRows(CdcStream.readLake(spark, lake)) === lakeRows(CdcStream.readLake(spark, cleanLake)),
         "the recovered lake, tombstones included, must equal the uninterrupted run's")
@@ -162,7 +160,7 @@ class RecoverySpec extends SparkSpec {
 
   test("foldVersionedState: crash-retry schedule keeps the accumulated digest exact, GC stays bounded") {
     import spark.implicits._
-    val stateBase = java.nio.file.Files.createTempDirectory("graft-fold-state").toString
+    val stateBase = tempDir("graft-fold-state")
     def partial(seed: Int): DataFrame =
       (0 until 8).map(b => (b, (seed * 10 + b).toLong, (seed * 1000 + b * 7).toLong))
         .toDF("bucket", "src_count", "src_digest")
@@ -204,7 +202,7 @@ class RecoverySpec extends SparkSpec {
       (id, id * 7 % 50 + 1, if (id % 13 == 0) "D" else "U",
         (id % 997).toDouble / 10d, 1700000000000000L + id * 1000L)
     }
-    val flat = java.nio.file.Files.createTempDirectory("graft-dup-feed").toString
+    val flat = tempDir("graft-dup-feed")
     val files = Seq(
       rows(0L until 100L),
       rows(1000L until 1100L),
@@ -259,16 +257,15 @@ class RecoverySpec extends SparkSpec {
 
   test("dropDuplicatesWithinWatermark: dedup state survives kill/restart — cross-crash duplicates still filtered") {
     val flat = writeDupFeed()
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
 
     // run A: uninterrupted reference
-    val outA = tmp("graft-dedupA") + "/out"
-    runDedupStream(flat, outA, tmp("graft-dedup-ckA"), _ => ())
+    val outA = tempDir("graft-dedupA") + "/out"
+    runDedupStream(flat, outA, tempDir("graft-dedup-ckA"), _ => ())
 
     // run B: crash in the worst-case window of batch 1 (output durable,
     // offset not), restart from the same checkpoint
-    val outB = tmp("graft-dedupB") + "/out"
-    val ckB = tmp("graft-dedup-ckB")
+    val outB = tempDir("graft-dedupB") + "/out"
+    val ckB = tempDir("graft-dedup-ckB")
     val thrown = intercept[Exception] {
       runDedupStream(flat, outB, ckB,
         bid => if (bid == 1L) sys.error("injected crash: after dedup output, before offset commit"))

@@ -1,12 +1,29 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp directory, deleted with its contents after the suite. */
+  def tempDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(p)
+    p.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach { p =>
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+    } finally super.afterAll()
 }
 
 object SparkSpec {

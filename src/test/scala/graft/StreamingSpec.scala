@@ -187,8 +187,54 @@ class StreamingSpec extends SparkSpec {
     assert(batch.exceptAll(streamed).count() === 0)
   }
 
+  test("replay: a result stays readable after later replays") {
+    // Append (streamDedup) and Update (streamKeyChurn) results are lazy
+    // scans of their sink; later replays must not delete it. Neither is
+    // collected before the later replays: a second collect of the same
+    // frame would reuse the first one's shuffle instead of scanning.
+    val dedup = CdcStream.streamDedup(spark, sf)
+    val churn = CdcStream.streamKeyChurn(spark, sf)
+    CdcStream.streamWindowAgg(spark, sf).collect()
+    val dedupRows = CdcStream.streamDedup(spark, sf).collect().toSeq
+    val churnRows = CdcStream.streamKeyChurn(spark, sf).collect().toSeq
+    assert(dedup.collect().toSeq === dedupRows)
+    assert(churn.collect().toSeq === churnRows)
+  }
+
+  test("replay: a caller's temp view is not touched") {
+    import spark.implicits._
+    Seq(1L, 2L, 3L).toDF("x").createOrReplaceTempView("stream_window_agg_sink")
+    try {
+      assert(CdcStream.streamWindowAgg(spark, sf).count() > 0)
+      assert(spark.table("stream_window_agg_sink").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    } finally spark.catalog.dropTempView("stream_window_agg_sink")
+  }
+
+  test("replay: an events table with zero rows gives empty results in every output mode") {
+    // one empty micro-batch
+    val noRows = tempDir("graft-empty-sf")
+    spark.read.parquet(s"$sf/events.parquet").limit(0).coalesce(1)
+      .write.parquet(s"$noRows/events.parquet")
+    // no micro-batch: the same table under a part name the feed stage
+    // does not link (it streams `*.parquet` files only)
+    val noBatch = tempDir("graft-nobatch-sf")
+    val part = new java.io.File(s"$noRows/events.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(noBatch, "events.parquet"))
+    java.nio.file.Files.copy(part, java.nio.file.Paths.get(noBatch, "events.parquet", "part-0"))
+    for (dir <- Seq(noRows, noBatch)) Seq(
+      CdcStream.streamWindowAgg(spark, dir) -> Seq("win_start", "win_end", "op", "n_changes"),
+      CdcStream.streamKeyChurn(spark, dir) -> Seq("user_id", "n_changes", "n_inserts",
+        "n_updates", "n_deletes", "first_offset", "last_offset", "offset_span", "churn_class"),
+      CdcStream.streamDedup(spark, dir) -> Seq("op", "n_events", "n_keys")
+    ).foreach { case (df, cols) =>
+      assert(df.columns.toSeq === cols, dir)
+      assert(df.collect().isEmpty, dir)
+    }
+  }
+
   test("streamApplyToLake: lake snapshot equals batch apply after full replay") {
-    val out = java.nio.file.Files.createTempDirectory("graft-lake").toString + "/snap"
+    val out = tempDir("graft-lake") + "/snap"
     val lake = CdcStream.streamApplyToLake(spark, sf, out)
       .select(col("user_id"), col("last_event_id"))
     val batch = CdcOps.applyUpsertDelete(spark, sf)
@@ -202,10 +248,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamApplyToLake: a directory events table streams every part file") {
-    val sfDir = java.nio.file.Files.createTempDirectory("graft-dir-sf").toString
+    val sfDir = tempDir("graft-dir-sf")
     spark.read.parquet(s"$sf/events.parquet").repartition(2)
       .write.parquet(s"$sfDir/events.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft-dir-lake").toString + "/snap"
+    val out = tempDir("graft-dir-lake") + "/snap"
     val lake = CdcStream.streamApplyToLake(spark, sfDir, out)
       .select(col("user_id"), col("last_event_id"))
     val batch = CdcOps.applyUpsertDelete(spark, sf)
@@ -216,11 +262,10 @@ class StreamingSpec extends SparkSpec {
 
   test("streamApplyToLakeOf: per-key last-writer-wins across micro-batches") {
     import spark.implicits._
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    val lake = tmp("graft-lww-lake") + "/lake"
+    val lake = tempDir("graft-lww-lake") + "/lake"
     // one feed directory per call: each call drains exactly one micro-batch
     def applyBatch(events: ChangeEvent*): Unit = {
-      val feed = tmp("graft-lww-feed") + "/f"
+      val feed = tempDir("graft-lww-feed") + "/f"
       events.toDF().coalesce(1).write.parquet(feed)
       CdcStream.streamApplyToLakeOf(spark,
         spark.readStream.schema(events.toDF().schema).parquet(feed), lake)
@@ -241,10 +286,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streamApplyToLakeOf: tombstones delete lone keys, survive stale updates, seed a fresh lake") {
     import spark.implicits._
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     // one feed directory per call: every call drains exactly its events
     def applyTo(lake: String, events: ChangeEvent*): Set[(Long, Long, String)] = {
-      val feed = tmp("graft-tomb-feed") + "/f"
+      val feed = tempDir("graft-tomb-feed") + "/f"
       events.toDF().coalesce(1).write.parquet(feed)
       val stream = spark.readStream.schema(events.toDF().schema).parquet(feed)
       CdcStream.streamApplyToLakeOf(spark, stream, lake).collect()
@@ -259,11 +303,11 @@ class StreamingSpec extends SparkSpec {
 
     // (b) an empty and then a delete-only first micro-batch on a fresh
     // lake both succeed
-    val fresh = tmp("graft-tomb-fresh") + "/lake"
+    val fresh = tempDir("graft-tomb-fresh") + "/lake"
     assert(applyTo(fresh).isEmpty)
     assert(applyTo(fresh, ChangeEvent(7, 1, "D", 0.0, 7)).isEmpty)
 
-    val lake = tmp("graft-tomb-lake") + "/lake"
+    val lake = tempDir("graft-tomb-lake") + "/lake"
     assert(applyTo(lake, ChangeEvent(1, 1, "I", 1.0, 1), ChangeEvent(2, 2, "I", 2.0, 2),
       ChangeEvent(3, 3, "I", 3.0, 3)) === Set((1L, 1L, "I"), (2L, 2L, "I"), (3L, 3L, "I")))
     // (a) deleting the lone key of a bucket removes it
@@ -282,7 +326,7 @@ class StreamingSpec extends SparkSpec {
     spark.catalog.clearCache()
     // the lake path is a plain file, so reading the touched buckets throws
     // inside the micro-batch, after its input was persisted
-    val lake = java.nio.file.Files.createTempFile("graft-bad-lake", ".txt")
+    val lake = java.nio.file.Paths.get(tempDir("graft-bad-lake"), "lake.txt")
     java.nio.file.Files.writeString(lake, "not a parquet table")
     val input = MemoryStream[ChangeEvent]
     input.addData(ChangeEvent(1, 1, "I", 1.0, 1))
@@ -296,7 +340,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     // a lake of bare _bucket= directories, as an in-place writer leaves it
-    val lake = java.nio.file.Files.createTempDirectory("graft-bare-lake").toString + "/lake"
+    val lake = tempDir("graft-bare-lake") + "/lake"
     graft.sources.Sinks.writeSnapshot(
       Seq(graft.streaming.KeyState(1, 1, "I", 1.0)).toDF(), "user_id", lake, 16)
     val input = MemoryStream[ChangeEvent]
