@@ -19,7 +19,10 @@ import graft.core.Tables
   * Scale notes: latest-state uses `max_by`-style aggregation (one shuffle
   * on the key, map-side partial aggregation) rather than a sort window —
   * at 100 TB a `row_number` window sorts every partition while the
-  * aggregate form combines locally first.
+  * aggregate form combines locally first. The aggregate is a hash
+  * aggregate only when every payload is fixed-width: the I/U/D folds
+  * code their op as an int ([[opFoldOf]]), while `cdc_latest_state`'s
+  * string `event_type` still plans a sort aggregate.
   */
 object CdcOps {
 
@@ -36,13 +39,32 @@ object CdcOps {
     * each key, the payload columns of the record with the highest offset.
     * One shuffle on the key with map-side partial aggregation (max_by) —
     * at 100 TB this beats a row_number window, which sorts every
-    * partition and cannot partially aggregate. Output columns are named
-    * `last_<payload>` plus `last_<offset>`. */
+    * partition and cannot partially aggregate. It is a hash aggregate
+    * only when every payload is fixed-width: a string payload has no
+    * fixed-width `max_by` buffer and plans a sort aggregate. Output
+    * columns are named `last_<payload>` plus `last_<offset>`. */
   def latestStateOf(log: DataFrame, keyCol: String, offsetCol: String,
                     payloadCols: Seq[String]): DataFrame = {
     val aggs = max(col(offsetCol)).as(s"last_$offsetCol") +:
       payloadCols.map(c => max_by(col(c), col(offsetCol)).as(s"last_$c"))
     log.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[latestStateOf]] over an I/U/D change log, with the op folded as an
+    * int code (I=0, U=1, D=2) and `last_<op>` decoded back to its letter,
+    * so every fold buffer is fixed-width and the fold is a hash aggregate.
+    * An op outside I/U/D fails the query with a message naming it, in the
+    * fold's own pass (no extra job); a null op stays null. The fold behind
+    * [[applyLogOf]], [[tombstoneGcOf]] and the streaming lake apply. */
+  private[graft] def opFoldOf(log: DataFrame, keyCol: String, offsetCol: String,
+                              opCol: String, payloadCols: Seq[String]): DataFrame = {
+    val op = col(opCol)
+    val code = when(op === "I", 0).when(op === "U", 1).when(op === "D", 2)
+      .when(op.isNotNull,
+        raise_error(concat(lit(s"unsupported CDC op in $opCol (expected I, U or D): "), op)))
+    val last = col(s"last_$opCol")
+    latestStateOf(log.withColumn(opCol, code), keyCol, offsetCol, opCol +: payloadCols)
+      .withColumn(s"last_$opCol", when(last === 0, "I").when(last === 1, "U").when(last === 2, "D"))
   }
 
   /** cdc_latest_state — last-writer-wins materialization: for each key the
@@ -64,10 +86,11 @@ object CdcOps {
 
   /** Generic Debezium-sink apply over any change log with an I/U/D op
     * column: the latest op per key wins; keys whose latest op is a delete
-    * are absent from the snapshot (tombstone semantics). */
+    * are absent from the snapshot (tombstone semantics). An op outside
+    * I/U/D fails the query; a key whose latest op is null is dropped. */
   def applyLogOf(log: DataFrame, keyCol: String, offsetCol: String,
                  opCol: String, payloadCols: Seq[String]): DataFrame =
-    latestStateOf(log, keyCol, offsetCol, opCol +: payloadCols)
+    opFoldOf(log, keyCol, offsetCol, opCol, payloadCols)
       .filter(col(s"last_$opCol") =!= "D")
 
   /** cdc_apply_upsert_delete — apply the log to an (empty) target with
@@ -315,7 +338,7 @@ object CdcOps {
                     opCol: String, keepNum: Int = 8, keepDen: Int = 10): DataFrame = {
     // integer floor-div (all-positive offsets): Column./ would go double
     val wm = log.agg(expr(s"max($offsetCol) * $keepNum div $keepDen").as("gc_watermark"))
-    latestStateOf(log, keyCol, offsetCol, Seq(opCol))
+    opFoldOf(log, keyCol, offsetCol, opCol, Nil)
       .crossJoin(broadcast(wm))
       .withColumn("gc_class",
         when(col(s"last_$opCol") =!= "D", "ACTIVE")

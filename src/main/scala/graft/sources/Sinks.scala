@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * apply overwrites only the partitions it recomputes (dynamic
   * partition overwrite = idempotent retries), and (b) a downstream
   * reconciliation read of one bucket touches one directory (partition
-  * pruning as an index). CdcStream's lake writes each version into a
+  * pruning as an index). The bucket is Spark's own hash partition of
+  * the key, `pmod(hash(key), buckets)` (Murmur3, as `HashPartitioning`
+  * and `bucketBy` use). CdcStream's lake writes each version into a
   * fresh directory through [[bucketedWriter]], with no overwrite. */
 object Sinks {
 
@@ -26,15 +28,17 @@ object Sinks {
       .mode("overwrite")
       .parquet(path)
 
-  /** `snapshot` with `_bucket = pmod(xxhash64(key), buckets)`, one task
-    * per bucket, as a writer partitioned by `_bucket`. A write into a
-    * fresh directory needs nothing more; [[writeSnapshot]] adds the
-    * dynamic overwrite that replaces existing buckets. */
+  /** `snapshot` with `_bucket = pmod(hash(key), buckets)`, the partition
+    * id of `repartition(buckets, key)`, as a writer partitioned by
+    * `_bucket`: one task, one bucket and one file, and no second exchange
+    * after a fold already partitioned that way. A write into a fresh
+    * directory needs nothing more; [[writeSnapshot]] adds the dynamic
+    * overwrite that replaces existing buckets. */
   private[graft] def bucketedWriter(snapshot: DataFrame, keyCol: String,
                                     buckets: Int): DataFrameWriter[Row] =
     snapshot
-      .withColumn("_bucket", pmod(xxhash64(col(keyCol)), lit(buckets.toLong)))
-      .repartition(col("_bucket"))
+      .withColumn("_bucket", pmod(hash(col(keyCol)), lit(buckets)))
+      .repartition(buckets, col(keyCol))
       .write
       .partitionBy("_bucket")
 

@@ -44,7 +44,7 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   * CDC apply has one mechanism: `streamApplyToLakeOf`, the Debezium
   * sink. It is a stateless foreachBatch whose target holds the state.
   * Each micro-batch folds its raw events with the lake's newest version
-  * ([[graft.cdc.CdcOps.latestStateOf]], batch `applyLogOf`'s fold) and
+  * (`CdcOps.opFoldOf`, batch `applyLogOf`'s fold) and
   * publishes the next whole version through [[publishVersion]], as the
   * recon digest state does. Deleted keys stay as tombstones
   * (`last_op = 'D'`); [[readLake]] returns them, live readers filter
@@ -609,14 +609,20 @@ object CdcStream {
     *
     * The lake is the apply state; no state store. Each micro-batch, an
     * empty one included, folds its raw events with the lake's newest
-    * version once per key (last-writer-wins,
-    * [[graft.cdc.CdcOps.latestStateOf]]) and publishes the fold as version
-    * newest + 1 ([[publishVersion]]): a whole lake of [[KeyState]]s
-    * partitioned by `_bucket` in `path/state_v<n>`. Batch ids restart at
-    * 0 without a checkpoint, so they are not version numbers. A retry
-    * re-folds the same events into an identical version (the reference's
-    * jdbc upsert sink as an idempotent lake sink). A `path` holding
-    * anything but versions fails the batch instead of being overwritten.
+    * version once per key (last-writer-wins, `CdcOps.opFoldOf`) and
+    * publishes the fold as version newest + 1 ([[publishVersion]]): a
+    * whole lake of [[KeyState]]s partitioned by `_bucket` in
+    * `path/state_v<n>`. The fold and the write share one exchange: the
+    * fold's input is hash-partitioned on the key into `buckets`
+    * partitions, the lake's bucket function. A version written with
+    * another bucket function reads the same ([[readLake]] drops
+    * `_bucket`) and the next publish rewrites it. An op outside I/U/D
+    * fails the batch and leaves the lake at its previous version. Batch
+    * ids restart at 0 without a checkpoint, so they are not version
+    * numbers. A retry re-folds the same events into an identical version
+    * (the reference's jdbc upsert sink as an idempotent lake sink). A
+    * `path` holding anything but versions fails the batch instead of
+    * being overwritten.
     * Deleted keys stay as (never collected) tombstones, `last_op = 'D'`,
     * so a stale update cannot resurrect them; the returned frame filters
     * them and stays readable until two more versions are published.
@@ -633,13 +639,15 @@ object CdcStream {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val writer = changeEvents.as[ChangeEvent].writeStream
       .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
+        // partitioned as the lake buckets, so fold and write share one exchange
         val log = batch.select(col("user_id").cast("long"), col("event_id").cast("long"),
             col("op"), col("value").cast("double"))
           .unionByName(readLake(spark, path).select(col("user_id"),
             col("last_event_id").as("event_id"), col("last_op").as("op"), col("last_value").as("value")))
+          .repartition(buckets, col("user_id"))
         val v = versions(fs, base).maxOption.fold(0L)(_ + 1)
         publishVersion(fs, base, v)(graft.sources.Sinks.bucketedWriter(
-          graft.cdc.CdcOps.latestStateOf(log, "user_id", "event_id", Seq("op", "value")),
+          graft.cdc.CdcOps.opFoldOf(log, "user_id", "event_id", "op", Seq("value")),
           "user_id", buckets).parquet(_))
         dropVersionsBelow(fs, base, v - 1)
         onBatchApplied(batchId)

@@ -161,6 +161,28 @@ class CdcSpec extends SparkSpec {
     assert(wrong.count() === 0)
   }
 
+  test("applyLogOf: an op outside I/U/D fails naming it; a null op drops the key") {
+    import spark.implicits._
+    val bad = Seq((1L, 1L, "I", 1.0), (1L, 2L, "X", 2.0), (2L, 3L, "U", 3.0))
+      .toDF("k", "lsn", "op", "v")
+    val e = intercept[Exception] {
+      CdcOps.applyLogOf(bad, "k", "lsn", "op", Seq("v")).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unsupported CDC op in op (expected I, U or D): X")),
+      "the failure must name the op")
+    // a null latest op: the key is neither live nor a delete, and is dropped
+    val withNull = Seq[(Long, Long, String, Double)]((1L, 1L, "I", 1.0), (1L, 2L, null, 2.0),
+      (2L, 3L, "U", 3.0), (3L, 4L, null, 4.0), (3L, 5L, "D", 0.0))
+      .toDF("k", "lsn", "op", "v")
+    val applied = CdcOps.applyLogOf(withNull, "k", "lsn", "op", Seq("v"))
+      .select("k", "last_lsn", "last_op", "last_v").as[(Long, Long, String, Double)].collect()
+    assert(applied.toSeq === Seq((2L, 3L, "U", 3.0)))
+    val gc = CdcOps.tombstoneGcOf(withNull, "k", "lsn", "op")
+      .select("k", "last_op").as[(Long, String)].collect().toMap
+    assert(gc === Map(1L -> null, 2L -> "U", 3L -> "D"))
+  }
+
   test("cdc_out_of_order: ordered log audits clean, planted disorder is caught") {
     import spark.implicits._
     // ordered log: offsets and event times agree

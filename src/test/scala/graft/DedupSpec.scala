@@ -73,7 +73,7 @@ class DedupSpec extends SparkSpec {
         concat(array(element_at(col("embedding"), 1) + lit(0.1f)),
           slice(col("embedding"), 2, 63)).as("embedding"),
         col("label"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-embrecall").toString
+    val dir = tempDir("graft-embrecall")
     base.unionByName(twins).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val raw = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("label").cast("string"),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.DriverManager
 import java.util.Properties
 
@@ -23,7 +22,7 @@ import graft.sources.JdbcSource
   */
 class JdbcIntegrationSpec extends SparkSpec {
 
-  private lazy val dbDir = Files.createTempDirectory("graft-derby").toFile
+  private lazy val dbDir = new java.io.File(tempDir("graft-derby"))
   private lazy val url = s"jdbc:derby:${dbDir.getAbsolutePath}/src;create=true"
 
   private def withConn[A](f: java.sql.Connection => A): A = {

@@ -258,7 +258,7 @@ class LibraryApiSpec extends SparkSpec {
   }
 
   test("Tables.load: a table rewritten in place is re-read, not served from the memo") {
-    val sfDir = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    val sfDir = tempDir("graft-memo")
     val path = s"$sfDir/t.parquet"
     spark.range(10).write.parquet(path)
     assert(graft.core.Tables.load(spark, sfDir, "t").count() === 10L)

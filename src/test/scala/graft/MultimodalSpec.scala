@@ -125,7 +125,7 @@ class MultimodalSpec extends SparkSpec {
   test("mm_dup_manifest: cross-asset sharing only — planted copies flagged, repeats within one asset not") {
     import spark.implicits._
     val block = "b" * 128
-    val tmp = java.nio.file.Files.createTempDirectory("mmdup")
+    val tmp = tempDir("mmdup")
     Seq(
       (1L, "a" * 256, "x", "x", 256L),        // copied whole into doc 2
       (2L, "a" * 256, "x", "x", 256L),
@@ -133,7 +133,7 @@ class MultimodalSpec extends SparkSpec {
       (4L, "z" * 300, "x", "x", 300L))        // unique
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val m = Multimodal.mmDupManifest(spark, tmp.toString).collect()
+    val m = Multimodal.mmDupManifest(spark, tmp).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("shared_bp"), r.getAs[Boolean]("drop_candidate"))).toMap
     assert(m(1L) === ((10000L, true)) && m(2L) === ((10000L, true)))

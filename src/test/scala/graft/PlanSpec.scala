@@ -191,9 +191,72 @@ class PlanSpec extends SparkSpec {
   test("cdc_snapshot_merge: both apply stages partially aggregate (no row_number window)") {
     val p = plan(graft.cdc.CdcOps.snapshotMerge(spark, sf))
     // last-writer-wins is max_by aggregation — partial+final per stage —
-    // never a sort-window (which cannot combine map-side)
-    assert(p.contains("SortAggregate") || p.contains("HashAggregate"))
+    // never a sort-window (which cannot combine map-side); the op-coded
+    // fold keeps every buffer fixed-width, so it is a hash aggregate
+    assert(p.contains("HashAggregate") && !p.contains("SortAggregate"))
     assert(!p.contains("RunningWindowFunction") && !p.contains("row_number"))
+  }
+
+  test("I/U/D folds are hash aggregates: applyLogOf and tombstoneGcOf never sort-aggregate") {
+    for (df <- Seq(graft.cdc.CdcOps.applyUpsertDelete(spark, sf),
+                   graft.cdc.CdcOps.tombstoneGc(spark, sf))) {
+      val p = plan(df)
+      assert(p.contains("HashAggregate") && !p.contains("SortAggregate"), p)
+    }
+  }
+
+  test("CDC lake apply: one hash-aggregated fold over one key exchange, one file per bucket") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.streaming.{CdcStream, ChangeEvent}
+    val lake = tempDir("graft-plan-lake") + "/lake"
+    def feedOf(events: Seq[ChangeEvent]): org.apache.spark.sql.DataFrame = {
+      val feed = tempDir("graft-plan-feed") + "/f"
+      events.toDF().coalesce(1).write.parquet(feed)
+      spark.readStream.schema(events.toDF().schema).parquet(feed)
+    }
+    CdcStream.streamApplyToLakeOf(spark,
+      feedOf((1L to 200L).map(k => ChangeEvent(k, k, "I", k.toDouble, k))), lake)
+    // the second micro-batch folds its events with the first version
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand]))
+          writes.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val feed2 = feedOf((1L to 200L by 3)
+      .map(k => ChangeEvent(1000 + k, k, if (k % 2 == 0) "D" else "U", 1.0, k)))
+    spark.listenerManager.register(listener)
+    try {
+      CdcStream.streamApplyToLakeOf(spark, feed2, lake)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size === 1, "one lake write per micro-batch")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val p = writes.peek()
+    assert(helper.collect(p) { case a: HashAggregateExec => a }.nonEmpty, p)
+    assert(helper.collect(p) { case a: SortAggregateExec => a }.isEmpty, p)
+    val exchanges = helper.collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges.size === 1, p)
+    assert(exchanges.head match {
+      case HashPartitioning(Seq(a: Attribute), 16) => a.name == "user_id"
+      case _ => false
+    }, exchanges)
+    // state_v1: every _bucket= directory holds exactly one part file
+    val v1 = new java.io.File(s"$lake/state_v1")
+    val buckets = v1.listFiles().filter(_.getName.startsWith("_bucket="))
+    assert(buckets.length === 16)
+    assert(buckets.forall(_.list().count(_.startsWith("part-")) == 1),
+      buckets.map(b => b.getName -> b.list().count(_.startsWith("part-"))).toSeq)
   }
 
   test("mm_doc_embed: id join broadcasts one side at test scale") {

@@ -146,7 +146,7 @@ class SketchKernelSpec extends SparkSpec {
     // parquet-backed edge corpus: empty, shorter-than-chunk, exact
     // multiple, long, and multi-byte UTF-8 that a byte-true chunker
     // must split mid-codepoint
-    val tmp = java.nio.file.Files.createTempDirectory("chunkkernel").toString
+    val tmp = tempDir("chunkkernel")
     (Seq((1L, ""), (2L, "short"), (3L, "x" * 128), (4L, "y" * 1000),
       (5L, "é😀é" * 40), (6L, "z" * 129)).toDF("id", "p")
       .write.mode("overwrite").parquet(tmp))

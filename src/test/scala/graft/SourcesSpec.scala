@@ -47,7 +47,7 @@ class SourcesSpec extends SparkSpec {
 
   test("Sinks.writeSnapshot: bucket-partitioned, idempotent overwrite, readable") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val out = tempDir("graft-sink")
     val snap = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     graft.sources.Sinks.writeSnapshot(snap, "k", out, 4)
     graft.sources.Sinks.writeSnapshot(snap, "k", out, 4) // idempotent rerun
@@ -60,7 +60,7 @@ class SourcesSpec extends SparkSpec {
 
   test("JsonlSource: shard read, corrupt-line quarantine, shard ledger") {
     import graft.sources.JsonlSource
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl")
+    val dir = java.nio.file.Paths.get(tempDir("graft-jsonl"))
     java.nio.file.Files.write(dir.resolve("shard00.jsonl"),
       ("""{"doc_id":1,"text":"hello world","source":"src0","lang":"en"}""" + "\n" +
        """{"doc_id":2,"text":"more text","source":"src1","lang":"de"}""" + "\n").getBytes)
@@ -86,7 +86,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("FeedSource: reads batch feed files, ledger counts + corrupt quarantine") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-feeds")
+    val dir = java.nio.file.Paths.get(tempDir("graft-feeds"))
     java.nio.file.Files.writeString(dir.resolve("orders_batch_1.csv"),
       "customer_id,amount,timestamp\n10,5.5,2024-01-01 00:00:00\n11,6.5,2024-01-01 00:01:00\n")
     java.nio.file.Files.writeString(dir.resolve("orders_batch_2.csv"),
@@ -101,7 +101,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("FeedSink: generated batches round-trip through FeedSource with a clean ledger") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-feedsink").toString
+    val dir = tempDir("graft-feedsink")
     val b1 = FeedSink.genBatch(spark, 1L, 100)
     val b2 = FeedSink.genBatch(spark, 2L, 50)
     val p1 = FeedSink.writeBatch(b1, dir, 1L)
@@ -133,7 +133,7 @@ class SourcesSpec extends SparkSpec {
 
   test("readFeedsStream: streamed feed ledger equals the batch ledger") {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val dir = java.nio.file.Files.createTempDirectory("graft-feedstream").toString
+    val dir = tempDir("graft-feedstream")
     (1L to 3L).foreach(b =>
       FeedSink.writeBatch(FeedSink.genBatch(spark, b, 40 + 10 * b.toInt), dir, b))
     val q = FeedSource.feedLedger(FeedSource.readFeedsStream(spark, dir))

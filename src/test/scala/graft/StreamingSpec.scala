@@ -297,7 +297,7 @@ class StreamingSpec extends SparkSpec {
     }
     // precondition: key 1 is the only one of {1, 2, 3} in its bucket
     val bucketOf = Seq(1L, 2L, 3L).toDF("k")
-      .select(col("k"), pmod(xxhash64(col("k")), lit(16L))).as[(Long, Long)]
+      .select(col("k"), pmod(hash(col("k")), lit(16))).as[(Long, Int)]
       .collect().toMap
     assert(bucketOf(1L) != bucketOf(2L) && bucketOf(1L) != bucketOf(3L))
 
@@ -318,6 +318,52 @@ class StreamingSpec extends SparkSpec {
     // the lake keeps the tombstone; direct readers filter it
     assert(CdcStream.readLake(spark, lake).filter(col("user_id") === 1L)
       .select("last_event_id", "last_op").as[(Long, String)].collect().toSeq === Seq((10L, "D")))
+  }
+
+  test("streamApplyToLakeOf: an op outside I/U/D fails the batch, naming it; the lake keeps its version") {
+    import spark.implicits._
+    val lake = tempDir("graft-badop-lake") + "/lake"
+    def apply(events: ChangeEvent*): Unit = {
+      val feed = tempDir("graft-badop-feed") + "/f"
+      events.toDF().coalesce(1).write.parquet(feed)
+      CdcStream.streamApplyToLakeOf(spark,
+        spark.readStream.schema(events.toDF().schema).parquet(feed), lake)
+      ()
+    }
+    apply(ChangeEvent(1, 1, "I", 1.0, 1), ChangeEvent(2, 2, "I", 2.0, 2))
+    val before = CdcStream.readLake(spark, lake).as[graft.streaming.KeyState].collect().toSet
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      apply(ChangeEvent(3, 1, "X", 3.0, 3), ChangeEvent(4, 3, "I", 4.0, 4))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unsupported CDC op in op (expected I, U or D): X")),
+      "the failure must name the op")
+    assert(new java.io.File(lake).list().filter(_.startsWith("state_v")).toSet === Set("state_v0"))
+    assert(CdcStream.readLake(spark, lake).as[graft.streaming.KeyState].collect().toSet === before)
+  }
+
+  test("streamApplyToLakeOf: a lake version bucketed by xxhash64 is read and republished by hash") {
+    import spark.implicits._
+    val lake = tempDir("graft-xxh-lake") + "/lake"
+    // version 0 as an earlier release wrote it: _bucket = pmod(xxhash64(key), 16)
+    val old = (1L to 40L).map(k => graft.streaming.KeyState(k, k, "I", k.toDouble)).toDF()
+    old.withColumn("_bucket", pmod(xxhash64(col("user_id")), lit(16L)))
+      .repartition(col("_bucket")).write.partitionBy("_bucket").parquet(s"$lake/state_v0")
+    val feed = tempDir("graft-xxh-feed") + "/f"
+    val events = Seq(ChangeEvent(50, 1, "D", 0.0, 50), ChangeEvent(51, 2, "U", 20.0, 51),
+      ChangeEvent(52, 41, "I", 41.0, 52), ChangeEvent(0, 3, "U", 9.0, 0))
+    events.toDF().coalesce(1).write.parquet(feed)
+    val live = CdcStream.streamApplyToLakeOf(spark,
+      spark.readStream.schema(events.toDF().schema).parquet(feed), lake)
+      .as[graft.streaming.KeyState].collect().toSet
+    val expected = ((3L to 40L).map(k => graft.streaming.KeyState(k, k, "I", k.toDouble)) ++
+      Seq(graft.streaming.KeyState(2, 51, "U", 20.0), graft.streaming.KeyState(41, 52, "I", 41.0))).toSet
+    assert(live === expected)
+    // version 1 holds every row, the tombstone included, in its hash bucket
+    val v1 = spark.read.parquet(s"$lake/state_v1")
+    assert(v1.count() === 41L)
+    assert(v1.filter(col("_bucket") =!= pmod(hash(col("user_id")), lit(16))).count() === 0L)
+    assert(new java.io.File(lake).list().toSet === Set("state_v0", "state_v1"))
   }
 
   test("streamApplyToLakeOf: a failed micro-batch releases its cached input") {

@@ -218,11 +218,11 @@ class TextSpec extends SparkSpec {
     // two docs, same multiset of tokens in different order, long enough
     // for one chunk each: fingerprints must differ
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("chunkfp")
+    val tmp = tempDir("chunkfp")
     Seq((1L, "alpha beta gamma", "x", "x", 1L), (2L, "beta alpha gamma", "x", "x", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val fps = TextAnalysis.textChunks(spark, tmp.toString).collect()
+    val fps = TextAnalysis.textChunks(spark, tmp).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("chunk_fp")).toMap
     assert(fps(1L) !== fps(2L))
   }
