@@ -44,17 +44,23 @@ object DebeziumJson {
 
   /** Parse raw Debezium envelopes from a JSON string column into a
     * normalized change-event frame:
-    * (key, op I/U/D, lsn, ts_ms, payload struct — after-image, or
-    * before-image for deletes). Snapshot reads ('r') normalize to I. */
+    * (key, op, lsn, ts_ms, payload struct — after-image, or
+    * before-image for deletes). Creates ('c') and snapshot reads ('r')
+    * normalize to I, updates ('u') to U and deletes ('d') to D; any other
+    * op passes through unchanged, so the I/U/D fold downstream rejects it
+    * by name instead of applying it as an insert. Records without a key
+    * (truncates, messages) are dropped. */
   def parseEnvelope(df: DataFrame, jsonCol: String, row: StructType,
                     keyField: String): DataFrame = {
     val env = from_json(col(jsonCol), envelopeSchema(row))
+    val op = col("_e.op")
     df.withColumn("_e", env)
       .select(
         coalesce(col(s"_e.after.$keyField"), col(s"_e.before.$keyField")).as("key"),
-        when(col("_e.op") === "d", "D")
-          .when(col("_e.op") === "u", "U")
-          .otherwise("I").as("op"),
+        when(op === "c" || op === "r", "I")
+          .when(op === "u", "U")
+          .when(op === "d", "D")
+          .otherwise(op).as("op"),
         col("_e.source.lsn").as("lsn"),
         col("_e.ts_ms").as("ts_ms"),
         coalesce(col("_e.after"), col("_e.before")).as("payload"))

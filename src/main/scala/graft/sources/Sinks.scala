@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sinks (reference: jdbc-sink-connector-config.json — upsert-mode sink
@@ -14,33 +14,26 @@ import org.apache.spark.sql.functions._
   * reconciliation read of one bucket touches one directory (partition
   * pruning as an index). The bucket is Spark's own hash partition of
   * the key, `pmod(hash(key), buckets)` (Murmur3, as `HashPartitioning`
-  * and `bucketBy` use). CdcStream's lake writes each version into a
-  * fresh directory through [[bucketedWriter]], with no overwrite. */
+  * and `bucketBy` use). CdcStream's streaming lake is not written here:
+  * it publishes whole flat versions into fresh directories. */
 object Sinks {
 
   /** Write a keyed snapshot partitioned by hash-bucket of the key.
     * `buckets` should be sized so one bucket ≈ one comfortable task
-    * (at 100 TB: thousands). */
+    * (at 100 TB: thousands). `_bucket = pmod(hash(key), buckets)` is the
+    * partition id of `repartition(buckets, key)`, so each write task
+    * holds one bucket and writes one file, with no second exchange after
+    * a fold already partitioned that way. */
   def writeSnapshot(snapshot: DataFrame, keyCol: String, path: String,
                     buckets: Int): Unit =
-    bucketedWriter(snapshot, keyCol, buckets)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(path)
-
-  /** `snapshot` with `_bucket = pmod(hash(key), buckets)`, the partition
-    * id of `repartition(buckets, key)`, as a writer partitioned by
-    * `_bucket`: one task, one bucket and one file, and no second exchange
-    * after a fold already partitioned that way. A write into a fresh
-    * directory needs nothing more; [[writeSnapshot]] adds the dynamic
-    * overwrite that replaces existing buckets. */
-  private[graft] def bucketedWriter(snapshot: DataFrame, keyCol: String,
-                                    buckets: Int): DataFrameWriter[Row] =
     snapshot
       .withColumn("_bucket", pmod(hash(col(keyCol)), lit(buckets)))
       .repartition(buckets, col(keyCol))
       .write
       .partitionBy("_bucket")
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .parquet(path)
 
   /** Write a catalog table bucketed + sorted on the join key — the
     * co-located-join layout: two tables bucketed the same way join with

@@ -44,9 +44,10 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   * CDC apply has one mechanism: `streamApplyToLakeOf`, the Debezium
   * sink. It is a stateless foreachBatch whose target holds the state.
   * Each micro-batch folds its raw events with the lake's newest version
-  * (`CdcOps.opFoldOf`, batch `applyLogOf`'s fold) and
-  * publishes the next whole version through [[publishVersion]], as the
-  * recon digest state does. Deleted keys stay as tombstones
+  * (`CdcOps.opFoldOf`, batch `applyLogOf`'s fold) over one key
+  * exchange and publishes the next whole version, flat parquet sized by
+  * adaptive execution, through [[publishVersion]], as the recon digest
+  * state does. Deleted keys stay as tombstones
   * (`last_op = 'D'`); [[readLake]] returns them, live readers filter
   * `last_op <> 'D'`. stream_cdc_apply replays the events table into a
   * scratch lake and returns it tombstones included.
@@ -592,13 +593,12 @@ object CdcStream {
       |GROUP BY 1, 2 ORDER BY n_name, op""".stripMargin
 
   /** End-to-end streaming pipeline: change events → foreachBatch →
-    * versioned bucket-partitioned lake; see [[streamApplyToLakeOf]].
+    * versioned parquet lake; see [[streamApplyToLakeOf]].
     * Returns the live snapshot read back from the lake. StreamingSpec
     * asserts it equals the batch latest-state. */
-  def streamApplyToLake(spark: SparkSession, dir: String, path: String,
-                        buckets: Int = 16): DataFrame = {
+  def streamApplyToLake(spark: SparkSession, dir: String, path: String): DataFrame = {
     val (stream, _, _) = stageFeed(spark, dir, "events")
-    streamApplyToLakeOf(spark, toChangeEvents(stream), path, buckets)
+    streamApplyToLakeOf(spark, toChangeEvents(stream), path)
   }
 
   /** [[streamApplyToLake]] over ANY streaming change-event frame
@@ -611,18 +611,19 @@ object CdcStream {
     * empty one included, folds its raw events with the lake's newest
     * version once per key (last-writer-wins, `CdcOps.opFoldOf`) and
     * publishes the fold as version newest + 1 ([[publishVersion]]): a
-    * whole lake of [[KeyState]]s partitioned by `_bucket` in
-    * `path/state_v<n>`. The fold and the write share one exchange: the
-    * fold's input is hash-partitioned on the key into `buckets`
-    * partitions, the lake's bucket function. A version written with
-    * another bucket function reads the same ([[readLake]] drops
-    * `_bucket`) and the next publish rewrites it. An op outside I/U/D
-    * fails the batch and leaves the lake at its previous version. Batch
-    * ids restart at 0 without a checkpoint, so they are not version
-    * numbers. A retry re-folds the same events into an identical version
-    * (the reference's jdbc upsert sink as an idempotent lake sink). A
-    * `path` holding anything but versions fails the batch instead of
-    * being overwritten.
+    * whole lake of [[KeyState]]s, written flat into `path/state_v<n>`.
+    * The fold and the write share one exchange, a hash partition on the
+    * key sized by `spark.sql.shuffle.partitions` that adaptive execution
+    * coalesces by bytes, so a version holds as many files as its data
+    * needs write tasks. `buckets` is ignored: the lake has no bucket
+    * directories. A version written `_bucket=`-partitioned by older code
+    * reads the same ([[readLake]] drops `_bucket`) and the next publish
+    * rewrites it flat. An op outside I/U/D fails the batch and leaves the
+    * lake at its previous version. Batch ids restart at 0 without a
+    * checkpoint, so they are not version numbers. A retry re-folds the
+    * same events into an identical version (the reference's jdbc upsert
+    * sink as an idempotent lake sink). A `path` holding anything but
+    * versions fails the batch instead of being overwritten.
     * Deleted keys stay as (never collected) tombstones, `last_op = 'D'`,
     * so a stale update cannot resurrect them; the returned frame filters
     * them and stays readable until two more versions are published.
@@ -639,17 +640,20 @@ object CdcStream {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val writer = changeEvents.as[ChangeEvent].writeStream
       .foreachBatch { (batch: Dataset[ChangeEvent], batchId: Long) =>
-        // partitioned as the lake buckets, so fold and write share one exchange
+        // one listing per micro-batch: the version to fold, its successor
+        // and the versions to drop after the publish
+        val listed = versions(fs, base)
+        val newest = listed.maxOption
+        // partitioned on the key, so fold and write share one exchange
         val log = batch.select(col("user_id").cast("long"), col("event_id").cast("long"),
             col("op"), col("value").cast("double"))
-          .unionByName(readLake(spark, path).select(col("user_id"),
+          .unionByName(readVersion(spark, base, newest).select(col("user_id"),
             col("last_event_id").as("event_id"), col("last_op").as("op"), col("last_value").as("value")))
-          .repartition(buckets, col("user_id"))
-        val v = versions(fs, base).maxOption.fold(0L)(_ + 1)
-        publishVersion(fs, base, v)(graft.sources.Sinks.bucketedWriter(
-          graft.cdc.CdcOps.opFoldOf(log, "user_id", "event_id", "op", Seq("value")),
-          "user_id", buckets).parquet(_))
-        dropVersionsBelow(fs, base, v - 1)
+          .repartition(col("user_id"))
+        val v = newest.fold(0L)(_ + 1)
+        publishVersion(fs, base, v)(graft.cdc.CdcOps.opFoldOf(
+          log, "user_id", "event_id", "op", Seq("value")).write.parquet(_))
+        dropVersionsBelow(fs, base, v - 1, listed)
         onBatchApplied(batchId)
       }
     val q = checkpoint.fold(writer)(ck => writer.option("checkpointLocation", ck))
@@ -663,10 +667,17 @@ object CdcStream {
     * are published), or an empty frame before the first one. */
   def readLake(spark: SparkSession, path: String): DataFrame = {
     val base = new Path(path)
+    readVersion(spark, base,
+      versions(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base).maxOption)
+  }
+
+  /** Lake version `n` under `base` as [[KeyState]] rows (an empty frame
+    * for none). `_bucket`, the partition column of versions written by
+    * older code, is dropped. */
+  private def readVersion(spark: SparkSession, base: Path, n: Option[Long]): DataFrame = {
     val schema = org.apache.spark.sql.Encoders.product[KeyState].schema
-    versions(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base).maxOption
-      .fold(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))(n =>
-        spark.read.schema(schema).parquet(new Path(base, s"state_v$n").toString).drop("_bucket"))
+    n.fold(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))(n =>
+      spark.read.schema(schema).parquet(new Path(base, s"state_v$n").toString).drop("_bucket"))
   }
 
   private val Version = "(state|_tmp)_v(\\d+)".r
@@ -699,9 +710,10 @@ object CdcStream {
     if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"could not rename $tmp to $dst")
   }
 
-  /** Delete every `state_v<m>` under `base` with m < `keep`. */
-  private def dropVersionsBelow(fs: FileSystem, base: Path, keep: Long): Unit =
-    versions(fs, base).filter(_ < keep).foreach(m => fs.delete(new Path(base, s"state_v$m"), true))
+  /** Delete every `state_v<m>` with m < `keep` among `listed`, the
+    * versions under `base`. */
+  private def dropVersionsBelow(fs: FileSystem, base: Path, keep: Long, listed: Seq[Long]): Unit =
+    listed.filter(_ < keep).foreach(m => fs.delete(new Path(base, s"state_v$m"), true))
 
   /** One fold step of the digest state of stream_recon_digest /
     * stream_recon_incremental: state_v(k) = per-bucket sum-merge of
@@ -739,7 +751,7 @@ object CdcStream {
     // the coalesce each 16-64-row version lands as one part file per
     // shuffle partition, paying dozens of opens per micro-batch
     publishVersion(fs, base, batchId)(merged.coalesce(1).write.parquet(_))
-    dropVersionsBelow(fs, base, batchId - 1)
+    dropVersionsBelow(fs, base, batchId - 1, versions(fs, base))
   }
 
   /** The newest state_v* table under `stateBase` (see

@@ -210,7 +210,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -245,18 +245,19 @@ class PlanSpec extends SparkSpec {
     val p = writes.peek()
     assert(helper.collect(p) { case a: HashAggregateExec => a }.nonEmpty, p)
     assert(helper.collect(p) { case a: SortAggregateExec => a }.isEmpty, p)
-    val exchanges = helper.collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val exchanges = helper.collect(p) { case e: ShuffleExchangeExec => e }
     assert(exchanges.size === 1, p)
-    assert(exchanges.head match {
-      case HashPartitioning(Seq(a: Attribute), 16) => a.name == "user_id"
+    assert(exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "user_id"
       case _ => false
     }, exchanges)
-    // state_v1: every _bucket= directory holds exactly one part file
+    // write tasks: the exchange's partitions as adaptive execution read them
+    val tasks = helper.collect(p) { case r: AQEShuffleReadExec => r.partitionSpecs.size }
+      .headOption.getOrElse(exchanges.head.outputPartitioning.numPartitions)
+    // state_v1 is flat: no _bucket= directory, one part file per write task
     val v1 = new java.io.File(s"$lake/state_v1")
-    val buckets = v1.listFiles().filter(_.getName.startsWith("_bucket="))
-    assert(buckets.length === 16)
-    assert(buckets.forall(_.list().count(_.startsWith("part-")) == 1),
-      buckets.map(b => b.getName -> b.list().count(_.startsWith("part-"))).toSeq)
+    assert(!v1.list().exists(_.startsWith("_bucket=")), v1.list().toSeq)
+    assert(v1.list().count(_.startsWith("part-")) === tasks, v1.list().toSeq)
   }
 
   test("mm_doc_embed: id join broadcasts one side at test scale") {

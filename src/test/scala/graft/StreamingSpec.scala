@@ -359,11 +359,62 @@ class StreamingSpec extends SparkSpec {
     val expected = ((3L to 40L).map(k => graft.streaming.KeyState(k, k, "I", k.toDouble)) ++
       Seq(graft.streaming.KeyState(2, 51, "U", 20.0), graft.streaming.KeyState(41, 52, "I", 41.0))).toSet
     assert(live === expected)
-    // version 1 holds every row, the tombstone included, in its hash bucket
+    // version 1 is republished flat and holds every row, the tombstone included
     val v1 = spark.read.parquet(s"$lake/state_v1")
     assert(v1.count() === 41L)
-    assert(v1.filter(col("_bucket") =!= pmod(hash(col("user_id")), lit(16))).count() === 0L)
+    assert(!v1.columns.contains("_bucket"), v1.columns.toSeq)
+    assert(!new java.io.File(s"$lake/state_v1").list().exists(_.startsWith("_bucket=")))
     assert(new java.io.File(lake).list().toSet === Set("state_v0", "state_v1"))
+  }
+
+  test("streamApplyToLakeOf: a returned frame still reads its version after the next publish") {
+    import spark.implicits._
+    val lake = tempDir("graft-reader-lake") + "/lake"
+    def apply(events: ChangeEvent*): org.apache.spark.sql.DataFrame = {
+      val feed = tempDir("graft-reader-feed") + "/f"
+      events.toDF().coalesce(1).write.parquet(feed)
+      CdcStream.streamApplyToLakeOf(spark,
+        spark.readStream.schema(events.toDF().schema).parquet(feed), lake)
+    }
+    apply((1L to 30L).map(k => ChangeEvent(k, k, "I", k.toDouble, k)): _*)
+    // not collected before the next publish, so the collect below scans state_v1
+    val reader = apply((1L to 30L by 2).map(k => ChangeEvent(100 + k, k, "U", -k.toDouble, 100 + k)): _*)
+    apply((1L to 10L).map(k => ChangeEvent(200 + k, k, "D", 0.0, 200 + k)): _*)
+    assert(new java.io.File(lake).list().toSet === Set("state_v1", "state_v2"))
+    val expected = (1L to 30L).map(k =>
+      if (k % 2 == 1) graft.streaming.KeyState(k, 100 + k, "U", -k.toDouble)
+      else graft.streaming.KeyState(k, k, "I", k.toDouble)).toSet
+    assert(reader.as[graft.streaming.KeyState].collect().toSet === expected)
+  }
+
+  test("streamApplyToLakeOf: a Debezium envelope with an unknown op fails the batch, naming it") {
+    import spark.implicits._
+    val lake = tempDir("graft-dbzop-lake") + "/lake"
+    def env(op: String, key: Long, lsn: Long): String =
+      s"""{"before":null,"after":{"order_id":$key,"customer_id":1,"amount":$key.5,""" +
+        s""""timestamp":null,"batch_id":null},"source":{"lsn":$lsn},"op":"$op","ts_ms":$lsn}"""
+    def apply(lines: String*): Unit = {
+      val feed = tempDir("graft-dbzop-feed")
+      java.nio.file.Files.write(java.nio.file.Paths.get(feed, "feed.json"),
+        lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val parsed = graft.sources.DebeziumJson.parseEnvelope(
+        spark.readStream.text(feed), "value", graft.sources.DebeziumJson.ordersRow, "order_id")
+      CdcStream.streamApplyToLakeOf(spark, parsed.select(col("lsn").as("event_id"),
+        col("key").as("user_id"), col("op"), col("payload.amount").as("value"),
+        (col("ts_ms") * 1000L).as("ts_us")), lake)
+      ()
+    }
+    apply(env("r", 1, 1), env("c", 2, 2))
+    val before = CdcStream.readLake(spark, lake).as[graft.streaming.KeyState].collect().toSet
+    assert(before === Set(graft.streaming.KeyState(1, 1, "I", 1.5), graft.streaming.KeyState(2, 2, "I", 2.5)))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      apply(env("x", 3, 3), env("u", 1, 4))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unsupported CDC op in op (expected I, U or D): x")),
+      "the failure must name the op")
+    assert(new java.io.File(lake).list().filter(_.startsWith("state_v")).toSet === Set("state_v0"))
+    assert(CdcStream.readLake(spark, lake).as[graft.streaming.KeyState].collect().toSet === before)
   }
 
   test("streamApplyToLakeOf: a failed micro-batch releases its cached input") {
