@@ -16,8 +16,13 @@ change against their BENCHMARK.json bound. Every run that is incorrect,
 fails operations or gives no result is listed. Exit code 1 if any run
 was incorrect or gave no result.
 
+Each run's measured operation times (`op_s` on run.py's `graftbench:` info
+line) are kept too. A run whose every measured op takes at least 1.5x its
+side's median op is counted as slow mode, a whole-JVM slowdown rather than
+noise; the count per side is printed with the flagged seeds.
+
 --seeds takes a comma list and/or ranges: "2-13" or "1,3,5-7".
---out saves every run's result (seed, side, order, exit code, result).
+--out saves every run's result (seed, side, order, exit code, op_s, result).
 """
 import argparse
 import json
@@ -35,8 +40,21 @@ def parse_seeds(text):
     return seeds
 
 
+SLOW_FACTOR = 1.5
+
+
+def op_times(lines):
+    """Measured op times (s) from the `graftbench: workload=... op_s=a,b` line; [] if absent."""
+    for line in lines:
+        if line.startswith("graftbench: workload="):
+            for field in line.split():
+                if field.startswith("op_s=") and len(field) > len("op_s="):
+                    return [float(x) for x in field[len("op_s="):].split(",")]
+    return []
+
+
 def run(checkout, workload, seed, seconds, trace):
-    """One run.py invocation in `checkout`: (exit code, result dict or None)."""
+    """One run.py invocation in `checkout`: (exit code, result dict or None, op times)."""
     proc = subprocess.run(
         [sys.executable, "graftbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", str(trace)],
@@ -46,7 +64,17 @@ def run(checkout, workload, seed, seconds, trace):
         result = json.loads(lines[-1]) if lines else None
     except json.JSONDecodeError:
         result = None
-    return proc.returncode, result
+    return proc.returncode, result, op_times(lines)
+
+
+def slow_mode(runs, side):
+    """(flagged seeds, runs with op times, median op) of `side`: a run is flagged
+    when every measured op is at least SLOW_FACTOR x the side's median op."""
+    timed = [r for r in runs if r["side"] == side and r["op_s"]]
+    if not timed:
+        return [], 0, None
+    med = statistics.median(o for r in timed for o in r["op_s"])
+    return [r["seed"] for r in timed if min(r["op_s"]) >= SLOW_FACTOR * med], len(timed), med
 
 
 def quartiles(xs):
@@ -115,8 +143,9 @@ def main():
             order.reverse()
         got = {}
         for pos, (side, checkout) in enumerate(order):
-            code, result = run(checkout, a.workload, seed, a.seconds, a.trace)
-            runs.append({"seed": seed, "side": side, "first": pos == 0, "exit": code, "result": result})
+            code, result, ops = run(checkout, a.workload, seed, a.seconds, a.trace)
+            runs.append({"seed": seed, "side": side, "first": pos == 0, "exit": code, "op_s": ops,
+                         "result": result})
             broken |= result is None or not result.get("correct")
             if result is None or code != 0 or not result.get("correct") or result.get("failed"):
                 bad.append(f"seed {seed} {side}: exit {code}, "
@@ -133,6 +162,11 @@ def main():
     print(f"{a.workload}: {len(pairs)} pairs, seeds {a.seeds[0]}..{a.seeds[-1]}, trace {a.trace}")
     if pairs:
         report(pairs, dirs, end_to_end)
+    for side in ("parent", "change"):
+        flagged, timed, med = slow_mode(runs, side)
+        if timed:
+            print(f"slow mode {side}: {len(flagged)}/{timed} runs with every op >= {SLOW_FACTOR}x "
+                  f"the side's median op {med:.3f} s" + (f" (seeds {flagged})" if flagged else ""))
     for line in bad:
         print("INCORRECT " + line)
     return 1 if broken else 0

@@ -151,35 +151,34 @@ object Dedup {
       .persist()
   }
 
-  /** Per-bucket candidate pairs: group `rows`' doc_ids by `keyCols`,
-    * drop groups outside [minSz, maxSz] (the oversize guard — those
-    * buckets are boilerplate, not near-dups), and emit every unordered
-    * pair (doc_a < doc_b) of each surviving bucket. One aggregation +
-    * one generate — replaces the bucket SELF-JOIN formulation (window
-    * count → cache → two-sided sort-merge join), which shuffles the
-    * bucket rows once for the window and reads the cache twice. The
-    * capped collect bounds memory per hot bucket; `sorted_pairs` sorts
-    * and dedupes inside the kernel so output is deterministic regardless
-    * of collect order. */
-  private def bucketPairs(rows: DataFrame, keyCols: Seq[String], minSz: Int, maxSz: Int): DataFrame = {
-    import org.apache.spark.sql.graftvec.MinHashExpressions.{collectCapped, sortedPairs}
-    rows
-      // Explicit exchange on the bucket key BEFORE the aggregate: it
-      // splits the kernel-heavy bucket producer (shingle/sketch kernels
-      // + explode) out of the collectCapped object-hash-aggregate's
-      // fused codegen stage, whose combined generated method ran 3-4x
-      // slower than its parts (measured at sf10: fused 88.6s, split
-      // 22.1s, interpreted 29s). Scale-neutral shuffle: the rows are
-      // slim (doc_id + key), and map-side combine was ineffective
-      // anyway — same-bucket rows rarely co-occur in a map partition,
-      // so partial buffers shipped ~the same volume.
-      .repartition(keyCols.map(col): _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(collectCapped(col("doc_id"), maxSz + 1).as("ds"), count(lit(1)).as("sz"))
-      .filter(col("sz") >= minSz && col("sz") <= maxSz)
-      .select(explode(sortedPairs(col("ds"))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+  /** Per-bucket candidate pairs as sorted runs: one hash exchange on the
+    * bucket `key` (non-null), each partition sorted by (key, doc_id),
+    * then one pass ([[org.apache.spark.sql.graftvec.RunPairs]]) that
+    * reads each key's run, counts its true size, drops runs outside
+    * [minSz, maxSz] (the oversize guard — those buckets are boilerplate,
+    * not near-dups) and emits every pair doc_a < doc_b of the run's
+    * distinct doc_ids. Memory per task is one run of at most maxSz ids,
+    * however hot a key. Runs rather than a grouped capped collect: band
+    * rows fall mostly into singleton buckets, and the collect would
+    * allocate, serialise and merge a buffer for each of them, then sort
+    * anyway past Spark's object-hash-aggregate fallback threshold. */
+  private[graft] def bucketPairs(rows: DataFrame, key: Column, minSz: Int, maxSz: Int): DataFrame = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.graftvec.RunPairs
+    rows.select(key.as("k"), col("doc_id"))
+      .repartition(col("k"))
+      .sortWithinPartitions(col("k"), col("doc_id"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.LONG))
+      .mapPartitions(RunPairs(_, minSz, maxSz))(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .toDF("doc_a", "doc_b")
   }
+
+  /** One long bucket key per (band id, band hash): the id in the high
+    * word, the hash in the low one, so the exchange carries one key
+    * column. Injective for hashes in [0, 2^32), which both band families
+    * are (MinHash bands < P, SimHash bands 16 bits). */
+  private def bandKey(bandId: Column, hash: Column): Column =
+    shiftleft(bandId.cast("long"), 32).bitwiseOR(hash)
 
   /** Shared oracle CTEs: planted corpus → word lists → distinct 3-gram
     * shingle hashes per doc (`sh`). DISTINCT is on (doc_id, hash), the
@@ -338,8 +337,10 @@ object Dedup {
     * The whole sketch (64 affine-perm minima folded into 32 band keys)
     * is ONE native codegen node (graftvec.MinHashBands) applied to the
     * per-doc hashed-shingle array — no shingle explode, no shuffle, no
-    * 64-column aggregate: the first shuffle in the plan is the band
-    * buckets' groupBy (32 slim rows per doc). The exploded
+    * 64-column aggregate: the first shuffle in the plan is the band key
+    * exchange of [[bucketPairs]] (32 slim rows per doc). A shingle-less
+    * doc has no bands, so no filter is needed — one on the array would be
+    * pushed below the projection and run the shingle chain twice. The exploded
     * `groupBy(doc_id).agg(64 × min(...))` formulation this replaces
     * shuffled every shingle row and paid a wide HashAggregate — pure
     * overhead when the shingle set is already a per-doc array. */
@@ -347,10 +348,9 @@ object Dedup {
     import org.apache.spark.sql.graftvec.MinHashExpressions.minhashBands
     val bands = docs
       .withColumn("hs", shingles3HashedFromWords(words(col("text"))))
-      .filter(size(col("hs")) > 0) // shingle-less docs have no signature
       .select(col("doc_id"),
         posexplode(minhashBands(col("hs"), NumHashes, NumBands)).as(Seq("band_id", "band_hash")))
-    bucketPairs(bands, Seq("band_id", "band_hash"), 2, 100) // skew cap
+    bucketPairs(bands, bandKey(col("band_id"), col("band_hash")), 2, 100) // skew cap
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
       .filter(col("n_shared_bands") >= 2)
@@ -768,25 +768,27 @@ object Dedup {
     * over the per-doc words array — the exploded form (explode words →
     * 64 conditional-sum aggregate columns → pack) shuffled every word
     * row and paid a 64-column aggregate for a per-doc-computable value.
-    * sigs is tiny (doc_id + one long) and is persisted: it feeds the
-    * band explode plus both hamming-confirm joins. */
+    * sigs is tiny (doc_id, word count, one long) and is persisted: it
+    * feeds the band explode plus both hamming-confirm joins. */
   def simhashPairsOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftvec.MinHashExpressions.simhash64
     val sigs = docs
-      .withColumn("ws", words(col("text")))
+      .select(col("doc_id"), words(col("text")).as("ws"))
+      .select(col("doc_id"), size(col("ws")).as("n_ws"), simhash64(col("ws"), SimSalt).as("simhash"))
+      .persist()
       // Explode semantics: null AND empty word arrays produce no signature.
       // (SimHash64 over an empty array would be 0 for every such doc —
       // they would all band-match each other.) size(null) is null → filtered.
-      .filter(size(col("ws")) > 0)
-      .select(col("doc_id"), simhash64(col("ws"), SimSalt).as("simhash"))
-      .persist()
+      // Filtered after the persist: on the words, Catalyst would push it
+      // below the projection and split every doc's text twice.
+      .filter(col("n_ws") > 0)
     val bandCols = (0 until 4).map { k =>
       struct(lit(k).as("band_id"),
         shiftrightunsigned(col("simhash"), k * 16).bitwiseAND(0xFFFFL).as("band_key"))
     }
     val bands = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band_id"), col("bb.band_key"))
-    val cand = bucketPairs(bands, Seq("band_id", "band_key"), 2, 100).distinct()
+    val cand = bucketPairs(bands, bandKey(col("band_id"), col("band_key")), 2, 100).distinct()
     cand
       .join(sigs.select(col("doc_id").as("doc_a"), col("simhash").as("sim_a")), Seq("doc_a"))
       .join(sigs.select(col("doc_id").as("doc_b"), col("simhash").as("sim_b")), Seq("doc_b"))

@@ -1106,9 +1106,9 @@ object Similarity {
     // The census repartitions BEFORE aggregating: the cache-fill pass
     // for `sigs` is whatever stage materializes it first, and fusing
     // the signature kernel + explode with a partial aggregate produces
-    // the oversized generated method measured 3-4x slower than its
-    // parts (the bucketPairs finding); the exchange keeps the
-    // kernel-heavy producer stage clean.
+    // an oversized generated method, measured 3-4x slower than its
+    // parts on the MinHash band aggregate at sf10 (fused 88.6 s, split
+    // 22.1 s); the exchange keeps the kernel-heavy producer stage clean.
     val okBuckets = sigs.repartition(col("t"), col("sig"))
       .groupBy(col("t"), col("sig"))
       .agg(count(lit(1)).as("bs"))

@@ -477,7 +477,6 @@ object CdcStream {
     import graft.operators.Dedup
     Dedup.corpusOf(docs) // stateless plant expansion — same corpus as the batch family
       .withColumn("hs", shingles3HashedFromWords(words(col("text"))))
-      .filter(size(col("hs")) > 0)
       .select(col("doc_id"),
         posexplode(minhashBands(col("hs"), Dedup.NumHashes, Dedup.NumBands))
           .as(Seq("band_id", "band_hash")))

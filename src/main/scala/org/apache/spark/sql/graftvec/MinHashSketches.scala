@@ -54,8 +54,9 @@ object SketchPerms {
   * no shuffle at all. The DuckDB oracle replays the exploded form
   * (Dedup.dedupMinhashSql), which is arithmetic-identical.
   *
-  * Input must be non-empty (callers filter `size(hs) > 0`, matching the
-  * oracle's implicit drop of shingle-less docs).
+  * Empty in, empty out: an array with no (non-null) hash has no bands,
+  * so `posexplode` drops a shingle-less doc exactly as the oracle's
+  * per-doc aggregate never sees one, with no filter on the array.
   */
 case class MinHashBands(child: Expression, numHashes: Int, numBands: Int, salt: Int)
     extends UnaryExpression with ExpectsInputTypes {
@@ -85,6 +86,7 @@ case class MinHashBands(child: Expression, numHashes: Int, numBands: Int, salt: 
 
 object MinHashOps {
   private final val P = SketchPerms.P
+  private val Empty = new GenericArrayData(Array.empty[Any])
 
   def bands(hs: ArrayData, a: Array[Long], b: Array[Long], numBands: Int): ArrayData = {
     val nH = a.length
@@ -92,9 +94,11 @@ object MinHashOps {
     val mins = new Array[Long](nH)
     java.util.Arrays.fill(mins, Long.MaxValue)
     val n = hs.numElements()
+    var seen = false
     var i = 0
     while (i < n) {
       if (!hs.isNullAt(i)) {
+        seen = true
         val h = hs.getLong(i)
         var j = 0
         while (j < nH) {
@@ -105,6 +109,7 @@ object MinHashOps {
       }
       i += 1
     }
+    if (!seen) return Empty
     val bands = new Array[Long](numBands)
     var bi = 0
     while (bi < numBands) {
@@ -273,6 +278,58 @@ object PairOps {
     }
     new GenericArrayData(out)
   }
+}
+
+/** The pair expansion of LSH buckets as sorted runs: one pass over a
+  * partition sorted by (key, id), in which each maximal run of one key
+  * is a bucket. A run whose true size (every row, repeated and null ids
+  * included) lies in [minSz, maxSz] yields every pair (a < b) of its
+  * distinct ids; any other run yields nothing. The pass holds at most
+  * maxSz ids however hot a key is: an oversized run is counted, never
+  * buffered past the cap. The pairs are those of a capped collect per
+  * key (`collect_capped(id, maxSz + 1)` beside `count(*)`, sized, then
+  * `sorted_pairs`), without an aggregation buffer per bucket.
+  */
+object RunPairs {
+  def apply(rows: Iterator[(Long, java.lang.Long)], minSz: Int, maxSz: Int): Iterator[(Long, Long)] =
+    new Iterator[(Long, Long)] {
+      private val in = rows.buffered
+      private val ids = new Array[Long](maxSz)
+      private var d = 0 // distinct ids of the current run
+      private var a = 0 // next pair: (ids(a), ids(b))
+      private var b = 1
+
+      def hasNext: Boolean = {
+        while (b >= d && in.hasNext) nextRun()
+        b < d
+      }
+
+      def next(): (Long, Long) = {
+        if (!hasNext) throw new NoSuchElementException("no pair left")
+        val p = (ids(a), ids(b))
+        b += 1
+        if (b == d) { a += 1; b = a + 1 }
+        p
+      }
+
+      private def nextRun(): Unit = {
+        val key = in.head._1
+        var n = 0L
+        d = 0
+        while (in.hasNext && in.head._1 == key) {
+          val id = in.next()._2
+          n += 1
+          // ids arrive sorted, so a repeat is the previous distinct id
+          if (id != null && n <= maxSz && (d == 0 || ids(d - 1) != id.longValue)) {
+            ids(d) = id
+            d += 1
+          }
+        }
+        if (n < minSz || n > maxSz) d = 0
+        a = 0
+        b = 1
+      }
+    }
 }
 
 /** Count of the most frequent word bigram in a words array — the core

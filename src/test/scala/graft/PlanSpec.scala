@@ -122,6 +122,46 @@ class PlanSpec extends SparkSpec {
     assert(plan(Dedup.dedupSimhash(spark, sf)).contains("simhash64("))
   }
 
+  /** Occurrences of `fn(` across the expressions of every node of `p`
+    * (through adaptive plans, counted once however often they print). */
+  private def callsOf(p: org.apache.spark.sql.execution.SparkPlan, fn: String): Int = {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    helper.flatMap(p)(_.expressions).map(e => s"\\b$fn\\(".r.findAllIn(e.toString).size).sum
+  }
+
+  test("minhashPairsOf: shingle chain once, sorted bucket runs, three exchanges") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = Dedup.minhashPairsOf(Dedup.corpus(spark, sf))
+    val p = df.queryExecution.executedPlan
+    assert(callsOf(p, "shingles3_hashed") === 1, p)
+    assert(!p.toString.contains("ObjectHashAggregate"), p)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val exchanges = helper.collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning match {
+      case HashPartitioning(es, _) =>
+        es.map { case a: Attribute => a.name; case e => e.sql }.mkString("hash(", ",", ")")
+      case _: RangePartitioning => "range"
+      case o => o.toString
+    } }
+    // the band key, the pair count, the presentation sort
+    assert(exchanges.sorted === Seq("hash(doc_a,doc_b)", "hash(k)", "range"), p)
+  }
+
+  test("simhashPairsOf: the persisted signature pass splits each text once") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // plain documents: the planted corpus adds a split of its own
+    val docs = graft.core.Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val cached = helper.collect(Dedup.simhashPairsOf(docs).queryExecution.executedPlan) {
+      case s: InMemoryTableScanExec => s.relation.cachedPlan
+    }
+    assert(cached.nonEmpty)
+    cached.foreach(c => assert(callsOf(c, "split") === 1, c))
+  }
+
   test("text_repetition is map-only up to the presentation sort") {
     val p = plan(TextAnalysis.textRepetition(spark, sf))
     assert(p.contains("top_bigram_count("))

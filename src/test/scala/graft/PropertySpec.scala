@@ -138,6 +138,30 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("bucketPairs equals collect_capped + sorted_pairs per bucket (random multisets)") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftvec.MinHashExpressions.{collectCapped, sortedPairs}
+    import graft.operators.Dedup
+    // hot keys (runs around the cap, repeated ids) among rare ones (singletons)
+    val keyGen = Gen.frequency(4 -> Gen.chooseNum(0L, 30L), 1 -> Gen.chooseNum(100L, 600L))
+    val idGen = Gen.frequency(30 -> Gen.chooseNum(0L, 40L).map(Option(_)), 1 -> Gen.const(None))
+    val rowsGen = Gen.listOfN(500, Gen.zip(keyGen, idGen))
+    for (seed <- 1 to 6) {
+      val maxSz = 10 + seed % 4
+      val df = sample(rowsGen, seed).toDF("k", "doc_id")
+      val got = Dedup.bucketPairs(df, col("k"), 2, maxSz).as[(Long, Long)].collect().sorted.toSeq
+      val sizes = df.groupBy(col("k")).count().collect().map(_.getLong(1))
+      assert(sizes.exists(_ > maxSz) && sizes.exists(n => n >= 2 && n <= maxSz), s"seed $seed")
+      val want = df.groupBy(col("k"))
+        .agg(collectCapped(col("doc_id"), maxSz + 1).as("ds"), count(lit(1)).as("sz"))
+        .filter(col("sz") >= 2 && col("sz") <= maxSz)
+        .select(explode(sortedPairs(col("ds"))).as("p"))
+        .select(col("p.doc_a"), col("p.doc_b"))
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(want.nonEmpty && got === want, s"seed $seed")
+    }
+  }
+
   test("saltedJoin is equivalent to plain join for any salt count (random data)") {
     import spark.implicits._
     val bigGen = Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(1L, 4L), Gen.chooseNum(0, 100)))

@@ -52,6 +52,16 @@ class SketchKernelSpec extends SparkSpec {
     assert(native.exceptAll(declarative).isEmpty && declarative.exceptAll(native).isEmpty)
   }
 
+  test("minhash_bands: empty in, empty out") {
+    // spark.range keeps the kernel in generated code (no constant folding)
+    val df = spark.range(4).select(col("id"),
+      minhashBands(when(col("id") % 2 === 0, typedLit(Seq.empty[Long]))
+        .otherwise(array(col("id"))), Dedup.NumHashes, Dedup.NumBands).as("b"))
+    val got = df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).size).toMap
+    assert(got === Map(0L -> 0, 1L -> Dedup.NumBands, 2L -> 0, 3L -> Dedup.NumBands))
+    assert(df.select(posexplode(col("b"))).count() === 2L * Dedup.NumBands)
+  }
+
   test("simhash64 equals the exploded 64-bit-vote aggregate") {
     val native = docsWithWords
       .select(col("doc_id"), simhash64(col("ws"), Dedup.SimSalt).as("simhash"))
@@ -103,6 +113,23 @@ class SketchKernelSpec extends SparkSpec {
       assert(n === 2L && ds.length === 2) // below cap: complete
       assert(ds === (1 to 6).filter(_ % 3 == g).map(_.toLong).sorted)
     }
+  }
+
+  test("bucketPairs: runs in [minSz, maxSz] pair their distinct ids; others yield nothing") {
+    import spark.implicits._
+    val rows = Seq(
+      (1L, 13L), (1L, 10L), (1L, 12L), (1L, 11L), // exactly maxSz rows: expanded
+      (2L, 20L), (2L, 21L), (2L, 22L), (2L, 23L), (2L, 23L), // maxSz + 1 with a repeat: dropped
+      (3L, 30L), (3L, 31L), (3L, 30L), // a repeat counts, never pairs with itself
+      (4L, 40L), // singleton
+      (5L, 50L), (5L, 50L) // size 2, one distinct id: no pair
+    ).toDF("k", "doc_id")
+      // a null id counts toward its run's size: 4 ids + null = maxSz + 1
+      .union(Seq((6L, 60L), (6L, 61L), (6L, 62L), (6L, 63L)).toDF("k", "doc_id"))
+      .union(spark.range(1).select(lit(6L).as("k"), lit(null).cast("long").as("doc_id")))
+    val got = Dedup.bucketPairs(rows, col("k"), 2, 4).as[(Long, Long)].collect().sorted.toSeq
+    assert(got === Seq((10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L), (11L, 13L), (12L, 13L),
+      (30L, 31L)))
   }
 
   test("word_bigrams equals the zip_with-over-slices HOF form") {
