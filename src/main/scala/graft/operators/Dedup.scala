@@ -24,7 +24,7 @@ import graft.functions.TextFunctions._
 object Dedup {
 
   /** Modulus shared by every portable sketch hash in this family. */
-  private[graft] val P = 1000000007L
+  private[graft] final val P = org.apache.spark.sql.graftvec.SketchPerms.P
 
   /** DuckDB twin of the base token hash (graftvec.PolyHash — already in
     * [0, P)): one list_reduce over the string's characters. The Spark
@@ -854,64 +854,6 @@ object Dedup {
 
   // ---- Duplicate clustering (connected components) ------------------------
 
-  /** Rounds the last [[connectedComponentsOf]] call took to converge —
-    * observability for the O(log n) bound (DedupSpec asserts a long
-    * path converges in far fewer rounds than its diameter). */
-  private[graft] val ccLastRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Degree above which a node is split into chained virtual nodes
-    * before the CC loop (see [[connectedComponentsOf]]). 2^17 keeps the
-    * largest single-task neighborhood ≈ 131k ids (~3 MB boxed) — far
-    * under executor memory, far over every gate/bench graph (whose
-    * total edge counts are smaller, so the split machinery is skipped
-    * entirely there). Mutable only for specs, which exercise the split
-    * on tiny graphs by lowering it. */
-  private[graft] val ccSplitDegree = new java.util.concurrent.atomic.AtomicInteger(1 << 17)
-
-  /** Hub nodes split by the last [[connectedComponentsOf]] call —
-    * observability for the splitting path (0 = machinery skipped or no
-    * hub found). Cumulative across split rounds. */
-  private[graft] val ccLastSplitHubs = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Split rounds the last call ran (0 = no split; > 1 = the fan cap
-    * bound and the pass iterated). */
-  private[graft] val ccLastSplitRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Max pigeonhole candidates a single partition may emit to the
-    * driver in the narrow census (see [[connectedComponentsOf]]). The
-    * candidate set is otherwise bounded only by 2|E|/(localT+1) — an
-    * adversarial near-threshold degree distribution (many nodes just
-    * above ⌊T/nPart⌋ locally, all below T globally) could push tens of
-    * millions of ids into the driver collect while the REAL hub roster
-    * stays tiny. A partition that overflows the cap sets a flag instead
-    * of emitting the tail, and the round falls back to the full
-    * exact census (the 2|E| combiner shuffle — correct, bounded
-    * executor memory, and paid only on such distributions). 4·fanCap
-    * keeps the worst-case collect at nPart·4096 primitive longs while
-    * leaving real corpora (candidates ≈ hubs ≪ cap) on the narrow
-    * path. Mutable only for specs. */
-  private[graft] val ccCensusCandCap = new java.util.concurrent.atomic.AtomicInteger(4096)
-
-  /** Pigeonhole candidates collected across the last call's census
-    * rounds — observability for the driver-collect bound. */
-  private[graft] val ccLastCensusCands = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Census rounds of the last call whose candidate emission
-    * overflowed [[ccCensusCandCap]] and therefore paid the full 2|E|
-    * census (degenerate-geometry rounds — localT < 64 — take the same
-    * fallback but are the pre-existing path and are not counted). */
-  private[graft] val ccLastCensusOverflow = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Max virtual nodes per split hub per round. Caps the id arithmetic
-    * (virtual id = base + hubIndex·fanCap + j) and bounds the chain
-    * star a split hub keeps (≤ fanCap edges). When the cap binds — a
-    * 10⁹-degree hub still lands ~10⁶ ids per virtual node after one
-    * round — the splitting pass ITERATES, splitting the over-threshold
-    * virtual nodes again (≤ 4 rounds covers degree ~T·1024⁴ ≈ 10²³).
-    * Mutable only for specs, which force multi-round splitting on tiny
-    * graphs by lowering it. */
-  private[graft] val ccSplitFanCap = new java.util.concurrent.atomic.AtomicInteger(1024)
-
   /** fmix64 (MurmurHash3 finalizer) route of an opposite endpoint into
     * [0, fan), SEEDED by the hub's virtual base: raw `id % fan`
     * residues of strided or block-allocated id spaces (every doc_id a
@@ -956,8 +898,8 @@ object Dedup {
     * edge set. At 100 TB the partition count scales with the edge
     * count (~500k edges/partition) and per-round persists would become
     * reliable checkpoints every few rounds. Hub skew past
-    * [[ccSplitDegree]] is handled by pre-loop high-degree node
-    * splitting (see the block below) — proven at 3·10⁶-member planted
+    * [[componentsWithStats]]'s `splitDegree` is handled by pre-loop
+    * high-degree node splitting — proven at 3·10⁶-member planted
     * stars (CC_SPLIT in HUB_SF1.json); below the threshold a
     * high-degree star center is exactly the shape the algorithm
     * contracts first.
@@ -968,7 +910,55 @@ object Dedup {
     * round was the identity. One tiny fold per round decides
     * termination (ids must be non-negative, which doc ids are), and at
     * the fixpoint every component is a star centered on its minimum. */
-  def connectedComponentsOf(pairs: DataFrame): DataFrame = {
+  def connectedComponentsOf(pairs: DataFrame): DataFrame =
+    componentsWithStats(pairs)._1
+
+  /** What one [[componentsWithStats]] call did:
+    *  - `rounds`: star rounds to converge, the O(log n) bound;
+    *  - `splitRounds`: high-degree split rounds (0 = no split; > 1 =
+    *    the fan cap bound and the pass iterated);
+    *  - `splitHubs`: hub nodes split, summed over split rounds;
+    *  - `censusCands`: pigeonhole candidates collected to the driver,
+    *    summed over census rounds;
+    *  - `censusOverflows`: census rounds whose candidate emission
+    *    overflowed `censusCandCap` and so paid the full 2|E| census
+    *    (degenerate-geometry rounds, localT < 64, take the same
+    *    fallback but are not counted). */
+  private[graft] case class CcStats(
+      rounds: Int, splitRounds: Int, splitHubs: Int,
+      censusCands: Int, censusOverflows: Int)
+
+  /** [[connectedComponentsOf]] with its limits as parameters and what
+    * it did as its result.
+    *
+    * @param splitDegree degree above which a node is split into chained
+    *   virtual nodes before the CC loop. 2^17 keeps the largest
+    *   single-task neighborhood ≈ 131k ids (~3 MB boxed): far under
+    *   executor memory, far over every gate/bench graph, whose total
+    *   edge counts are smaller, so the split machinery is skipped
+    *   entirely there.
+    * @param fanCap max virtual nodes per split hub per round. It caps
+    *   the id arithmetic (virtual id = base + hubIndex·fanCap + j) and
+    *   bounds the chain star a split hub keeps. When it binds (a
+    *   10⁹-degree hub still lands ~10⁶ ids per virtual node after one
+    *   round) the splitting pass iterates, splitting the over-threshold
+    *   virtual nodes again (≤ 4 rounds cover degree ~T·1024⁴ ≈ 10²³).
+    * @param censusCandCap max pigeonhole candidates one partition may
+    *   emit to the driver in the narrow census. The candidate set is
+    *   otherwise bounded only by 2|E|/(localT+1): an adversarial
+    *   near-threshold degree distribution (many nodes just above
+    *   ⌊T/nPart⌋ locally, all below T globally) could push tens of
+    *   millions of ids into the driver collect while the real hub
+    *   roster stays tiny. A partition that overflows the cap sets a
+    *   flag instead of emitting the tail, and the round falls back to
+    *   the full exact census. 4·fanCap keeps the worst-case collect at
+    *   nPart·4096 longs while real corpora (candidates ≈ hubs ≪ cap)
+    *   stay on the narrow path. */
+  private[graft] def componentsWithStats(
+      pairs: DataFrame,
+      splitDegree: Long = 1L << 17,
+      fanCap: Long = 1024L,
+      censusCandCap: Int = 4096): (DataFrame, CcStats) = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val raw = pairs.select(col("doc_a"), col("doc_b")).as[(Long, Long)].rdd
@@ -994,7 +984,7 @@ object Dedup {
     // concentrates a component's whole edge set there (HUB_SF1 priced
     // 5.3·10⁵ as fine; past ~10⁶ the single task becomes the straggler,
     // at 10⁸ an OOM). Mitigation: any node whose degree exceeds
-    // [[ccSplitDegree]] is salted into ≤ [[ccSplitFanCap]] virtual
+    // `splitDegree` is salted into ≤ `fanCap` virtual
     // nodes — each incident edge re-hangs off virtual node
     // base + hubIdx·fanCap + fanRoute(otherEndpoint), and the real node
     // keeps a fan-sized star to its virtual nodes — so connectivity is
@@ -1027,19 +1017,15 @@ object Dedup {
     // emitters still produce local roots of degree ~group/StarSalt —
     // unbounded at the 10⁸-copy groups this pass exists for — so the
     // census stays inside the operator where it cannot be lied to.
-    val splitT = ccSplitDegree.get().toLong
-    val fanCap = ccSplitFanCap.get().toLong
     var virtBase = Long.MaxValue
-    ccLastSplitHubs.set(0)
-    ccLastCensusCands.set(0)
-    ccLastCensusOverflow.set(0)
+    var splitHubs = 0
+    var censusCands = 0
+    var censusOverflows = 0
     var splitRound = 0
-    ccLastSplitRounds.set(0)
-    var moreHubs = edgeCount > splitT
+    var moreHubs = edgeCount > splitDegree
     while (moreHubs && splitRound < 4) {
       val nPartE = edges.getNumPartitions
-      val localT = splitT / nPartE
-      val candCap = ccCensusCandCap.get()
+      val localT = splitDegree / nPartE
       // full exact census: the 2|E| combiner shuffle — the fallback
       // when pigeonhole filtering can't run (degenerate geometry) or
       // would flood the driver (candidate-cap overflow)
@@ -1047,7 +1033,7 @@ object Dedup {
         val hubs = edges
           .flatMap { case (a, b) => Iterator((a, 1L), (b, 1L)) }
           .reduceByKey(part, _ + _)
-          .filter(_._2 > splitT)
+          .filter(_._2 > splitDegree)
           .collect()
         (edges.map(_._1).fold(0L)(math.max), hubs)
       }
@@ -1065,21 +1051,21 @@ object Dedup {
             val over = deg.iterator
               .collect { case (u, d) if d > localT => (u, d) }.toArray
             // bounded emission: a partition crowded with near-threshold
-            // local degrees emits only its top-candCap by local degree
+            // local degrees emits only its top-censusCandCap by local degree
             // plus an overflow flag — the driver collect stays ≤
-            // nPart·candCap primitive longs no matter the distribution
+            // nPart·censusCandCap primitive longs no matter the distribution
             val cand =
-              if (over.length <= candCap) over.map(_._1)
-              else over.sortBy(-_._2).take(candCap).map(_._1)
-            Iterator.single((mx, cand, over.length > candCap))
+              if (over.length <= censusCandCap) over.map(_._1)
+              else over.sortBy(-_._2).take(censusCandCap).map(_._1)
+            Iterator.single((mx, cand, over.length > censusCandCap))
           }.collect()
           val mx = partStats.foldLeft(0L)((m, p) => math.max(m, p._1))
           if (partStats.exists(_._3)) {
             // a truncated partition could hide a true hub below its
-            // top-candCap (the pigeonhole guarantee names only ONE
+            // top-censusCandCap (the pigeonhole guarantee names only ONE
             // partition where a hub exceeds localT) — soundness needs
             // the full census here
-            ccLastCensusOverflow.incrementAndGet()
+            censusOverflows += 1
             fullCensus()
           } else {
             // dedup + sort into a primitive array; membership below is
@@ -1093,7 +1079,7 @@ object Dedup {
               i += 1
             }
             val cands = java.util.Arrays.copyOf(sorted, n)
-            ccLastCensusCands.addAndGet(n)
+            censusCands += n
             if (cands.isEmpty) (mx, Array.empty[(Long, Long)])
             else {
               val bcC = spark.sparkContext.broadcast(cands)
@@ -1105,7 +1091,7 @@ object Dedup {
                     (if (java.util.Arrays.binarySearch(cs, b) >= 0) Iterator((b, 1L))
                      else Iterator.empty)
                 }
-              }.reduceByKey(_ + _).filter(_._2 > splitT).collect()
+              }.reduceByKey(_ + _).filter(_._2 > splitDegree).collect()
               bcC.unpersist(blocking = false)
               (mx, hubs)
             }
@@ -1120,11 +1106,11 @@ object Dedup {
       if (hubArr.isEmpty) moreHubs = false
       else {
         splitRound += 1
-        ccLastSplitHubs.set(ccLastSplitHubs.get() + hubArr.length)
+        splitHubs += hubArr.length
         val base = maxId + 1L
         if (virtBase == Long.MaxValue) virtBase = base
-        // The hub roster is bounded by construction (degree > splitT
-        // caps it at 2|E|/splitT entries — ~76k at 10¹⁰ edges), so it
+        // The hub roster is bounded by construction (degree > splitDegree
+        // caps it at 2|E|/splitDegree entries — ~76k at 10¹⁰ edges), so it
         // lives on the DRIVER, sorted by hub id: virtual bases are a
         // pure function of the sorted roster, never of shuffle order
         // (a zipWithIndex over shuffled partitions could re-index on a
@@ -1145,7 +1131,7 @@ object Dedup {
             // 10⁸: slack 182 vs σ 362). The 1/64 margin is ≥ 6σ there
             // and grows with d, so the non-binding split converges in
             // ONE round; when fanCap binds the cap dominates anyway.
-            val fan = math.min(fanCap, d / (splitT - splitT / 64L) + 1L)
+            val fan = math.min(fanCap, d / (splitDegree - splitDegree / 64L) + 1L)
             (u, (base + idx.toLong * fanCap, fan))
           }.toMap
         val bc = spark.sparkContext.broadcast(hubMapLocal)
@@ -1191,7 +1177,7 @@ object Dedup {
         // CC loop provably absorbs it: single-task neighborhoods are
         // priced fine to ~5·10⁵, 4× the default threshold.)
         moreHubs = hubArr.exists { case (_, d) =>
-          d / (splitT - splitT / 64L) + 1L >= fanCap
+          d / (splitDegree - splitDegree / 64L) + 1L >= fanCap
         }
         // bc stays referenced by split's lineage and is reclaimed by
         // the ContextCleaner with it; a recompute through the lineage
@@ -1199,7 +1185,6 @@ object Dedup {
         // retry can no longer mis-wire the graph.
       }
     }
-    ccLastSplitRounds.set(splitRound)
 
     def endpointSum(e: org.apache.spark.rdd.RDD[(Long, Long)]): Long =
       e.map { case (u, v) => u + v }.fold(0L)(_ + _)
@@ -1257,7 +1242,6 @@ object Dedup {
       edges.unpersist(blocking = false)
       edges = ss
     }
-    ccLastRounds.set(rounds)
     // at the fixpoint each component is a star (leaf, center=min);
     // centers label themselves. The labels stay persisted via `edges`:
     // downstream consumes them more than once (sizes + join) and a
@@ -1269,10 +1253,11 @@ object Dedup {
     // never needs rewriting. virtBase is Long.MaxValue when no split
     // ran — the filter is a no-op then.
     val realBound = virtBase // stable val for the task closure
-    edges.flatMap { case (v, m) => Iterator((v, m), (m, m)) }
+    val labels = edges.flatMap { case (v, m) => Iterator((v, m), (m, m)) }
       .reduceByKey(part, math.min(_: Long, _: Long))
       .filter { case (v, _) => v < realBound }
       .toDF("doc_id", "cluster_id")
+    (labels, CcStats(rounds, splitRound, splitHubs, censusCands, censusOverflows))
   }
 
   /** The duplicate edge set of the planted corpus: exact-duplicate

@@ -69,7 +69,7 @@ object CdcStream {
     try {
       java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
         .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Per-call scratch whose contents may be LAZILY scanned after the
     * call returns (versioned parquet state, replay output, symlink feed

@@ -38,8 +38,6 @@ case class KmvDistinct(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[KmvBuffer] with ExpectsInputTypes {
 
-  private val P = 1000000007L
-
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
@@ -60,7 +58,7 @@ case class KmvDistinct(
 
   override def eval(buf: KmvBuffer): Any =
     if (buf.size < k) buf.size.toLong
-    else (k - 1).toLong * P / (buf.kth + 1L)
+    else (k - 1).toLong * SketchPerms.P / (buf.kth + 1L)
 
   override def serialize(buf: KmvBuffer): Array[Byte] = buf.toBytes
   override def deserialize(bytes: Array[Byte]): KmvBuffer = KmvBuffer.fromBytes(k, bytes)

@@ -18,7 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * constants. MinHash uses j = 0..63; SimHash decorrelates with a +100
   * salt. */
 object SketchPerms {
-  val P = 1000000007L
+  /** A literal `final val`, so scalac inlines it and the kernels' `% P`
+    * divides by a compile-time constant the JIT can strength-reduce. */
+  final val P = 1000000007L
 
   def perm(j: Int): (Long, Long) = {
     val x = (j * 2654435761L + 104729L) % P
@@ -85,7 +87,7 @@ case class MinHashBands(child: Expression, numHashes: Int, numBands: Int, salt: 
 }
 
 object MinHashOps {
-  private final val P = SketchPerms.P
+  import SketchPerms.P
   private val Empty = new GenericArrayData(Array.empty[Any])
 
   def bands(hs: ArrayData, a: Array[Long], b: Array[Long], numBands: Int): ArrayData = {
@@ -163,8 +165,7 @@ case class SimHash64(child: Expression, salt: Int)
 }
 
 object SimHashOps {
-  private final val P = SketchPerms.P
-  private final val M = 1000000007L
+  import SketchPerms.P
   private final val B = 131L
 
   private def polyHash(w: UTF8String): Long = {
@@ -172,7 +173,7 @@ object SimHashOps {
     var acc = 0L
     var i = 0
     while (i < bytes.length) {
-      acc = (acc * B + (bytes(i) & 0xFF)) % M
+      acc = (acc * B + (bytes(i) & 0xFF)) % P
       i += 1
     }
     acc

@@ -60,16 +60,19 @@ class CoverageSpec extends AnyFunSuite {
       s"queries with only a rows>0 check (add an oracle or justify): ${rowsOnly.mkString(", ")}")
   }
 
+  /** Every library source file, keyed by its path under src/main/scala. */
+  private def mainSources: Map[String, String] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p)).toMap
+    finally walk.close()
+  }
+
   test("only Bench, Verify and ScaleGen are entry points or read the environment") {
     // measurement harnesses live in graftbench/; a library main or a
     // per-tool environment knob under src/main/scala fails here
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val text = {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p)).toMap
-      finally walk.close()
-    }
+    val text = mainSources
     val allowed = Set("graft/Bench.scala", "graft/Verify.scala", "graft/tools/ScaleGen.scala")
     val mains = text.collect { case (f, t) if "def main\\s*\\(".r.findFirstIn(t).nonEmpty => f }
     val envReads = text.collect {
@@ -78,5 +81,15 @@ class CoverageSpec extends AnyFunSuite {
     assert(mains.toSet === allowed)
     assert((envReads.toSet -- allowed).isEmpty,
       s"environment read outside the entry points: ${(envReads.toSet -- allowed).toSeq.sorted}")
+  }
+
+  test("no process-global atomics in the library") {
+    // per-call statistics come back from the call: a process-global
+    // counter is overwritten by any concurrent call, and a global cap
+    // changes every other call in the JVM
+    val atomics = mainSources.collect {
+      case (f, t) if t.contains("java.util.concurrent.atomic") => f
+    }
+    assert(atomics.isEmpty, s"process-global atomics in: ${atomics.toSeq.sorted}")
   }
 }

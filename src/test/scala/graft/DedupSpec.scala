@@ -10,6 +10,35 @@ class DedupSpec extends SparkSpec {
       .filter(col("doc_id") % mod === 0).select("doc_id")
       .collect().map(_.getLong(0)).map(d => (d, d + offset)).toSet
 
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Driver-side union-find with min-root labels over the endpoints of
+    * `edges`: the reference the connected-components cases compare to. */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(v => v -> find(v)).toMap
+  }
+
+  // two 40-degree stars joined by a hub-hub edge (the double-rewrite
+  // path), a chain hanging off one leaf, and a separate component
+  private val twoHubGraph: Seq[(Long, Long)] = {
+    val star1 = (1L to 40L).map(i => (100L, 100L + i))
+    val star2 = (1L to 40L).map(i => (500L, 500L + i))
+    val bridge = Seq((100L, 500L))
+    val chain = (0L until 5L).map(i => (101L + 60 * i, 101L + 60 * (i + 1)))
+    val other = Seq((9000L, 9001L), (9001L, 9002L))
+    star1 ++ star2 ++ bridge ++ chain ++ other
+  }
+
   test("dedup_exact: exactly the planted copies, cluster size 2") {
     val res = Dedup.dedupExact(spark, sf).collect()
     val planted = plantedPairs(17, 1000000L)
@@ -263,11 +292,10 @@ class DedupSpec extends SparkSpec {
     // worst case for min-label propagation: a path needs diameter
     // rounds (255 here); star contraction must stay logarithmic
     val path = (0L until 255L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val lab = Dedup.connectedComponentsOf(path).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (labels, stats) = Dedup.componentsWithStats(path)
+    val lab = labelsOf(labels)
     assert(lab.size === 256 && lab.values.forall(_ === 0L))
-    val rounds = Dedup.ccLastRounds.get()
-    assert(rounds <= 16, s"expected O(log 256) star rounds, got $rounds")
+    assert(stats.rounds <= 16, s"expected O(log 256) star rounds, got ${stats.rounds}")
   }
 
   test("connectedComponentsOf: random graphs match driver-side union-find") {
@@ -277,45 +305,24 @@ class DedupSpec extends SparkSpec {
       val n = 60
       val edges = (1 to 120).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      // reference: driver-side union-find with min-root labels
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-        .map(v => v -> find(v.toInt).toLong).toMap
-      val got = Dedup.connectedComponentsOf(edges.toDF("doc_a", "doc_b")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"trial $trial")
+      val got = labelsOf(Dedup.connectedComponentsOf(edges.toDF("doc_a", "doc_b")))
+      assert(got === unionFindLabels(edges), s"trial $trial")
     }
   }
 
   test("connectedComponentsOf: high-degree node splitting is semantically invisible") {
     import spark.implicits._
-    // two 40-degree stars joined by a hub-hub edge (the double-rewrite
-    // path), a chain hanging off one leaf, and a separate component;
-    // with the threshold lowered both hubs must split, and the labels
-    // must be bit-identical to the unsplit run
-    val star1 = (1L to 40L).map(i => (100L, 100L + i))
-    val star2 = (1L to 40L).map(i => (500L, 500L + i))
-    val bridge = Seq((100L, 500L))
-    val chain = (0L until 5L).map(i => (101L + 60 * i, 101L + 60 * (i + 1)))
-    val other = Seq((9000L, 9001L), (9001L, 9002L))
-    val edges = (star1 ++ star2 ++ bridge ++ chain ++ other).toDF("doc_a", "doc_b")
-    val want = Dedup.connectedComponentsOf(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.ccLastSplitHubs.get() === 0) // default threshold untouched
-    val saved = Dedup.ccSplitDegree.get()
-    try {
-      Dedup.ccSplitDegree.set(8)
-      val got = Dedup.connectedComponentsOf(edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.ccLastSplitHubs.get() >= 2, "both hubs must split")
-      assert(got === want, "split run must match unsplit labels exactly")
-      assert(got.keys.forall(_ <= 9002L), "no virtual scaffolding in output")
-    } finally Dedup.ccSplitDegree.set(saved)
+    // with the threshold lowered both hubs of the two-hub graph must
+    // split, and the labels must be bit-identical to the unsplit run
+    val edges = twoHubGraph.toDF("doc_a", "doc_b")
+    val (unsplit, unsplitStats) = Dedup.componentsWithStats(edges)
+    val want = labelsOf(unsplit)
+    assert(unsplitStats.splitHubs === 0) // default threshold
+    val (split, stats) = Dedup.componentsWithStats(edges, splitDegree = 8)
+    val got = labelsOf(split)
+    assert(stats.splitHubs >= 2, "both hubs must split")
+    assert(got === want, "split run must match unsplit labels exactly")
+    assert(got.keys.forall(_ <= 9002L), "no virtual scaffolding in output")
   }
 
   test("connectedComponentsOf: fan-capped splitting iterates and stays invisible") {
@@ -326,20 +333,13 @@ class DedupSpec extends SparkSpec {
     val star = (1L to 64L).map(i => (7L, 100L + i))
     val tail = Seq((164L, 200L), (200L, 201L)) // hang a path off a leaf
     val edges = (star ++ tail).toDF("doc_a", "doc_b")
-    val want = Dedup.connectedComponentsOf(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val savedT = Dedup.ccSplitDegree.get()
-    val savedF = Dedup.ccSplitFanCap.get()
-    try {
-      Dedup.ccSplitDegree.set(4)
-      Dedup.ccSplitFanCap.set(2)
-      val got = Dedup.connectedComponentsOf(edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.ccLastSplitHubs.get() > 1,
-        "fan cap 2 must force multiple split rounds (cumulative hubs > 1)")
-      assert(got === want, "iterated split must match unsplit labels exactly")
-      assert(got.keys.forall(_ <= 201L), "no virtual scaffolding in output")
-    } finally { Dedup.ccSplitDegree.set(savedT); Dedup.ccSplitFanCap.set(savedF) }
+    val want = labelsOf(Dedup.connectedComponentsOf(edges))
+    val (split, stats) = Dedup.componentsWithStats(edges, splitDegree = 4, fanCap = 2)
+    val got = labelsOf(split)
+    assert(stats.splitHubs > 1,
+      "fan cap 2 must force multiple split rounds (cumulative hubs > 1)")
+    assert(got === want, "iterated split must match unsplit labels exactly")
+    assert(got.keys.forall(_ <= 201L), "no virtual scaffolding in output")
   }
 
   test("connectedComponentsOf: narrow census fast path engages and splits exactly") {
@@ -353,18 +353,13 @@ class DedupSpec extends SparkSpec {
     val star = (1L to 400L).map(i => (5L, 1000L + i))
     val path = (0L until 4L).map(i => (8000L + i, 8001L + i))
     val edges = (star ++ path).toDF("doc_a", "doc_b").repartition(2)
-    val want = Dedup.connectedComponentsOf(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val saved = Dedup.ccSplitDegree.get()
-    try {
-      Dedup.ccSplitDegree.set(256)
-      val got = Dedup.connectedComponentsOf(edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.ccLastSplitHubs.get() >= 1, "the 400-degree hub must split")
-      assert(Dedup.ccLastSplitRounds.get() >= 1)
-      assert(got === want, "fast-path split must match unsplit labels exactly")
-      assert(got.keys.forall(_ <= 8004L), "no virtual scaffolding in output")
-    } finally Dedup.ccSplitDegree.set(saved)
+    val want = labelsOf(Dedup.connectedComponentsOf(edges))
+    val (split, stats) = Dedup.componentsWithStats(edges, splitDegree = 256)
+    val got = labelsOf(split)
+    assert(stats.splitHubs >= 1, "the 400-degree hub must split")
+    assert(stats.splitRounds >= 1)
+    assert(got === want, "fast-path split must match unsplit labels exactly")
+    assert(got.keys.forall(_ <= 8004L), "no virtual scaffolding in output")
   }
 
   test("connectedComponentsOf: hubless graph above the edge guard skips splitting via the narrow census") {
@@ -374,15 +369,41 @@ class DedupSpec extends SparkSpec {
     // split round) and labels must be the plain path contraction
     val path = (0L until 400L).map(i => (i, i + 1))
     val edges = path.toDF("doc_a", "doc_b").repartition(2)
-    val saved = Dedup.ccSplitDegree.get()
+    val (labels, stats) = Dedup.componentsWithStats(edges, splitDegree = 256)
+    val lab = labelsOf(labels)
+    assert(stats.splitHubs === 0, "no hub may be reported")
+    assert(stats.splitRounds === 0)
+    assert(lab.size === 401 && lab.values.forall(_ === 0L))
+  }
+
+  test("componentsWithStats: two concurrent calls each get their own stats") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val path = (0L until 255L).map(i => (i, i + 1))
+    val pathDf = path.toDF("doc_a", "doc_b")
+    val hubDf = twoHubGraph.toDF("doc_a", "doc_b")
+    def pathCall() = { val (l, s) = Dedup.componentsWithStats(pathDf); (labelsOf(l), s) }
+    def hubCall() = {
+      val (l, s) = Dedup.componentsWithStats(hubDf, splitDegree = 8); (labelsOf(l), s)
+    }
+    val (_, pathAlone) = pathCall()
+    val (_, hubAlone) = hubCall()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
-      Dedup.ccSplitDegree.set(256)
-      val lab = Dedup.connectedComponentsOf(edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.ccLastSplitHubs.get() === 0, "no hub may be reported")
-      assert(Dedup.ccLastSplitRounds.get() === 0)
-      assert(lab.size === 401 && lab.values.forall(_ === 0L))
-    } finally Dedup.ccSplitDegree.set(saved)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val pathF = Future(pathCall())
+      val hubF = Future(hubCall())
+      val (pathLab, pathStats) = Await.result(pathF, 5.minutes)
+      val (hubLab, hubStats) = Await.result(hubF, 5.minutes)
+      assert(pathStats === pathAlone)
+      assert(hubStats === hubAlone)
+      assert(pathStats.splitHubs === 0)
+      assert(pathStats.rounds <= 16, s"expected O(log 256) star rounds, got ${pathStats.rounds}")
+      assert(hubStats.splitHubs >= 2, "both hubs must split")
+      assert(pathLab === unionFindLabels(path))
+      assert(hubLab === unionFindLabels(twoHubGraph))
+    } finally pool.shutdown()
   }
 
   test("dedupFamily: one labeling, every derived frame equals its standalone operator") {
@@ -413,35 +434,28 @@ class DedupSpec extends SparkSpec {
     val hubStar = (0 until 300).map(j => (5L, 500000L + j))
     val path = (0L until 4L).map(i => (8000L + i, 8001L + i))
     val edges = (medium ++ hubStar ++ path).toDF("doc_a", "doc_b").repartition(2)
-    val want = Dedup.connectedComponentsOf(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val savedT = Dedup.ccSplitDegree.get()
-    val savedC = Dedup.ccCensusCandCap.get()
-    try {
-      Dedup.ccSplitDegree.set(128)
-      Dedup.ccCensusCandCap.set(2)
-      val got = Dedup.connectedComponentsOf(edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.ccLastCensusOverflow.get() >= 1, "overflow must pay the exact census")
-      assert(Dedup.ccLastCensusCands.get() === 0,
-        "no candidate flood may reach the driver on the overflow path")
-      assert(Dedup.ccLastSplitHubs.get() >= 1, "the true hub must still split")
-      assert(got === want, "overflow-path labels must match the unsplit run exactly")
-      assert(got.keys.forall(_ <= 500299L), "no virtual scaffolding in output")
-      // same graph, default cap: the narrow path must carry it — the
-      // bounded collect holds the ~41 candidates, the exact count
-      // kills the 40 mediums (global degree = splitT, not above), and
-      // labels are unchanged
-      Dedup.ccCensusCandCap.set(savedC)
-      val got2 = Dedup.connectedComponentsOf(edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.ccLastCensusOverflow.get() === 0, "default cap must never overflow here")
-      assert(Dedup.ccLastCensusCands.get() >= 1)
-      assert(Dedup.ccLastCensusCands.get() <= 2 * 41,
-        "collect must be bounded by the real candidate population")
-      assert(Dedup.ccLastSplitHubs.get() >= 1)
-      assert(got2 === want)
-    } finally { Dedup.ccSplitDegree.set(savedT); Dedup.ccCensusCandCap.set(savedC) }
+    val want = labelsOf(Dedup.connectedComponentsOf(edges))
+    val (split, stats) =
+      Dedup.componentsWithStats(edges, splitDegree = 128, censusCandCap = 2)
+    val got = labelsOf(split)
+    assert(stats.censusOverflows >= 1, "overflow must pay the exact census")
+    assert(stats.censusCands === 0,
+      "no candidate flood may reach the driver on the overflow path")
+    assert(stats.splitHubs >= 1, "the true hub must still split")
+    assert(got === want, "overflow-path labels must match the unsplit run exactly")
+    assert(got.keys.forall(_ <= 500299L), "no virtual scaffolding in output")
+    // same graph, default cap: the narrow path must carry it — the
+    // bounded collect holds the ~41 candidates, the exact count
+    // kills the 40 mediums (global degree = splitDegree, not above),
+    // and labels are unchanged
+    val (split2, stats2) = Dedup.componentsWithStats(edges, splitDegree = 128)
+    val got2 = labelsOf(split2)
+    assert(stats2.censusOverflows === 0, "default cap must never overflow here")
+    assert(stats2.censusCands >= 1)
+    assert(stats2.censusCands <= 2 * 41,
+      "collect must be bounded by the real candidate population")
+    assert(stats2.splitHubs >= 1)
+    assert(got2 === want)
   }
 
   test("dedup_containment: thresholds hold and every planted exact copy is a containment-1.0 pair") {
