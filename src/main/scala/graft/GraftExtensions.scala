@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftvec.{CharPairs, CollectCapped, KmvDistinct, LshSignatures, MinHashBands, PolyHash, QuantizedDot, Shingles3, Shingles3Hashed, SimHash64, SortedPairs, TopBigramCount, WordBigrams, WordLines}
+import org.apache.spark.sql.graftvec.{CharPairs, KmvDistinct, LshSignatures, MinHashBands, PolyHash, QuantizedDot, Shingles3, Shingles3Hashed, SimHash64, TopBigramCount, WordBigrams, WordLines}
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions as SQL functions, so `spark.sql("... qdot(a, b) ...")`
@@ -67,11 +67,6 @@ object GraftExtensions {
         ""),
       (children: Seq[Expression]) => SimHash64(children(0),
         intArg(children(1), "simhash64.salt"))),
-    (FunctionIdentifier("sorted_pairs"),
-      new ExpressionInfo(classOf[SortedPairs].getName, null, "sorted_pairs",
-        "sorted_pairs(ds) - all unordered (a < b) pairs over the distinct elements of a BIGINT array",
-        ""),
-      (children: Seq[Expression]) => SortedPairs(children.head)),
     (FunctionIdentifier("word_bigrams"),
       new ExpressionInfo(classOf[WordBigrams].getName, null, "word_bigrams",
         "word_bigrams(words) - all adjacent word bigrams (' '-joined, duplicates preserved); empty for arrays shorter than 2",
@@ -93,14 +88,6 @@ object GraftExtensions {
         "top_bigram_count(words) - occurrence count of the most frequent adjacent-word bigram",
         ""),
       (children: Seq[Expression]) => TopBigramCount(children.head)),
-    (FunctionIdentifier("collect_capped"),
-      new ExpressionInfo(classOf[CollectCapped].getName, null, "collect_capped",
-        "collect_capped(v, cap) - collect_list of BIGINTs capped at cap elements (bounded memory per group). " +
-          "Once a group exceeds cap, WHICH elements survive is partition-order dependent (nondeterministic run to run); " +
-          "pair with count(*) and treat groups where count > cap as truncated (graft's dedup pipelines discard them).",
-        ""),
-      (children: Seq[Expression]) => CollectCapped(children(0),
-        intArg(children(1), "collect_capped.cap")).toAggregateExpression()),
     (FunctionIdentifier("shingles_k_hashed_seq"),
       new ExpressionInfo(classOf[org.apache.spark.sql.graftvec.ShinglesKHashedSeq].getName,
         null, "shingles_k_hashed_seq",

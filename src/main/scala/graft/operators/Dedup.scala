@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftvec.RunPairs
 
 import graft.core.Tables
 import graft.functions.TextFunctions._
@@ -120,58 +122,60 @@ object Dedup {
   private[graft] def corpusShingles(spark: SparkSession, dir: String): DataFrame =
     shinglesOf(corpus(spark, dir))
 
-  /** Rare-shingle doc-id groups (frequency-capped), persisted: one
-    * groupBy(h) aggregation of the hashed shingle rows — the ONLY
-    * shuffle of the full shingle set. Each surviving row is the complete
-    * doc list of one rare shingle; pair candidates explode from it via
-    * `sorted_pairs` (no bucket self-join, no window sort) and per-doc
-    * rare-set sizes re-explode from the same cached groups.
+  /** Rare-shingle doc-id groups, persisted: the sorted distinct doc ids
+    * of each shingle hash held by 2 to ShingleFreqCap docs, from one
+    * [[bucketRuns]] pass over the hashed shingle rows — the ONLY shuffle
+    * of the full shingle set. Candidate pairs expand from each group
+    * through the pair loop the LSH buckets use, and per-doc rare-set
+    * sizes re-explode the same cached groups.
     *
     * Shingles travel as their portable polyhash (8-byte longs): the
     * DuckDB oracle applies the identical hash, so the rare multiset —
     * collisions included — is identical on both sides.
     *
-    * The collect is CAPPED at ShingleFreqCap+1 (graftvec.CollectCapped):
-    * groups above the cap are boilerplate shingles and are dropped by
-    * the df filter anyway, so the aggregation buffer stays O(cap) per
-    * key no matter how hot the shingle — a plain collect_list of a
-    * billion-doc stopword shingle is an executor OOM at 100 TB. `df` is
-    * the exact count, so every kept list is complete. */
-  private[graft] def rareShingleGroups(spark: SparkSession, dir: String): DataFrame =
+    * Memory stays bounded however hot a shingle is: the pass holds at
+    * most ShingleFreqCap ids of one run and only counts the rest, so a
+    * billion-doc stopword shingle is counted past the cap and dropped,
+    * never buffered (a plain collect_list of it is an executor OOM at
+    * 100 TB). A run is read whole before it is sized, so every kept
+    * group is complete. */
+  private[graft] def rareShingleGroups(spark: SparkSession, dir: String): Dataset[Array[Long]] =
     rareShingleGroupsOf(corpusShingles(spark, dir))
 
-  private[graft] def rareShingleGroupsOf(shingles: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftvec.MinHashExpressions.collectCapped
-    shingles
-      .groupBy(col("h"))
-      .agg(collectCapped(col("doc_id"), ShingleFreqCap + 1).as("ds"),
-        count(lit(1)).as("df"))
-      .filter(col("df") >= 2 && col("df") <= ShingleFreqCap)
-      .select(col("ds"))
-      .persist()
-  }
+  private[graft] def rareShingleGroupsOf(shingles: DataFrame): Dataset[Array[Long]] =
+    bucketRuns(shingles, col("h"), 2, ShingleFreqCap).persist()
 
-  /** Per-bucket candidate pairs as sorted runs: one hash exchange on the
-    * bucket `key` (non-null), each partition sorted by (key, doc_id),
-    * then one pass ([[org.apache.spark.sql.graftvec.RunPairs]]) that
-    * reads each key's run, counts its true size, drops runs outside
-    * [minSz, maxSz] (the oversize guard — those buckets are boilerplate,
-    * not near-dups) and emits every pair doc_a < doc_b of the run's
-    * distinct doc_ids. Memory per task is one run of at most maxSz ids,
-    * however hot a key. Runs rather than a grouped capped collect: band
-    * rows fall mostly into singleton buckets, and the collect would
+  private val PairEncoder = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+  private val RunEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+
+  /** Per-bucket doc-id runs: one hash exchange on the bucket `key`
+    * (non-null), each partition sorted by the key alone (a single long
+    * key takes Spark's radix sort; a run's ids are sorted in the pass,
+    * at most maxSz of them), then one pass
+    * ([[org.apache.spark.sql.graftvec.RunPairs]]) that reads each key's
+    * run, counts its true size and yields the run's sorted distinct
+    * doc_ids when that size is in [minSz, maxSz]. Runs outside it are
+    * dropped (the oversize guard — those buckets are boilerplate, not
+    * near-dups). Memory per task is one run of at most maxSz ids,
+    * however hot a key. Runs rather than a grouped collect: bucket rows
+    * fall mostly into singleton buckets, and a grouped collect would
     * allocate, serialise and merge a buffer for each of them, then sort
     * anyway past Spark's object-hash-aggregate fallback threshold. */
-  private[graft] def bucketPairs(rows: DataFrame, key: Column, minSz: Int, maxSz: Int): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.graftvec.RunPairs
+  private[graft] def bucketRuns(rows: DataFrame, key: Column, minSz: Int, maxSz: Int): Dataset[Array[Long]] =
+    sortedByKey(rows, key).mapPartitions(RunPairs.runs(_, minSz, maxSz))(RunEncoder)
+
+  /** Candidate pairs doc_a < doc_b of every run [[bucketRuns]] yields,
+    * expanded in the same task as the runs are read. */
+  private[graft] def bucketPairs(rows: DataFrame, key: Column, minSz: Int, maxSz: Int): DataFrame =
+    sortedByKey(rows, key)
+      .mapPartitions(it => RunPairs.pairs(RunPairs.runs(it, minSz, maxSz)))(PairEncoder)
+      .toDF("doc_a", "doc_b")
+
+  private def sortedByKey(rows: DataFrame, key: Column): Dataset[(Long, java.lang.Long)] =
     rows.select(key.as("k"), col("doc_id"))
       .repartition(col("k"))
-      .sortWithinPartitions(col("k"), col("doc_id"))
+      .sortWithinPartitions(col("k"))
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.LONG))
-      .mapPartitions(RunPairs(_, minSz, maxSz))(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .toDF("doc_a", "doc_b")
-  }
 
   /** One long bucket key per (band id, band hash): the id in the high
     * word, the hash in the low one, so the exchange carries one key
@@ -217,13 +221,13 @@ object Dedup {
     * where a sort would be wasted work).
     *
     * Both branches read the cached rare-shingle GROUPS: the intersection
-    * count explodes each group's pair set (`sorted_pairs`) and counts
-    * per pair; the per-doc rare-set size re-explodes the group members.
-    * Only the full shingle set's groupBy shuffles big data — the pair
-    * and size aggregates shuffle candidate-bounded slim rows. (The
-    * previous bucket self-join formulation computed the same pairs via
-    * a window count + cached two-sided sort-merge join — one more wide
-    * shuffle and two extra cache passes; measured slower.) */
+    * count expands each group's pairs through the bucket pair loop and
+    * counts per pair; the per-doc rare-set size re-explodes the group
+    * members. Only the full shingle set's exchange on h shuffles big
+    * data — the pair and size aggregates shuffle candidate-bounded slim
+    * rows. (The previous bucket self-join formulation computed the same
+    * pairs via a window count + cached two-sided sort-merge join — one
+    * more wide shuffle and two extra cache passes; measured slower.) */
   private[graft] def jaccardPairs(spark: SparkSession, dir: String,
                                   minJaccard: Double = 0.35d): DataFrame =
     interSizePairs(spark, dir)
@@ -236,12 +240,10 @@ object Dedup {
   private[graft] def interSizePairs(spark: SparkSession, dir: String): DataFrame =
     interSizePairsOf(rareShingleGroups(spark, dir))
 
-  private[graft] def interSizePairsOf(grouped: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftvec.MinHashExpressions.sortedPairs
-    val sizes = grouped.select(explode(col("ds")).as("doc_id"))
+  private[graft] def interSizePairsOf(groups: Dataset[Array[Long]]): DataFrame = {
+    val sizes = groups.toDF("ds").select(explode(col("ds")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = grouped.select(explode(sortedPairs(col("ds"))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+    val inter = groups.mapPartitions(RunPairs.pairs)(PairEncoder).toDF("doc_a", "doc_b")
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), Seq("doc_a"))
@@ -267,7 +269,7 @@ object Dedup {
     * don't alias as containment hits. Jaccard rides along so
     * downstream can split true near-dups (high j) from proper
     * subset/superset pairs (low j). Scale shape = dedup_ngram_jaccard:
-    * candidate-bounded slim rows after one groupBy(h); reference
+    * candidate-bounded slim rows after one exchange on h; reference
     * semantics: verify_replication.py's notion of "row contained in
     * the other table" generalized to shingle sets. */
   def dedupContainment(spark: SparkSession, dir: String): DataFrame =
@@ -2179,19 +2181,10 @@ object Dedup {
     * Determinism: the decile is (10·inter) DIV union — EXACT integer
     * arithmetic on exact set sizes; no double touches a bucket
     * boundary. The cumulative window runs over ≤ 11 pre-aggregated
-    * rows. Same pair machinery as dedup_ngram_jaccard (rare-shingle
-    * groups, capped), just unfiltered. */
+    * rows. The pairs are dedup_ngram_jaccard's ([[interSizePairs]] over
+    * the capped rare-shingle groups), just unfiltered. */
   def dedupThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftvec.MinHashExpressions.sortedPairs
-    val grouped = rareShingleGroups(spark, dir)
-    val sizes = grouped.select(explode(col("ds")).as("doc_id"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = grouped.select(explode(sortedPairs(col("ds"))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    val hist = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), Seq("doc_b"))
+    val hist = interSizePairs(spark, dir)
       .withColumn("union_sh", col("n_a") + col("n_b") - col("inter"))
       .withColumn("decile", expr("(10 * inter) DIV union_sh"))
       .groupBy(col("decile")).agg(count(lit(1)).as("n_pairs"))

@@ -34,7 +34,7 @@ object Similarity {
     dot.cast("double") / sqrt(na.cast("double") * nb.cast("double"))
 
   /** Embeddings with doubled vector + precomputed quantized squared norm. */
-  private def vecs(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def vecs(spark: SparkSession, dir: String): DataFrame = {
     val v = toDouble(col("embedding"))
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), v.as("v"))
@@ -95,9 +95,14 @@ object Similarity {
     * quantized-cosine ≥ 0.30 re-check — the SemDeDup shape. The label
     * self-join of the previous formulation compared N²/labels pairs
     * (quadratic in the corpus — 100× the pairs at 10× the data,
-    * measured); here candidate enumeration is grouped pair expansion
-    * over capped buckets (never a self-join), so shuffle and pair count
-    * are ∝ corpus × tables with bounded per-bucket fan-out. Recall is
+    * measured); here candidates come from the sorted-run bucket pass
+    * ([[Dedup.bucketPairs]], never a self-join), so shuffle and pair
+    * count are ∝ corpus × tables with bounded per-bucket fan-out. The
+    * bucket key is one exact long: the label's position among the
+    * distinct labels above bit 16 (a null label its own bucket, as under
+    * a groupBy), the table id in bits 12–15 and the signature
+    * (< 2^[[EmbBitsMax]]) below. Exact, not hashed: two merged buckets
+    * could cross the cap together and drop pairs. Recall is
     * banding-bounded and rises steeply with similarity (≥ 99.9% at
     * cos 0.9, the dup regime; the 0.30-tail is deliberately sampled —
     * embed_sim_hist is the calibration curve for that trade). All 16
@@ -105,25 +110,26 @@ object Similarity {
     * .LshSignatures); the oracle replays the identical planes as SQL
     * literals, so both engines see the same buckets bit-for-bit. */
   def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftvec.MinHashExpressions.{collectCapped, sortedPairs}
     import org.apache.spark.sql.graftvec.VectorExpressions.lshSigs
     val e = vecs(spark, dir)
-    // adaptive width from (corpus count, label count) — one bounded
-    // scalar aggregate, the knn_lsh §11 discipline
-    val st = e.agg(count(lit(1)), countDistinct(col("label"))).head()
-    val bits = embBitsFor(st.getLong(0), st.getLong(1))
-    val banded = e.select(col("label"), col("vec_id"),
+    // adaptive width from (corpus count, label count) and the labels
+    // themselves — one bounded aggregate, the knn_lsh §11 discipline
+    val perLabel = e.groupBy(col("label")).count().collect()
+    val labels = perLabel.map(_.get(0)).filter(_ != null)
+    val bits = embBitsFor(perLabel.map(_.getLong(1)).sum, labels.length)
+    // 1-based position of the label, 0 for a null label: a scan of a
+    // literal array, cheap while labels stay a coarse blocking key
+    val labelPos = coalesce(array_position(array(labels.map(lit): _*), col("label")), lit(0L))
+    val banded = e.select(col("vec_id").as("doc_id"), labelPos.as("label_pos"),
       posexplode(lshSigs(col("v"), EmbTables, bits, Dim, EmbBitsMax)).as(Seq("t", "sig")))
-    val cand = banded
-      .groupBy(col("label"), col("t"), col("sig"))
-      .agg(collectCapped(col("vec_id"), EmbBucketCap + 1).as("ds"),
-        count(lit(1)).as("sz"))
-      .filter(col("sz") >= 2 && col("sz") <= EmbBucketCap)
-      .select(col("label"), explode(sortedPairs(col("ds"))).as("p"))
-      .select(col("label"), col("p.doc_a").as("vec_a"), col("p.doc_b").as("vec_b"))
+    val key = shiftleft(col("label_pos"), 16)
+      .bitwiseOR(shiftleft(col("t").cast("long"), EmbBitsMax)).bitwiseOR(col("sig").cast("long"))
+    val cand = Dedup.bucketPairs(banded, key, 2, EmbBucketCap)
       .distinct() // a pair may share a bucket in several tables
+      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
     cand
-      .join(e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na")), Seq("vec_a"))
+      .join(e.select(col("vec_id").as("vec_a"), col("label"), col("v").as("va"), col("nrm").as("na")),
+        Seq("vec_a"))
       .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb")), Seq("vec_b"))
       .withColumn("cos_sim", qcos(qdot(col("va"), col("vb")), col("na"), col("nb")))
       .filter(col("cos_sim") >= 0.30d)
@@ -501,12 +507,6 @@ object Similarity {
       col("cv"), col("cnrm")))
     (index, cbJoin, roster, nprobe, shortlistN)
   }
-
-  /** Exact-vector frame the serving index is built from — [[vecs]]
-    * with the serving index's column naming, package-visible for tests
-    * and measurement only. */
-  private[graft] def exactVecsFor(spark: SparkSession, dir: String): DataFrame =
-    vecs(spark, dir)
 
   def knnIvfPqServe(spark: SparkSession, dir: String)(stream: DataFrame): DataFrame = {
     import spark.implicits._

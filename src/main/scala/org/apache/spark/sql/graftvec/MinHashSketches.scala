@@ -1,11 +1,7 @@
 package org.apache.spark.sql.graftvec
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -208,127 +204,83 @@ object SimHashOps {
   }
 }
 
-/** All unordered pairs (a < b) over the DISTINCT elements of a long
-  * array — the per-bucket pair expansion of LSH / shingle candidate
-  * generation. `explode(sorted_pairs(ds))` after a grouped collect
-  * replaces the bucket SELF-JOIN formulation: same pairs, but one
-  * aggregation instead of a two-sided join on the cached bucket rows
-  * (one fewer shuffle + no sort-merge pass). The input is sorted and
-  * deduped inside the kernel, so the output is deterministic regardless
-  * of collect order. Caller guarantees bounded group size (the bucket
-  * cap); output is O(cap²) per row.
-  */
-case class SortedPairs(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("doc_a", LongType, nullable = false),
-      StructField("doc_b", LongType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_pairs"
-
-  override def nullSafeEval(v: Any): Any =
-    PairOps.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, ds => {
-      val ops = "org.apache.spark.sql.graftvec.PairOps$.MODULE$"
-      s"${ev.value} = $ops.compute($ds);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PairOps {
-  private val Empty = new GenericArrayData(Array.empty[Any])
-
-  def compute(ds: ArrayData): ArrayData = {
-    val n = ds.numElements()
-    if (n < 2) return Empty
-    val vals = new Array[Long](n)
-    var m = 0
-    var i = 0
-    while (i < n) {
-      if (!ds.isNullAt(i)) { vals(m) = ds.getLong(i); m += 1 }
-      i += 1
-    }
-    java.util.Arrays.sort(vals, 0, m)
-    // dedupe in place (sorted)
-    var d = 0
-    i = 0
-    while (i < m) {
-      if (d == 0 || vals(i) != vals(d - 1)) { vals(d) = vals(i); d += 1 }
-      i += 1
-    }
-    if (d < 2) return Empty
-    val out = new Array[Any](d * (d - 1) / 2)
-    var k = 0
-    i = 0
-    while (i < d) {
-      var j = i + 1
-      while (j < d) {
-        out(k) = new GenericInternalRow(Array[Any](vals(i), vals(j)))
-        k += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-/** The pair expansion of LSH buckets as sorted runs: one pass over a
-  * partition sorted by (key, id), in which each maximal run of one key
-  * is a bucket. A run whose true size (every row, repeated and null ids
-  * included) lies in [minSz, maxSz] yields every pair (a < b) of its
-  * distinct ids; any other run yields nothing. The pass holds at most
+/** The bucket pass of LSH and rare-shingle candidate generation, over a
+  * partition sorted by key: each maximal run of one key is a bucket, its
+  * ids in any order. [[runs]] yields the sorted distinct ids of each run
+  * whose true size (every row, repeated and null ids included) lies in
+  * [minSz, maxSz]; any other run yields nothing. The pass holds at most
   * maxSz ids however hot a key is: an oversized run is counted, never
-  * buffered past the cap. The pairs are those of a capped collect per
-  * key (`collect_capped(id, maxSz + 1)` beside `count(*)`, sized, then
-  * `sorted_pairs`), without an aggregation buffer per bucket.
+  * buffered past the cap. [[pairs]] expands each yielded run into every
+  * pair (a < b) of its ids, so a run of d distinct ids gives C(d, 2)
+  * pairs and a singleton or empty run gives none.
   */
 object RunPairs {
-  def apply(rows: Iterator[(Long, java.lang.Long)], minSz: Int, maxSz: Int): Iterator[(Long, Long)] =
-    new Iterator[(Long, Long)] {
+  def runs(rows: Iterator[(Long, java.lang.Long)], minSz: Int, maxSz: Int): Iterator[Array[Long]] =
+    new Iterator[Array[Long]] {
       private val in = rows.buffered
       private val ids = new Array[Long](maxSz)
-      private var d = 0 // distinct ids of the current run
-      private var a = 0 // next pair: (ids(a), ids(b))
+      private var run: Array[Long] = null // the next run to yield
+
+      def hasNext: Boolean = {
+        while (run == null && in.hasNext) run = nextRun()
+        run != null
+      }
+
+      def next(): Array[Long] = {
+        if (!hasNext) throw new NoSuchElementException("no run left")
+        val r = run
+        run = null
+        r
+      }
+
+      /** The current run's distinct ids, or null when its size is out of range. */
+      private def nextRun(): Array[Long] = {
+        val key = in.head._1
+        var n = 0L
+        var m = 0 // ids held
+        while (in.hasNext && in.head._1 == key) {
+          val id = in.next()._2
+          n += 1
+          if (id != null && n <= maxSz) {
+            ids(m) = id
+            m += 1
+          }
+        }
+        if (n < minSz || n > maxSz) return null
+        java.util.Arrays.sort(ids, 0, m)
+        var d = 0 // distinct ids, compacted in place
+        var i = 0
+        while (i < m) {
+          if (d == 0 || ids(d - 1) != ids(i)) { ids(d) = ids(i); d += 1 }
+          i += 1
+        }
+        java.util.Arrays.copyOf(ids, d)
+      }
+    }
+
+  /** Every pair (ds(i), ds(j)), i < j, of each run in turn; the ids of a
+    * run are sorted and distinct, so each pair has a < b. */
+  def pairs(runs: Iterator[Array[Long]]): Iterator[(Long, Long)] =
+    new Iterator[(Long, Long)] {
+      private var ds = Array.emptyLongArray
+      private var a = 0 // next pair: (ds(a), ds(b))
       private var b = 1
 
       def hasNext: Boolean = {
-        while (b >= d && in.hasNext) nextRun()
-        b < d
+        while (b >= ds.length && runs.hasNext) {
+          ds = runs.next()
+          a = 0
+          b = 1
+        }
+        b < ds.length
       }
 
       def next(): (Long, Long) = {
         if (!hasNext) throw new NoSuchElementException("no pair left")
-        val p = (ids(a), ids(b))
+        val p = (ds(a), ds(b))
         b += 1
-        if (b == d) { a += 1; b = a + 1 }
+        if (b == ds.length) { a += 1; b = a + 1 }
         p
-      }
-
-      private def nextRun(): Unit = {
-        val key = in.head._1
-        var n = 0L
-        d = 0
-        while (in.hasNext && in.head._1 == key) {
-          val id = in.next()._2
-          n += 1
-          // ids arrive sorted, so a repeat is the previous distinct id
-          if (id != null && n <= maxSz && (d == 0 || ids(d - 1) != id.longValue)) {
-            ids(d) = id
-            d += 1
-          }
-        }
-        if (n < minSz || n > maxSz) d = 0
-        a = 0
-        b = 1
       }
     }
 }
@@ -385,100 +337,6 @@ object BigramOps {
   }
 }
 
-/** collect_list capped at `cap` elements — the scale-safe collect for
-  * bucket-join candidate generation: a group larger than the bucket cap
-  * is dropped by the caller anyway (boilerplate bucket), so elements
-  * past cap never matter; keeping at most cap bounds aggregation-buffer
-  * memory per group at 8·cap bytes no matter how hot the key is (a
-  * plain collect_list of a 10⁹-doc boilerplate shingle at 100 TB is an
-  * executor OOM). Pair with `count(*)` in the same aggregate to learn
-  * the TRUE group size: if count ≤ cap the list is complete (exact),
-  * if count > cap the group is discarded before the list is read.
-  * Which elements survive past-cap truncation is partition-order
-  * dependent — only the ≤cap (complete) case is deterministic.
-  * TypedImperativeAggregate → map-side partial aggregation, like
-  * [[KmvDistinct]]. */
-case class CollectCapped(
-    child: Expression,
-    cap: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LongListBuffer] with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "collect_capped"
-  override def children: Seq[Expression] = Seq(child)
-
-  override def createAggregationBuffer(): LongListBuffer = new LongListBuffer(cap)
-
-  override def update(buf: LongListBuffer, input: InternalRow): LongListBuffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: LongListBuffer, other: LongListBuffer): LongListBuffer = {
-    buf.addAll(other); buf
-  }
-
-  override def eval(buf: LongListBuffer): Any = buf.toArrayData
-
-  override def serialize(buf: LongListBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): LongListBuffer =
-    LongListBuffer.fromBytes(cap, bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CollectCapped =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CollectCapped =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren.head)
-}
-
-/** Append-only long list capped at `cap` elements. */
-final class LongListBuffer(cap: Int) {
-  private var arr = new Array[Long](math.min(cap, 16))
-  private[graftvec] var n = 0
-
-  def add(v: Long): Unit = {
-    if (n >= cap) return
-    if (n == arr.length) arr = java.util.Arrays.copyOf(arr, math.min(cap, arr.length * 2))
-    arr(n) = v
-    n += 1
-  }
-
-  def addAll(other: LongListBuffer): Unit = {
-    var i = 0
-    while (i < other.n && n < cap) { add(other.arr(i)); i += 1 }
-  }
-
-  private[graftvec] def values: Array[Long] = arr
-
-  def toArrayData: ArrayData = new GenericArrayData(java.util.Arrays.copyOf(arr, n))
-
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * n)
-    bb.putInt(n)
-    var i = 0
-    while (i < n) { bb.putLong(arr(i)); i += 1 }
-    bb.array()
-  }
-}
-
-object LongListBuffer {
-  def fromBytes(cap: Int, bytes: Array[Byte]): LongListBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new LongListBuffer(cap)
-    var i = 0
-    while (i < n) { buf.add(bb.getLong); i += 1 }
-    buf
-  }
-}
-
 /** Column-API surface for the sketch expressions. */
 object MinHashExpressions {
   def minhashBands(hs: Column, numHashes: Int, numBands: Int, salt: Int = 0): Column =
@@ -487,13 +345,6 @@ object MinHashExpressions {
   def simhash64(ws: Column, salt: Int): Column =
     ExpressionUtils.column(SimHash64(ExpressionUtils.expression(ws), salt))
 
-  def sortedPairs(ds: Column): Column =
-    ExpressionUtils.column(SortedPairs(ExpressionUtils.expression(ds)))
-
   def topBigramCount(ws: Column): Column =
     ExpressionUtils.column(TopBigramCount(ExpressionUtils.expression(ws)))
-
-  def collectCapped(c: Column, cap: Int): Column =
-    ExpressionUtils.column(CollectCapped(ExpressionUtils.expression(c), cap)
-      .toAggregateExpression())
 }

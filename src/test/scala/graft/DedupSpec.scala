@@ -127,6 +127,27 @@ class DedupSpec extends SparkSpec {
     assert(missed.isEmpty,
       s"banding missed ${missed.length}/${truth.length} true near-dup pairs: ${missed.take(5).mkString(", ")}")
   }
+
+  test("dedup_embedding: a null label is a bucket of its own") {
+    // four copies of one vector: two keep its label, two have a null
+    // label. Every copy shares every signature, so only the label part
+    // of the bucket key keeps the null pair apart from the labelled one
+    val x = spark.read.parquet(s"$sf/embeddings.parquet").orderBy(col("vec_id")).limit(1)
+    val copies = x.select(col("vec_id"), col("embedding"), col("label"))
+      .unionByName(x.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"), col("label")))
+      .unionByName(x.select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"),
+        lit(null).cast("int").as("label")))
+      .unionByName(x.select((col("vec_id") + 3000000L).as("vec_id"), col("embedding"),
+        lit(null).cast("int").as("label")))
+    val dir = tempDir("graft-embnull")
+    copies.write.parquet(s"$dir/embeddings.parquet")
+    val id = x.select(col("vec_id")).head().getLong(0)
+    val label = x.select(col("label")).head().getInt(0)
+    val got = Similarity.dedupEmbedding(spark, dir)
+      .select(col("label"), col("vec_a"), col("vec_b")).collect()
+      .map(r => (Option(r.get(0)), r.getLong(1), r.getLong(2))).toSet
+    assert(got === Set((Some(label), id, id + 1000000L), (None, id + 2000000L, id + 3000000L)))
+  }
   test("connectedComponentsOf: chains and cycles collapse to min label") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (22L, 20L))

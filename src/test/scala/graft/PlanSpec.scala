@@ -32,13 +32,52 @@ class PlanSpec extends SparkSpec {
 
   test("dedup_embedding: banded LSH candidates, never a label self-join") {
     val p = plan(Similarity.dedupEmbedding(spark, sf))
-    // signatures from the native kernel; pairs from grouped capped-bucket
-    // expansion (sorted_pairs), not an N²/labels self-join; exact re-check
-    // through the native qdot
+    // signatures from the native kernel; pairs from the sorted-run
+    // bucket pass, not a capped-collect aggregate or an N²/labels
+    // self-join; exact re-check through the native qdot
     assert(p.contains("lsh_sigs"))
-    assert(p.contains("sorted_pairs"))
+    assert(p.contains("MapPartitions") && !p.contains("ObjectHashAggregate"), p)
     assert(p.contains("qdot("))
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("rare-shingle and embedding dedup plans: bucket runs, no ObjectHashAggregate") {
+    // every bucket grouping is the sorted-run pass (a MapPartitions over
+    // a sorted exchange), never a capped-collect object aggregate; the
+    // rare-shingle runs are cached, so their plan shows inside the
+    // InMemoryRelation
+    for ((name, df) <- Seq(
+        "dedup_ngram_jaccard" -> Dedup.dedupNgramJaccard(spark, sf),
+        "dedup_threshold_sweep" -> Dedup.dedupThresholdSweep(spark, sf),
+        "dedup_embedding" -> Similarity.dedupEmbedding(spark, sf))) {
+      val p = plan(df)
+      assert(p.contains("MapPartitions"), s"$name: $p")
+      assert(!p.contains("ObjectHashAggregate"), s"$name: $p")
+    }
+  }
+
+  test("dedup_embedding: one call and its collect run 9 Spark jobs") {
+    // the stats job (one exchange: per-label counts), then the pair
+    // query's stages under adaptive execution; jobs are counted by
+    // group, so other suites' jobs never reach the count
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "plan-spec-dedup-embedding"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "dedup_embedding job count")
+    try Similarity.dedupEmbedding(spark, sf).collect()
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.size === 9)
   }
 
   test("qdot participates in whole-stage codegen") {
@@ -212,14 +251,6 @@ class PlanSpec extends SparkSpec {
     val sh1 = spark.sql("SELECT simhash64(array('a','b'), 100) AS s").collect()(0).getLong(0)
     val sh2 = spark.sql("SELECT simhash64(array('a','b'), 100) AS s").collect()(0).getLong(0)
     assert(sh1 === sh2)
-    val pr = spark.sql(
-      "SELECT element_at(sorted_pairs(array(CAST(3 AS BIGINT), CAST(1 AS BIGINT))), 1) AS p")
-      .collect()(0).getStruct(0)
-    assert(pr.getLong(0) === 1L && pr.getLong(1) === 3L)
-    val cc = spark.sql(
-      "SELECT size(collect_capped(CAST(id AS BIGINT), 5)) AS n FROM range(100)")
-      .collect()(0).getInt(0)
-    assert(cc === 5)
   }
 
   test("q19: range join broadcasts the ledger side (no shuffle of the fact side)") {

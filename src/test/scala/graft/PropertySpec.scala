@@ -124,40 +124,80 @@ class PropertySpec extends SparkSpec {
 
   test("sorted_pairs emits exactly C(n,2) pairs of the distinct set (random arrays)") {
     import spark.implicits._
-    import org.apache.spark.sql.graftvec.MinHashExpressions.sortedPairs
+    import graft.operators.Dedup
     val dsGen = Gen.listOfN(12, Gen.chooseNum(1L, 8L))
     for (seed <- 1 to 8) {
       val ds = sample(dsGen, seed)
-      val rows = Seq(Tuple1(ds)).toDF("ds")
-        .select(explode(sortedPairs(col("ds"))).as("p"))
-        .select(col("p.doc_a"), col("p.doc_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      // one bucket holding the whole array, repeats included
+      val rows = Dedup.bucketPairs(ds.map(id => (0L, id)).toDF("k", "doc_id"), col("k"), 1, ds.size)
+        .as[(Long, Long)].collect()
       val d = ds.distinct.sorted
       val expected = for { i <- d.indices; j <- i + 1 until d.size } yield (d(i), d(j))
+      assert(rows.length === d.size * (d.size - 1) / 2, s"seed $seed")
       assert(rows.toSeq.sorted === expected.sorted, s"seed $seed")
     }
   }
 
+  /** Every pair a < b of the distinct non-null ids of each bucket whose
+    * row count (repeats and nulls included) is in [minSz, maxSz]. */
+  private def refBucketPairs(rows: Seq[(Long, Option[Long])], minSz: Int, maxSz: Int): Seq[(Long, Long)] =
+    rows.groupBy(_._1).values.toSeq
+      .filter(run => run.size >= minSz && run.size <= maxSz)
+      .flatMap { run =>
+        val d = run.flatMap(_._2).distinct.sorted
+        for { i <- d.indices; j <- i + 1 until d.size } yield (d(i), d(j))
+      }.sorted
+
   test("bucketPairs equals collect_capped + sorted_pairs per bucket (random multisets)") {
     import spark.implicits._
-    import org.apache.spark.sql.graftvec.MinHashExpressions.{collectCapped, sortedPairs}
     import graft.operators.Dedup
-    // hot keys (runs around the cap, repeated ids) among rare ones (singletons)
+    // hot keys (runs around the cap, repeated ids) among rare ones (singletons);
+    // the reference is plain Scala over the same rows
     val keyGen = Gen.frequency(4 -> Gen.chooseNum(0L, 30L), 1 -> Gen.chooseNum(100L, 600L))
     val idGen = Gen.frequency(30 -> Gen.chooseNum(0L, 40L).map(Option(_)), 1 -> Gen.const(None))
     val rowsGen = Gen.listOfN(500, Gen.zip(keyGen, idGen))
     for (seed <- 1 to 6) {
       val maxSz = 10 + seed % 4
-      val df = sample(rowsGen, seed).toDF("k", "doc_id")
-      val got = Dedup.bucketPairs(df, col("k"), 2, maxSz).as[(Long, Long)].collect().sorted.toSeq
-      val sizes = df.groupBy(col("k")).count().collect().map(_.getLong(1))
-      assert(sizes.exists(_ > maxSz) && sizes.exists(n => n >= 2 && n <= maxSz), s"seed $seed")
-      val want = df.groupBy(col("k"))
-        .agg(collectCapped(col("doc_id"), maxSz + 1).as("ds"), count(lit(1)).as("sz"))
-        .filter(col("sz") >= 2 && col("sz") <= maxSz)
-        .select(explode(sortedPairs(col("ds"))).as("p"))
-        .select(col("p.doc_a"), col("p.doc_b"))
+      val rows = sample(rowsGen, seed)
+      val got = Dedup.bucketPairs(rows.toDF("k", "doc_id"), col("k"), 2, maxSz)
         .as[(Long, Long)].collect().sorted.toSeq
+      val sizes = rows.groupBy(_._1).values.map(_.size)
+      assert(sizes.exists(_ > maxSz) && sizes.exists(n => n >= 2 && n <= maxSz), s"seed $seed")
+      val want = refBucketPairs(rows, 2, maxSz)
+      assert(want.nonEmpty && got === want, s"seed $seed")
+    }
+  }
+
+  test("interSizePairsOf(rareShingleGroupsOf) equals plain-Scala inter, sizes and Jaccard (random multisets)") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    import Ordering.Double.TotalOrdering
+    val cap = Dedup.ShingleFreqCap
+    // skewed shingles over few docs; a (doc, h) row may repeat, and a
+    // repeat counts toward the shingle's document frequency
+    val hGen = Gen.frequency(3 -> Gen.chooseNum(0L, 40L), 1 -> Gen.chooseNum(1000L, 1300L))
+    val rowsGen = Gen.listOfN(600, Gen.zip(Gen.chooseNum(0L, 60L), hGen))
+    for (seed <- 1 to 4) {
+      // one shingle held by exactly cap docs (kept) and one by cap + 1 (dropped)
+      val atCap = (0L until cap.toLong).map(d => (d, 900001L))
+      val pastCap = (0L to cap.toLong).map(d => (d + 5, 900002L))
+      val rows = sample(rowsGen, seed) ++ atCap ++ pastCap
+      val got = Dedup.interSizePairsOf(Dedup.rareShingleGroupsOf(rows.toDF("doc_id", "h")))
+        .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"), col("jaccard"))
+        .as[(Long, Long, Long, Long, Long, Double)].collect().sorted.toSeq
+      val rareByH = rows.groupBy(_._2)
+        .filter { case (_, run) => run.size >= 2 && run.size <= cap }
+        .map { case (h, run) => h -> run.map(_._1).distinct.sorted }
+      assert(rareByH.get(900001L).map(_.size).contains(cap) && !rareByH.contains(900002L),
+        s"seed $seed")
+      val rare = rareByH.values.toSeq
+      val size = rare.flatten.groupBy(identity).map { case (d, hs) => d -> hs.size.toLong }
+      val inter = rare.flatMap(ds => for { i <- ds.indices; j <- i + 1 until ds.size } yield (ds(i), ds(j)))
+        .groupBy(identity).map { case (p, n) => p -> n.size.toLong }
+      val want = inter.toSeq.map { case ((a, b), n) =>
+        val (na, nb) = (size(a), size(b))
+        (a, b, n, na, nb, n.toDouble / (na + nb - n))
+      }.sorted
       assert(want.nonEmpty && got === want, s"seed $seed")
     }
   }

@@ -333,7 +333,7 @@ class SimilaritySpec extends SparkSpec {
     // Aggregate (the old shape paid a second corpus scan, a
     // groupBy(vec_id) exchange and a join for the same values)
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val e = Similarity.exactVecsFor(spark, sf)
+    val e = Similarity.vecs(spark, sf)
     val (index, _, _, _, _) = Similarity.ivfPqServeIndex(spark, e)
     try {
       val cached = index.queryExecution.optimizedPlan.collectFirst {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftvec.MinHashExpressions._
-import org.apache.spark.sql.graftvec.SketchPerms
+import org.apache.spark.sql.graftvec.{RunPairs, SketchPerms}
 
 import graft.functions.TextFunctions
 import graft.operators.Dedup
@@ -83,36 +83,36 @@ class SketchKernelSpec extends SparkSpec {
   }
 
   test("sorted_pairs emits every unordered pair of the distinct elements, sorted") {
+    // the bucket pass: each run's ids come back sorted and distinct, and
+    // the pair loop expands a run into its pairs a < b
     import spark.implicits._
-    val df = Seq(
-      (1L, Seq(5L, 3L, 9L, 3L)), // dup element collapses
-      (2L, Seq(7L)), // singleton -> no pairs
-      (3L, Seq.empty[Long])
-    ).toDF("id", "ds")
-    val got = df.select(col("id"), explode(sortedPairs(col("ds"))).as("p"))
-      .select(col("id"), col("p.doc_a"), col("p.doc_b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === Set((1L, 3L, 5L), (1L, 3L, 9L), (1L, 5L, 9L)))
+    val rows = Seq(
+      (1L, Some(5L)), (1L, Some(3L)), (1L, Some(9L)), (1L, Some(3L)), // dup element collapses
+      (2L, Some(7L)), // singleton -> no pairs
+      (3L, None) // a run of one null id -> empty
+    ).toDF("k", "doc_id")
+    val runs = Dedup.bucketRuns(rows, col("k"), 1, 10).collect().map(_.toSeq).sortBy(_.headOption)
+    assert(runs.toSeq === Seq(Seq.empty[Long], Seq(3L, 5L, 9L), Seq(7L)))
+    val want = Seq((3L, 5L), (3L, 9L), (5L, 9L))
+    assert(RunPairs.pairs(runs.iterator.map(_.toArray)).toSeq === want)
+    assert(Dedup.bucketPairs(rows, col("k"), 1, 10).as[(Long, Long)].collect().sorted.toSeq === want)
   }
 
   test("collect_capped: complete below the cap, truncated at the cap, exact count alongside") {
+    // the bucket pass keeps what the capped collect guaranteed: a run at
+    // or below the cap comes back whole, a run past it is counted and
+    // dropped, and the count includes repeated ids
     import spark.implicits._
-    val df = (1 to 30).map(i => (i % 3, i.toLong)).toDF("g", "v")
-    val got = df.groupBy(col("g"))
-      .agg(collectCapped(col("v"), 4).as("ds"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1), r.getLong(2)))
-    got.foreach { case (_, ds, n) =>
-      assert(n === 10L) // true group size survives the cap
-      assert(ds.length === 4) // capped
-      assert(ds.distinct.length === 4)
-    }
-    val small = df.filter(col("v") <= 6).groupBy(col("g"))
-      .agg(collectCapped(col("v"), 4).as("ds"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1).sorted, r.getLong(2)))
-    small.foreach { case (g, ds, n) =>
-      assert(n === 2L && ds.length === 2) // below cap: complete
-      assert(ds === (1 to 6).filter(_ % 3 == g).map(_.toLong).sorted)
-    }
+    val df = (1 to 30).map(i => ((i % 3).toLong, i.toLong)).toDF("g", "doc_id")
+    assert(Dedup.bucketRuns(df, col("g"), 2, 4).isEmpty) // 10 rows a run, cap 4
+    val small = Dedup.bucketRuns(df.filter(col("doc_id") <= 6), col("g"), 2, 4)
+      .collect().map(_.toSeq).toSet
+    assert(small === (0 to 2).map(g => (1 to 6).filter(_ % 3 == g).map(_.toLong)).toSet)
+    // 3 distinct ids in 5 rows: the row count, not the distinct count, meets the cap
+    val repeats = Seq(1L, 1L, 2L, 3L, 3L).map(v => (0L, v)).toDF("g", "doc_id")
+    assert(Dedup.bucketRuns(repeats, col("g"), 2, 4).isEmpty)
+    assert(Dedup.bucketRuns(repeats, col("g"), 2, 5).collect().map(_.toSeq).toSeq ===
+      Seq(Seq(1L, 2L, 3L)))
   }
 
   test("bucketPairs: runs in [minSz, maxSz] pair their distinct ids; others yield nothing") {
