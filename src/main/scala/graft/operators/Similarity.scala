@@ -308,149 +308,115 @@ object Similarity {
   /** The fixed serving-query predicate (see [[QueryCap]]). */
   private def isQuery(c: Column): Column = c % 100 === 0 && c < QueryCap
 
+  /** The one kNN ranking policy: `knn_rank` numbers each query's rows
+    * by `score` descending, ties to the lower `neighbor_id`, and only
+    * ranks ≤ `k` stay — the order the oracles' ROW_NUMBER windows use.
+    * A distance ranks nearest-first as its negation. */
+  private[graft] def topKPerQuery(scored: DataFrame, score: Column, k: Int): DataFrame =
+    scored
+      .withColumn("knn_rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(score.desc, col("neighbor_id"))))
+      .filter(col("knn_rank") <= k)
+
   /** Generic exact top-k cosine neighbors: `queries` (query_id, qv, qn)
     * is broadcast against `corpus` (neighbor_id, v, nrm) — O(Q×N) work,
     * no N×N blowup, deterministic tiebreak on neighbor id. */
   def knnOf(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    corpus
+    val scored = corpus
       .crossJoin(broadcast(queries))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= k)
+    topKPerQuery(scored, col("cos_sim"), k)
       .select(col("query_id"), col("neighbor_id"), col("knn_rank"), col("cos_sim"))
   }
 
-  /** knn_brute — exact top-k cosine neighbors for each query vector
-    * (the fixed [[QueryCap]]-bounded batch: vec_id % 100 == 0 AND
-    * vec_id < QueryCap). */
-  /** Streaming retrieval transform for stream_knn: QUERY vectors arrive
-    * as a stream and retrieve their exact top-K against the static
-    * corpus — the online-serving shape (a retrieval endpoint fed by an
-    * event stream). The corpus side is a stream-static broadcast (re-read
-    * per micro-batch at deployment, so index refreshes are picked up);
-    * each query row fans out to its candidates via the broadcast
-    * cross-join, so ALL of a query's candidates live in its own
-    * micro-batch and the per-query top-K (flatMapGroupsWithState, no
-    * retained state) is batching-invariant. Output ≡ knn_brute
-    * restricted to the query batch — the oracle is knn_brute's,
-    * verbatim. */
-  def knnServe(spark: SparkSession, dir: String)(stream: DataFrame): DataFrame = {
-    import spark.implicits._
-    val corpusB = broadcast(vecs(spark, dir)
-      .select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")))
-    stream
-      .filter(isQuery(col("vec_id")))
+  /** The serving queries among arriving embedding rows (vec_id,
+    * embedding) as (query_id, qv, qn) — the fixed [[QueryCap]] batch. */
+  private def servedQueries(rows: DataFrame): DataFrame =
+    rows.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv"))
       .withColumn("qn", qdot(col("qv"), col("qv")))
-      .crossJoin(corpusB)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (Long, Long, Int, Double)](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (qid: Long, it: Iterator[(Long, Long, Double)],
-         _: org.apache.spark.sql.streaming.GroupState[Boolean]) =>
-          it.toArray.sortBy(t => (-t._3, t._2)).take(K).zipWithIndex
-            .map { case ((_, nb, cs), i) => (qid, nb, i + 1, cs) }.iterator
-      }
-      .toDF("query_id", "neighbor_id", "knn_rank", "cos_sim")
+
+  /** stream_knn's per-micro-batch step: the batch's QUERY vectors
+    * retrieve their exact top-K against the static corpus through
+    * [[knnOf]] — the online-serving shape (a retrieval endpoint fed by
+    * an event stream). Each query's candidates all come from its own
+    * row, so the answer is batching-invariant and equals knn_brute
+    * restricted to the batch's queries — the oracle is knn_brute's,
+    * verbatim. The step is a batch plan: it cannot be applied to a
+    * streaming frame. */
+  def knnServe(spark: SparkSession, dir: String): DataFrame => DataFrame = {
+    val corpus = vecs(spark, dir).select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
+    batch => knnOf(servedQueries(batch), corpus, K)
   }
 
-  /** stream_knn_lsh serving core: the adaptive LSH index as the
-    * stream-static side. [[knnServe]] broadcasts the WHOLE corpus per
-    * query batch — right at 200k vectors, impossible at 100 TB; the
-    * production serving path looks arriving queries up in a prebuilt
-    * index instead. Here the index is the [[knnLsh]] bucket table
-    * verbatim (adaptive-width signatures, ok-bucket census [2, cap]),
-    * built once from the static corpus and persisted; each arriving
-    * query computes its own signatures through the same kernel and
-    * equi-joins the index on (table, signature) — per query, only its
-    * L buckets' members are touched (≤ L·cap candidates), never the
-    * corpus. The per-query exact re-rank happens in keyed state exactly
-    * as [[knnServe]] (one query's candidates always land in one
-    * micro-batch, so output is batching-invariant; pinned by
-    * StreamingSpec). Oracle: the batch [[knnLshSql]] verbatim — the
-    * streamed serving must reproduce the batch index's answer
-    * bit-for-bit. At deployment the index side would be bucketed
-    * storage co-partitioned on (t, sig); the equi-join shape (and the
-    * results) are identical. */
-  def knnLshServe(spark: SparkSession, dir: String)(stream: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.graftvec.VectorExpressions.lshSigs
-    val e = vecs(spark, dir)
-    val bits = lshBitsFor(e.count())
+  /** The knn_lsh bucket index over corpus `e` (vec_id, v, nrm): each
+    * member's (t, sig) row in every table whose bucket holds 2 to
+    * [[LshBucketCap]] members, as (t, sig, neighbor_id, v, nrm).
+    * The bucket census repartitions BEFORE aggregating: the cache-fill
+    * pass for the signatures is whatever stage materializes them first,
+    * and fusing the signature kernel + explode with a partial aggregate
+    * produces an oversized generated method, measured 3-4x slower than
+    * its parts on the MinHash band aggregate at sf10 (fused 88.6 s,
+    * split 22.1 s); the exchange keeps the kernel-heavy producer stage
+    * clean. */
+  private def lshIndex(e: DataFrame, bits: Int): DataFrame = {
     val sigs = e.select(col("vec_id"), col("v"), col("nrm"),
-      posexplode(lshSigs(col("v"), LshTables, bits, Dim, LshBitsMax)).as(Seq("t", "sig")))
-    val okBuckets = sigs.groupBy(col("t"), col("sig"))
+      posexplode(org.apache.spark.sql.graftvec.VectorExpressions
+        .lshSigs(col("v"), LshTables, bits, Dim, LshBitsMax)).as(Seq("t", "sig")))
+      .persist() // feeds both the bucket census and the index rows
+    // the census is ∝ distinct buckets (tables × 2^bits rows), broadcast
+    // back onto the signature rows
+    val okBuckets = sigs.repartition(col("t"), col("sig"))
+      .groupBy(col("t"), col("sig"))
       .agg(count(lit(1)).as("bs"))
       .filter(col("bs") >= 2 && col("bs") <= LshBucketCap)
       .select(col("t"), col("sig"))
-    val index = sigs.join(broadcast(okBuckets), Seq("t", "sig"))
+    sigs.join(broadcast(okBuckets), Seq("t", "sig"))
       .select(col("t"), col("sig"), col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
-      .persist()
-    stream
-      .filter(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv"))
-      .withColumn("qn", qdot(col("qv"), col("qv")))
-      .select(col("query_id"), col("qv"), col("qn"),
-        posexplode(lshSigs(col("qv"), LshTables, bits, Dim, LshBitsMax)).as(Seq("t", "sig")))
-      .join(index, Seq("t", "sig"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (Long, Long, Int, Double)](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (qid: Long, it: Iterator[(Long, Long, Double)],
-         _: org.apache.spark.sql.streaming.GroupState[Boolean]) =>
-          // same-pair hits from multiple tables collapse (the batch op's
-          // dropDuplicates), then the knnServe re-rank contract
-          it.toArray.distinct.sortBy(t => (-t._3, t._2)).take(K).zipWithIndex
-            .map { case ((_, nb, cs), i) => (qid, nb, i + 1, cs) }.iterator
-      }
-      .toDF("query_id", "neighbor_id", "knn_rank", "cos_sim")
   }
 
-  /** stream_knn_ivfpq serving core: the IVF+PQ index as the
-    * stream-static side — the streaming twin of [[knnIvfPq]], the
-    * layout a billion-vector deployment actually serves from (cells
-    * prune I/O, codes shrink what's scanned). The index the probed-cell
-    * join scans is CODE WIDTH: each corpus member's rank-1 IVF cell and
-    * its [[PqSub]] PQ codes packed into one long (byte m = subspace
-    * m's codeword slot — the 8-bit-PQ deployment layout) — nothing
-    * else — persisted co-keyed on cent_id (at deployment: bucketed
-    * storage partitioned by cell — the [[knnLshServe]] index
-    * discipline). That is PQ's whole point on the serving path: the
-    * per-query candidate scan reads ~32× fewer bytes than vector-width
-    * rows would. Each arriving query explodes to its adaptive-Nprobe
-    * probe cells against the broadcast centroid roster (the ≤ 512 KiB
-    * [[ivfRoster]] collect), equi-joins the code-only index on cent_id
-    * — touching only probed cells' members, never the corpus — and
-    * computes its per-subspace ADC terms declaratively (the codebook is
-    * a broadcast join, the query's subvector slice a column
-    * expression). The first keyed state function only sums longs and
-    * shortlists: ADC distances fold per neighbor (all [[PqSub]]
-    * subspaces required — the batch nm == PqSub guard) and the
-    * [[pqShortlistFor]] shortlist keeps the closest by
-    * (adc_d2, neighbor_id). Exact vectors enter only AFTER the
-    * shortlist — the batch composite's own post-shortlist discipline
-    * ([[knnIvfPq]]): two stream-static equi-joins fetch the
-    * query's and each surviving neighbor's exact vector from the
-    * corpus (≤ shortlist rows per query), and a second Append-mode
-    * state function re-ranks top-[[K]] by (cos desc, neighbor_id) —
-    * the batch windows' tiebreaks bit-for-bit. All of a query's
-    * candidates derive from its own input row through stream-static
-    * joins and both state functions are per-query complete within the
-    * micro-batch, so output is batching-invariant (pinned by
-    * StreamingSpec). Oracle: the batch [[knnIvfPqSql]] verbatim. */
+  /** knn_lsh's candidate/rank core: each query (query_id, qv, qn)
+    * computes its L signatures through the same kernel and equi-joins
+    * `index` on (t, sig), so it touches only its own buckets' members
+    * (≤ L·cap candidates), never the corpus; a neighbor met in several
+    * tables counts once, and the exact quantized cosine ranks the
+    * candidates. Candidates are scored before the dedup, so the one
+    * exchange on query_id, which serves both the dedup and the rank
+    * window, carries no vectors. */
+  private def lshTopK(queries: DataFrame, index: DataFrame, bits: Int): DataFrame = {
+    val cands = queries
+      .select(col("query_id"), col("qv"), col("qn"),
+        posexplode(org.apache.spark.sql.graftvec.VectorExpressions
+          .lshSigs(col("qv"), LshTables, bits, Dim, LshBitsMax)).as(Seq("t", "sig")))
+      .join(index, Seq("t", "sig"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")).as("cos_sim"))
+      .repartition(col("query_id"))
+      .dropDuplicates("query_id", "neighbor_id")
+    topKPerQuery(cands, col("cos_sim"), K)
+      .select(col("query_id"), col("neighbor_id"), col("knn_rank"), col("cos_sim"))
+  }
+
+  /** stream_knn_lsh's per-micro-batch step: the adaptive LSH index as
+    * the static side. [[knnServe]] scores the WHOLE corpus per query
+    * batch — right at 200k vectors, impossible at 100 TB; the production
+    * serving path looks arriving queries up in a prebuilt index instead.
+    * The index is [[knnLsh]]'s ([[lshIndex]]), built once when the serve
+    * is constructed and persisted; each batch runs [[knnLsh]]'s own
+    * candidate/rank core ([[lshTopK]]) on its query rows, so the answer
+    * is batching-invariant (pinned by StreamingSpec). Oracle: the batch
+    * [[knnLshSql]] verbatim. At deployment the index side would be
+    * bucketed storage co-partitioned on (t, sig); the equi-join shape
+    * (and the results) are identical. */
+  def knnLshServe(spark: SparkSession, dir: String): DataFrame => DataFrame = {
+    val e = vecs(spark, dir)
+    val bits = lshBitsFor(e.count())
+    val index = lshIndex(e, bits).persist()
+    batch => lshTopK(servedQueries(batch), index, bits)
+  }
+
   /** The CODE-WIDTH serving index [[knnIvfPqServe]] probes, factored
     * out so a test or measurement inspects exactly the frames the
     * operator serves from (never a reconstruction that could drift):
@@ -508,70 +474,68 @@ object Similarity {
     (index, cbJoin, roster, nprobe, shortlistN)
   }
 
-  def knnIvfPqServe(spark: SparkSession, dir: String)(stream: DataFrame): DataFrame = {
-    import spark.implicits._
+  /** stream_knn_ivfpq's per-micro-batch step: the IVF+PQ index as the
+    * static side — the serving twin of [[knnIvfPq]], the layout a
+    * billion-vector deployment actually serves from (cells prune I/O,
+    * codes shrink what's scanned). The index the probed-cell join scans
+    * is CODE WIDTH ([[ivfPqServeIndex]]): each corpus member's rank-1
+    * IVF cell and its [[PqSub]] PQ codes packed into one long (byte m =
+    * subspace m's codeword slot — the 8-bit-PQ deployment layout) —
+    * nothing else — persisted co-keyed on cent_id (at deployment:
+    * bucketed storage partitioned by cell — the [[knnLshServe]] index
+    * discipline). That is PQ's whole point on the serving path: the
+    * per-query candidate scan reads ~32× fewer bytes than vector-width
+    * rows would. The index, codebook and roster are built once, when the
+    * serve is constructed. Each batch query explodes to its
+    * adaptive-Nprobe probe cells against the centroid roster (the
+    * ≤ 512 KiB [[ivfRoster]] collect), equi-joins the code-only index on
+    * cent_id — touching only probed cells' members, never the corpus —
+    * and computes its per-subspace ADC terms declaratively (the codebook
+    * is a broadcast join, the query's subvector slice a column
+    * expression). The terms sum per (query, neighbor) in exact longs,
+    * all [[PqSub]] subspaces required (the batch nm == PqSub guard), and
+    * the [[pqShortlistFor]] shortlist keeps the closest by
+    * (adc_d2, neighbor_id). Exact vectors enter only AFTER the shortlist
+    * — the batch composite's own post-shortlist discipline: two joins
+    * fetch the query's and each surviving neighbor's exact vector from
+    * the corpus (≤ shortlist rows per query), and [[topKPerQuery]]
+    * re-ranks top-[[K]] by (cos desc, neighbor_id). A query's candidates
+    * all derive from its own row, so the answer is batching-invariant
+    * (pinned by StreamingSpec). Oracle: the batch [[knnIvfPqSql]]
+    * verbatim. */
+  def knnIvfPqServe(spark: SparkSession, dir: String): DataFrame => DataFrame = {
     val e = vecs(spark, dir)
     val (index, cbJoin, roster, nprobe, shortlistN) = ivfPqServeIndex(spark, e)
-    // --- ADC over the probed cells' codes, shortlist in keyed state
-    val shortlist = stream
-      .filter(isQuery(col("vec_id")))
-      .select(col("vec_id").as("query_id"), toDouble(col("embedding")).as("qv"))
-      .withColumn("cent_id", explode(ivfAssignCol(col("qv"), roster, nprobe)))
-      .join(index, Seq("cent_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("qv"), col("code_pack"),
-        explode(typedLit((0 until PqSub).toArray)).as("m"))
-      // unpack byte m back to its codeword id (the cbJoin key)
-      .withColumn("code",
-        expr(s"(shiftright(code_pack, m * 8) & 255) * ${PqCentMod}L"))
-      .withColumn("qv_s", slice(col("qv"), col("m") * PqDim + 1, lit(PqDim)))
-      .join(cbJoin, Seq("m", "code"))
-      .withColumn("d2", qdot(col("qv_s"), col("qv_s")) + col("cnrm")
-        - lit(2L) * qdot(col("qv_s"), col("cv")))
-      .select(col("query_id"), col("neighbor_id"), col("m"), col("d2"))
-      .as[(Long, Long, Int, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (Long, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (qid: Long, it: Iterator[(Long, Long, Int, Long)],
-         _: org.apache.spark.sql.streaming.GroupState[Boolean]) =>
-          // fold the PqSub ADC terms per neighbor (exact long sums)
-          val acc = scala.collection.mutable.LongMap
-            .empty[(Long, Long)] // nb -> (mMask, adc_d2)
-          it.foreach { case (_, nb, m, d2) =>
-            val (mask, s) = acc.getOrElse(nb, (0L, 0L))
-            acc(nb) = (mask | (1L << m), s + d2)
-          }
-          acc.iterator.collect {
-            case (nb, (mask, s))
-              if java.lang.Long.bitCount(mask) == PqSub => (nb, s)
-          }.toArray
-            .sortBy { case (nb, s) => (s, nb) }.take(shortlistN)
-            .map { case (nb, _) => (qid, nb) }.iterator
-      }
-      .toDF("query_id", "neighbor_id")
-    // --- exact re-rank of the shortlist: vectors join back from the
-    // corpus for ≤ shortlistN rows per query (batch knnIvfPq's own
-    // q/n join), then a second Append-mode state ranks top-K
-    shortlist
-      .join(e.select(col("vec_id").as("query_id"),
-        col("v").as("qev"), col("nrm").as("qen")), Seq("query_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
-        Seq("neighbor_id"))
-      .withColumn("cos_sim", qcos(qdot(col("qev"), col("v")), col("qen"), col("nrm")))
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (Long, Long, Int, Double)](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (qid: Long, it: Iterator[(Long, Long, Double)],
-         _: org.apache.spark.sql.streaming.GroupState[Boolean]) =>
-          it.toArray.sortBy(t => (-t._3, t._2)).take(K).zipWithIndex
-            .map { case ((_, nb, cos), i) => (qid, nb, i + 1, cos) }.iterator
-      }
-      .toDF("query_id", "neighbor_id", "knn_rank", "cos_sim")
+    val q = e.select(col("vec_id").as("query_id"), col("v").as("qev"), col("nrm").as("qen"))
+    val n = e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
+    batch => {
+      // each (query, neighbor, m) term occurs once: a neighbor sits in one
+      // cell, the probe cells are distinct and (m, code) keys the codebook.
+      // One exchange on query_id serves both the sum and the shortlist.
+      val adc = servedQueries(batch)
+        .withColumn("cent_id", explode(ivfAssignCol(col("qv"), roster, nprobe)))
+        .join(index, Seq("cent_id"))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .select(col("query_id"), col("neighbor_id"), col("qv"), col("code_pack"),
+          explode(typedLit((0 until PqSub).toArray)).as("m"))
+        // unpack byte m back to its codeword id (the cbJoin key)
+        .withColumn("code",
+          expr(s"(shiftright(code_pack, m * 8) & 255) * ${PqCentMod}L"))
+        .withColumn("qv_s", slice(col("qv"), col("m") * PqDim + 1, lit(PqDim)))
+        .join(cbJoin, Seq("m", "code"))
+        .select(col("query_id"), col("neighbor_id"), (qdot(col("qv_s"), col("qv_s")) + col("cnrm")
+          - lit(2L) * qdot(col("qv_s"), col("cv"))).as("d2"))
+        .repartition(col("query_id"))
+        .groupBy(col("query_id"), col("neighbor_id"))
+        .agg(sum(col("d2")).as("adc_d2"), count(lit(1)).as("nm"))
+        .filter(col("nm") === PqSub)
+      val shortlist = topKPerQuery(adc, -col("adc_d2"), shortlistN)
+        .select(col("query_id"), col("neighbor_id"))
+      val scored = shortlist.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
+        .withColumn("cos_sim", qcos(qdot(col("qev"), col("v")), col("qen"), col("nrm")))
+      topKPerQuery(scored, col("cos_sim"), K)
+        .select(col("query_id"), col("neighbor_id"), col("knn_rank"), col("cos_sim"))
+    }
   }
 
   /** embed_index_plan — the index planner's decisions as data: for the
@@ -633,6 +597,9 @@ object Similarity {
       |FROM st""".stripMargin
   }
 
+  /** knn_brute — exact top-k cosine neighbors for each query vector
+    * (the fixed [[QueryCap]]-bounded batch: vec_id % 100 == 0 AND
+    * vec_id < QueryCap). */
   def knnBrute(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
     val q = e.filter(isQuery(col("vec_id")))
@@ -990,13 +957,10 @@ object Similarity {
     val probes = e.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
         explode(ivfAssignCol(col("v"), roster, ivfNprobeFor(n))).as("cent_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cells.join(broadcast(probes), Seq("cent_id"))
+    val scored = cells.join(broadcast(probes), Seq("cent_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= K)
+    topKPerQuery(scored, col("cos_sim"), K)
       .select(col("query_id"), col("neighbor_id"), col("knn_rank"), col("cos_sim"))
       .orderBy(col("query_id"), col("knn_rank"))
   }
@@ -1097,41 +1061,12 @@ object Similarity {
     // exactly b bits per table at stride LshBitsMax, so the geometry is
     // the low-b-bit prefix of the full-width family the oracle masks.
     val bits = lshBitsFor(e.count())
-    val sigs = e.select(col("vec_id"), col("v"), col("nrm"),
-      posexplode(org.apache.spark.sql.graftvec.VectorExpressions
-        .lshSigs(col("v"), LshTables, bits, Dim, LshBitsMax)).as(Seq("t", "sig")))
-      .persist() // signature computation feeds both the corpus and query side
-    // bucket-size bound [2, LshBucketCap]: the size table is ∝ distinct
-    // buckets (tables × 2^bits rows), broadcast back onto the stream.
-    // The census repartitions BEFORE aggregating: the cache-fill pass
-    // for `sigs` is whatever stage materializes it first, and fusing
-    // the signature kernel + explode with a partial aggregate produces
-    // an oversized generated method, measured 3-4x slower than its
-    // parts on the MinHash band aggregate at sf10 (fused 88.6 s, split
-    // 22.1 s); the exchange keeps the kernel-heavy producer stage clean.
-    val okBuckets = sigs.repartition(col("t"), col("sig"))
-      .groupBy(col("t"), col("sig"))
-      .agg(count(lit(1)).as("bs"))
-      .filter(col("bs") >= 2 && col("bs") <= LshBucketCap)
-      .select(col("t"), col("sig"))
-    val bucketed = sigs.join(broadcast(okBuckets), Seq("t", "sig"))
-    val q = bucketed.filter(isQuery(col("vec_id")))
-      .select(col("t"), col("sig"), col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    val cands = bucketed.join(q, Seq("t", "sig"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("qv"), col("qn"),
-        col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cands
-      .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("knn_rank"), col("cos_sim"))
+    val q = e.filter(isQuery(col("vec_id")))
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+    lshTopK(q, lshIndex(e, bits), bits)
       .orderBy(col("query_id"), col("knn_rank"))
   }
+
   /** DuckDB oracle for knn_lsh: the signature planes are deterministic
     * (split-mix Rademacher signs), so the oracle embeds them as literal
     * ±1 lists and replays the exact pipeline — per-table full-width
@@ -1373,23 +1308,18 @@ object Similarity {
     // with 8 array lookups each, instead of Q×N×8 broadcast-join rows
     // re-aggregated per (query, vector) — bit-identical long sums.
     val (packed, qlut, adcD2) = pqAdcParts(e, cb, qsubs)
-    val adc = packed.crossJoin(broadcast(qlut))
-      .filter(col("vec_id") =!= col("query_id"))
+    val adc = packed.withColumnRenamed("vec_id", "neighbor_id")
+      .crossJoin(broadcast(qlut))
+      .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc_d2", adcD2)
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_d2"), col("vec_id"))
-    val shortlist = adc.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= pqShortlistFor(nVecs))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
+    val shortlist = topKPerQuery(adc, -col("adc_d2"), pqShortlistFor(nVecs))
+      .select(col("query_id"), col("neighbor_id"))
     // exact re-rank of the shortlist
     val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val n = e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    shortlist.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
+    val scored = shortlist.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
       .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .withColumn("knn_rank", row_number().over(wK))
-      .filter(col("knn_rank") <= K)
+    topKPerQuery(scored, col("cos_sim"), K)
       .select(col("query_id"), col("neighbor_id"), col("knn_rank"), col("cos_sim"))
       .orderBy(col("query_id"), col("knn_rank"))
   }
@@ -1504,20 +1434,14 @@ object Similarity {
       .join(packed.withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
       .join(broadcast(qlut), Seq("query_id"))
       .withColumn("adc_d2", adcD2)
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_d2"), col("neighbor_id"))
-    val shortlisted = adc.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= pqShortlistFor(nVecs))
+    val shortlisted = topKPerQuery(adc, -col("adc_d2"), pqShortlistFor(nVecs))
       .select(col("query_id"), col("neighbor_id"))
     // --- exact re-rank of the shortlist
     val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val n = e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    shortlisted.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
+    val scored = shortlisted.join(q, Seq("query_id")).join(n, Seq("neighbor_id"))
       .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .withColumn("knn_rank", row_number().over(wK))
-      .filter(col("knn_rank") <= K)
+    topKPerQuery(scored, col("cos_sim"), K)
       .select(col("query_id"), col("neighbor_id"), col("knn_rank"), col("cos_sim"))
       .orderBy(col("query_id"), col("knn_rank"))
   }
@@ -1972,15 +1896,12 @@ object Similarity {
     val q = e.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
         col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    e.select(col("vec_id").as("neighbor_id"), col("label"), col("v"), col("nrm"))
+    val scored = e.select(col("vec_id").as("neighbor_id"), col("label"), col("v"), col("nrm"))
       .crossJoin(broadcast(q))
       .filter(col("label") === col("qlabel") &&
         col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= K)
+    topKPerQuery(scored, col("cos_sim"), K)
       .select(col("query_id"), col("qlabel").as("label"), col("neighbor_id"),
         col("knn_rank"), col("cos_sim"))
       .orderBy(col("query_id"), col("knn_rank"))
@@ -2474,13 +2395,10 @@ object Similarity {
         col("v").as("qv"), col("nrm").as("qn"))
     val corpus = e.select(col("vec_id").as("neighbor_id"),
       col("label").as("n_label"), col("v"), col("nrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    corpus.crossJoin(broadcast(q))
+    val scored = corpus.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos_sim", qcos(qdot(col("qv"), col("v")), col("qn"), col("nrm")))
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= K)
+    topKPerQuery(scored, col("cos_sim"), K)
       .groupBy(col("q_label"))
       .agg(count_distinct(col("query_id")).as("n_queries"),
         count(lit(1)).as("k_edges"),

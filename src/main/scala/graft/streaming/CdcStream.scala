@@ -54,7 +54,9 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   *
   * `windowCounts` is the operational monitor: watermarked sliding-window
   * op counts (the Kafka-topic-monitoring shape). The other `stream_*`
-  * operators keep keyed GroupState for their own per-key aggregates.
+  * operators keep keyed GroupState for their own per-key aggregates,
+  * except the three kNN serves, which hold no state and run each
+  * micro-batch as a batch plan.
   *
   * Tests drive the lake sink and `windowCounts` through MemoryStream
   * and feed directories (StreamingSpec). The SparkEntry `stream_*`
@@ -146,8 +148,11 @@ object CdcStream {
     * (the ScaleGen outputs) links each part file — the source does NOT
     * descend into subdirectories and would silently stream zero rows.
     * Link targets are absolute: a relative `dir` would otherwise leave
-    * the links dangling relative to the stage directory. */
-  private def stageFeed(spark: SparkSession, dir: String,
+    * the links dangling relative to the stage directory. The stream is
+    * read through `session`; the table's schema comes from `spark`'s
+    * relation memo, which a fresh session would miss (one schema job per
+    * call) and then keep alive. */
+  private def stageFeed(spark: SparkSession, session: SparkSession, dir: String,
                         table: String): (DataFrame, java.nio.file.Path, Long) = {
     val schema = graft.core.Tables.load(spark, dir, table).schema
     val stage = scratchDir("graft-stream")
@@ -169,22 +174,28 @@ object CdcStream {
       java.nio.file.Files.createSymbolicLink(stage.resolve(s"$table.parquet"), src)
       stagedBytes = java.nio.file.Files.size(src)
     }
-    (spark.readStream.schema(schema).parquet(stage.toString), stage, stagedBytes)
+    (session.readStream.schema(schema).parquet(stage.toString), stage, stagedBytes)
   }
 
   /** Replay `table` through a real file stream source and run `transform`
-    * to completion (Trigger.AvailableNow). Each micro-batch publishes its
-    * output as version <batch id> of a scratch sink through
-    * [[publishVersion]], so a retried batch replaces its own output and
-    * every output mode is exactly-once. Returns the newest version in
-    * Complete mode, every version in Append and Update mode, and an empty
-    * frame of the output schema when no batch ran. */
-  private def replay(spark: SparkSession, dir: String,
+    * to completion (Trigger.AvailableNow), then `perBatch` on each
+    * micro-batch as a batch plan. Each micro-batch publishes its output
+    * as version <batch id> of a scratch sink through [[publishVersion]],
+    * so a retried batch replaces its own output and every output mode is
+    * exactly-once. Returns the newest version in Complete mode, every
+    * version in Append and Update mode, and an empty frame of the output
+    * schema when no batch ran. The stream runs on a child session of
+    * `spark`: it shares the SparkContext, the cache and the caller's
+    * frames but has its own SQL conf, so the settings below never reach
+    * the caller's queries. */
+  private[graft] def replay(spark: SparkSession, dir: String,
                      outputMode: OutputMode,
                      transform: DataFrame => DataFrame,
                      normalize: Boolean = true,
-                     table: String = "events"): DataFrame = {
-    val (stream, stage, stagedBytes) = stageFeed(spark, dir, table)
+                     table: String = "events",
+                     perBatch: DataFrame => DataFrame = identity): DataFrame = {
+    val session = spark.newSession()
+    val (stream, stage, stagedBytes) = stageFeed(spark, session, dir, table)
     // A stateful query instantiates one state store per shuffle partition
     // per stateful operator, and the right parallelism is a function of
     // INGEST VOLUME, not CPU count: per-partition store init (dir +
@@ -194,12 +205,10 @@ object CdcStream {
     // partitions). Staged bytes are the replay's proxy for volume — one
     // partition per ~2 MB of compressed input, capped at the session's
     // parallelism. A real deployment sizes this to live-key volume; the
-    // setting is sticky per query via its (fresh) checkpoint, so batch
-    // queries in the session are unaffected.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    // setting is sticky per query via its (fresh) checkpoint.
     val autoParts = math.max(8, math.min(spark.sparkContext.defaultParallelism,
       (stagedBytes / (2L << 20)).toInt))
-    spark.conf.set("spark.sql.shuffle.partitions", autoParts.toString)
+    session.conf.set("spark.sql.shuffle.partitions", autoParts.toString)
     // Keyed state must NOT live as JVM objects at scale: the in-memory
     // provider holds every (key → state) entry of every retained version
     // on-heap, and at sf10 the band-bucket state of stream_near_dedup
@@ -216,24 +225,19 @@ object CdcStream {
     // manage (measured at sf0.1: the 8-query stateful stream subset runs
     // 0.75× under the in-memory provider — 15.2 s → 11.4 s — while sf1+
     // inputs stay on RocksDB, whose sf10 necessity is measured above).
-    // Restored after the replay so tests that pin a provider's behavior
-    // are unaffected.
-    val prevStore = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     val inMemoryStore = stagedBytes <= (8L << 20)
     val autoStore =
       if (inMemoryStore)
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
       else
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", autoStore)
+    session.conf.set("spark.sql.streaming.stateStore.providerClass", autoStore)
     // RocksDB's row-count metric does a READ BEFORE EVERY WRITE to
     // detect insert-vs-update; with millions of fresh bucket keys per
     // replay (stream_near_dedup at sf10) that doubles state-store work
     // for a metric nothing here consumes. A deployment that wants the
     // numRowsTotal gauge pays for it; the engine does not require it.
-    val prevTrack = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
-    spark.conf.set(
+    session.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
     // Offset/commit logs and state-store versions fsync per micro-batch;
     // for an ephemeral replay put the checkpoint on tmpfs when present
@@ -250,52 +254,41 @@ object CdcStream {
     // at sf10: stream_near_dedup's candidate pairs exhaust a 24g heap,
     // stream_scd2's history overflows a 1 GiB maxResultSize).
     val transformed = transform(if (normalize) toChangeEvents(stream) else stream)
+    // planning the per-batch step on an empty frame runs no job
+    val schema = perBatch(
+      session.createDataFrame(java.util.Collections.emptyList[Row](), transformed.schema)).schema
     val sink = new Path(scratchDir("graft-sink").toString)
     val fs = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val q = transformed.writeStream.outputMode(outputMode)
-        .option("checkpointLocation", ck.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          publishVersion(fs, sink, id)(batch.write.parquet(_))
-        }
-        .start()
-      q.awaitTermination()
-      // Guard on the auto in-memory state-store choice (it trusts staged
-      // bytes as a STATE proxy): assert the realized keyed state actually
-      // stayed small, so a future operator with a larger key-state
-      // amplification than anything measured (~32×) fails LOUDLY here
-      // instead of silently building multi-GB heap state. 2 GiB is ~8×
-      // the worst legitimate state observed under the 8 MB input
-      // threshold and ~1/12 of the replay heap.
-      if (inMemoryStore) {
-        val maxStateBytes = q.recentProgress
-          .map(_.stateOperators.map(_.memoryUsedBytes).sum)
-          .foldLeft(0L)(math.max)
-        require(maxStateBytes < (2L << 30),
-          s"in-memory state store grew to $maxStateBytes bytes on ${stagedBytes}B " +
-            "of staged input — state amplification exceeds the volume heuristic's " +
-            "assumptions; lower replay's 8 MB in-memory store threshold")
+    val q = transformed.writeStream.outputMode(outputMode)
+      .option("checkpointLocation", ck.toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        publishVersion(fs, sink, id)(perBatch(batch).write.parquet(_))
       }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevStore match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevTrack match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
-      }
+      .start()
+    q.awaitTermination()
+    // Guard on the auto in-memory state-store choice (it trusts staged
+    // bytes as a STATE proxy): assert the realized keyed state actually
+    // stayed small, so a future operator with a larger key-state
+    // amplification than anything measured (~32×) fails LOUDLY here
+    // instead of silently building multi-GB heap state. 2 GiB is ~8×
+    // the worst legitimate state observed under the 8 MB input
+    // threshold and ~1/12 of the replay heap.
+    if (inMemoryStore) {
+      val maxStateBytes = q.recentProgress
+        .map(_.stateOperators.map(_.memoryUsedBytes).sum)
+        .foldLeft(0L)(math.max)
+      require(maxStateBytes < (2L << 30),
+        s"in-memory state store grew to $maxStateBytes bytes on ${stagedBytes}B " +
+          "of staged input — state amplification exceeds the volume heuristic's " +
+          "assumptions; lower replay's 8 MB in-memory store threshold")
     }
     rmTreeQuietly(ck)
     rmTreeQuietly(stage)
     val written = versions(fs, sink)
     val read = if (outputMode == OutputMode.Complete) written.maxOption.toSeq else written
-    if (read.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), transformed.schema)
-    else spark.read.schema(transformed.schema)
+    if (read.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema)
       .parquet(read.map(v => new Path(sink, s"state_v$v").toString): _*)
   }
 
@@ -501,38 +494,39 @@ object CdcStream {
   }
 
   /** stream_knn — streaming retrieval serving: query vectors arriving
-    * on a stream retrieve their exact top-K against the broadcast
-    * static corpus (Similarity.knnServe). Oracle-checked against
-    * knn_brute verbatim — the stream must reproduce the batch
-    * retrieval bit-for-bit. */
+    * on a stream retrieve their exact top-K against the static corpus,
+    * each micro-batch through [[graft.operators.Similarity.knnServe]].
+    * Oracle-checked against knn_brute verbatim — the stream must
+    * reproduce the batch retrieval bit-for-bit. */
   def streamKnn(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, OutputMode.Append,
-      graft.operators.Similarity.knnServe(spark, dir),
-      normalize = false, table = "embeddings")
-      .orderBy(col("query_id"), col("knn_rank"))
+    serveReplay(spark, dir, graft.operators.Similarity.knnServe(spark, dir))
 
   /** stream_knn_lsh — index-backed streaming ANN serving: arriving
     * query vectors look themselves up in the prebuilt adaptive-LSH
-    * bucket index (Similarity.knnLshServe) instead of broadcasting the
-    * whole corpus per batch — the serving shape that survives a 100 TB
-    * corpus. Oracle-checked against the batch knn_lsh SQL verbatim. */
+    * bucket index ([[graft.operators.Similarity.knnLshServe]]) instead
+    * of scoring the whole corpus per batch — the serving shape that
+    * survives a 100 TB corpus. Oracle-checked against the batch knn_lsh
+    * SQL verbatim. */
   def streamKnnLsh(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, OutputMode.Append,
-      graft.operators.Similarity.knnLshServe(spark, dir),
-      normalize = false, table = "embeddings")
-      .orderBy(col("query_id"), col("knn_rank"))
+    serveReplay(spark, dir, graft.operators.Similarity.knnLshServe(spark, dir))
 
   /** stream_knn_ivfpq — the streaming twin of the production ANN
     * composite: arriving query vectors probe the prebuilt IVF+PQ index
-    * (Similarity.knnIvfPqServe) — Nprobe cells against the broadcast
-    * centroid roster, ADC over the probed cells' PQ codes, exact
-    * re-rank of the shortlist — the layout a billion-vector deployment
-    * serves from. Oracle-checked against the batch knn_ivfpq SQL
-    * verbatim. */
+    * ([[graft.operators.Similarity.knnIvfPqServe]]) — Nprobe cells
+    * against the centroid roster, ADC over the probed cells' PQ codes,
+    * exact re-rank of the shortlist — the layout a billion-vector
+    * deployment serves from. Oracle-checked against the batch knn_ivfpq
+    * SQL verbatim. */
   def streamKnnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, OutputMode.Append,
-      graft.operators.Similarity.knnIvfPqServe(spark, dir),
-      normalize = false, table = "embeddings")
+    serveReplay(spark, dir, graft.operators.Similarity.knnIvfPqServe(spark, dir))
+
+  /** Replay the embeddings table as arriving queries, each micro-batch
+    * served by `serve` as a batch plan; rows in (query_id, knn_rank)
+    * order. */
+  private def serveReplay(spark: SparkSession, dir: String,
+                          serve: DataFrame => DataFrame): DataFrame =
+    replay(spark, dir, OutputMode.Append, identity, normalize = false,
+      table = "embeddings", perBatch = serve)
       .orderBy(col("query_id"), col("knn_rank"))
 
   /** stream_near_dedup — the candidate hits of [[nearDupBandHits]]
@@ -596,7 +590,7 @@ object CdcStream {
     * Returns the live snapshot read back from the lake. StreamingSpec
     * asserts it equals the batch latest-state. */
   def streamApplyToLake(spark: SparkSession, dir: String, path: String): DataFrame = {
-    val (stream, _, _) = stageFeed(spark, dir, "events")
+    val (stream, _, _) = stageFeed(spark, spark, dir, "events")
     streamApplyToLakeOf(spark, toChangeEvents(stream), path)
   }
 

@@ -497,6 +497,21 @@ class PlanSpec extends SparkSpec {
     assert(p53.contains("BroadcastHashJoin"))
   }
 
+  test("kNN serves: each micro-batch is a batch plan with no FlatMapGroupsWithState") {
+    // a serve holds no state between micro-batches, so none of its
+    // per-batch plans may carry a stateful grouping operator
+    val batch = spark.read.parquet(s"$sf/embeddings.parquet")
+    for ((name, serve) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "knnServe" -> Similarity.knnServe(spark, sf),
+        "knnLshServe" -> Similarity.knnLshServe(spark, sf),
+        "knnIvfPqServe" -> Similarity.knnIvfPqServe(spark, sf))) {
+      val analyzed = serve(batch).queryExecution.analyzed
+      assert(analyzed.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState => f
+      }.isEmpty, s"$name: $analyzed")
+    }
+  }
+
   test("knn_label_purity: the query side broadcasts, the corpus streams") {
     val p = plan(Similarity.knnLabelPurity(spark, sf))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"))

@@ -202,6 +202,43 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("topKPerQuery equals a plain-Scala sort by (-score, neighbor_id) per query (planted ties)") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    val k = 5
+    // few distinct scores, so exact ties are common; query ids above 40
+    // hold fewer than k rows
+    val rowGen = for {
+      q <- Gen.frequency(6 -> Gen.chooseNum(0L, 40L), 1 -> Gen.chooseNum(41L, 80L))
+      n <- Gen.chooseNum(0L, 300L)
+      s <- Gen.chooseNum(1, 12)
+    } yield (q, n, s)
+    for (seed <- 1 to 6) {
+      // one row per (query, neighbor), as every kNN path scores, plus one
+      // query whose seven rows tie on score across the rank-k boundary
+      val rows = (sample(Gen.listOfN(500, rowGen), seed)
+        .filter(r => r._1 <= 40L || r._2 % 50 == 0)
+        .groupBy(r => (r._1, r._2)).values.map(_.head).toSeq
+        ++ (0L until 7L).map(n => (999L, 100L - n, 3)))
+      val byQuery = rows.groupBy(_._1)
+      assert(byQuery.values.exists(_.size < k) && byQuery.values.exists(_.size > k), s"seed $seed")
+      assert(byQuery.values.exists(rs => rs.map(_._3).distinct.size < rs.size), s"seed $seed")
+      def want(order: ((Long, Long, Int)) => (Int, Long)): Set[(Long, Long, Int)] =
+        byQuery.values.flatMap(_.sortBy(order).take(k).zipWithIndex
+          .map { case (r, i) => (r._1, r._2, i + 1) }).toSet
+      // a cosine ranks highest first
+      val cos = rows.map(r => (r._1, r._2, r._3 / 8.0)).toDF("query_id", "neighbor_id", "cos_sim")
+      val gotCos = Similarity.topKPerQuery(cos, col("cos_sim"), k)
+        .select("query_id", "neighbor_id", "knn_rank").as[(Long, Long, Int)].collect().toSet
+      assert(gotCos === want(r => (-r._3, r._2)), s"seed $seed")
+      // a distance ranks nearest first through its negation, the ADC shortlist's order
+      val adc = rows.map(r => (r._1, r._2, r._3.toLong * 1000000007L)).toDF("query_id", "neighbor_id", "adc_d2")
+      val gotAdc = Similarity.topKPerQuery(adc, -col("adc_d2"), k)
+        .select("query_id", "neighbor_id", "knn_rank").as[(Long, Long, Int)].collect().toSet
+      assert(gotAdc === want(r => (r._3, r._2)), s"seed $seed")
+    }
+  }
+
   test("saltedJoin is equivalent to plain join for any salt count (random data)") {
     import spark.implicits._
     val bigGen = Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(1L, 4L), Gen.chooseNum(0, 100)))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -208,6 +209,23 @@ class StreamingSpec extends SparkSpec {
       assert(CdcStream.streamWindowAgg(spark, sf).count() > 0)
       assert(spark.table("stream_window_agg_sink").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
     } finally spark.catalog.dropTempView("stream_window_agg_sink")
+  }
+
+  test("replay: the caller's session conf is untouched while a replay runs") {
+    // the transform runs after the replay sets its own partition count
+    // (≥ 8) and state-store provider (in-memory at this size); the caller
+    // must still see its own: "4" and a RocksDB provider it set itself
+    val store = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    spark.conf.set(store, rocks)
+    try {
+      val seen = CdcStream.replay(spark, sf, OutputMode.Update, { events =>
+        assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+        assert(spark.conf.get(store) === rocks)
+        events.groupBy(col("op")).count()
+      })
+      assert(seen.count() > 0)
+    } finally spark.conf.unset(store)
   }
 
   test("replay: an events table with zero rows gives empty results in every output mode") {
@@ -536,11 +554,31 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  /** `serve` run through foreachBatch on the two halves of `queries`,
+    * one micro-batch each; every served row, both batches together. */
+  private def servedInTwoBatches(serve: DataFrame => DataFrame,
+                                 queries: Array[(Long, Seq[Float])]): Array[Row] = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val served = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val input = MemoryStream[(Long, Seq[Float])]
+    val q = input.toDS().toDF("vec_id", "embedding").writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        serve(batch).collect().foreach(served.add)
+      }
+      .start()
+    val (b1, b2) = queries.splitAt(queries.length / 2)
+    try {
+      input.addData(b1.toSeq); q.processAllAvailable()
+      input.addData(b2.toSeq); q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) === 2)
+    served.toArray(Array.empty[Row])
+  }
+
   test("stream_knn_lsh: index-backed serving equals batch knn_lsh and is batching-invariant") {
     import graft.operators.Similarity
     import graft.streaming.CdcStream
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     def keyed(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("knn_rank"),
         r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos_sim"))).toSet
@@ -556,25 +594,13 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     assert(queries.length >= 3)
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = Similarity.knnLshServe(spark, sf)(
-      input.toDS().toDF("vec_id", "embedding"))
-      .writeStream.format("memory").queryName("t_knn_lsh")
-      .outputMode(OutputMode.Append).start()
-    val (b1, b2) = queries.splitAt(queries.length / 2)
-    input.addData(b1.toSeq); q.processAllAvailable()
-    input.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    val split = keyed(spark.table("t_knn_lsh").collect())
-    spark.catalog.dropTempView("t_knn_lsh")
+    val split = keyed(servedInTwoBatches(Similarity.knnLshServe(spark, sf), queries))
     assert(split === batch)
   }
 
   test("stream_knn_ivfpq: IVF+PQ serving equals batch knn_ivfpq and is batching-invariant") {
     import graft.operators.Similarity
     import graft.streaming.CdcStream
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     def keyed(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("knn_rank"),
         r.getAs[Long]("neighbor_id"), r.getAs[Double]("cos_sim"))).toSet
@@ -590,17 +616,7 @@ class StreamingSpec extends SparkSpec {
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     assert(queries.length >= 3)
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = Similarity.knnIvfPqServe(spark, sf)(
-      input.toDS().toDF("vec_id", "embedding"))
-      .writeStream.format("memory").queryName("t_knn_ivfpq")
-      .outputMode(OutputMode.Append).start()
-    val (b1, b2) = queries.splitAt(queries.length / 2)
-    input.addData(b1.toSeq); q.processAllAvailable()
-    input.addData(b2.toSeq); q.processAllAvailable()
-    q.stop()
-    val split = keyed(spark.table("t_knn_ivfpq").collect())
-    spark.catalog.dropTempView("t_knn_ivfpq")
+    val split = keyed(servedInTwoBatches(Similarity.knnIvfPqServe(spark, sf), queries))
     assert(split === batch)
   }
 
@@ -611,18 +627,21 @@ class StreamingSpec extends SparkSpec {
     // may join in only after the ADC shortlist, the batch knnIvfPq's
     // own post-shortlist discipline
     import graft.operators.Similarity
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.Join
-    val input = MemoryStream[(Long, Seq[Float])]
-    val df = Similarity.knnIvfPqServe(spark, sf)(
-      input.toDS().toDF("vec_id", "embedding"))
+    val batch = spark.read.parquet(s"$sf/embeddings.parquet")
+      .filter(col("vec_id") % 100 === 0).select("vec_id", "embedding")
+      .as[(Long, Seq[Float])].collect().toSeq.toDF("vec_id", "embedding")
+    val batchRel = batch.queryExecution.analyzed.collectLeaves().head
+    val df = Similarity.knnIvfPqServe(spark, sf)(batch)
     val cellJoins = df.queryExecution.analyzed.collect {
       case j: Join if j.condition.exists(_.references.exists(_.name == "cent_id")) => j
     }
     assert(cellJoins.nonEmpty)
     cellJoins.foreach { j =>
-      val static = if (j.left.isStreaming) j.right else j.left
+      // the query side is the one holding the batch's relation
+      val static = if (j.left.collectLeaves().contains(batchRel)) j.right else j.left
+      assert(!static.collectLeaves().contains(batchRel))
       assert(static.output.map(_.name).toSet === Set("cent_id", "neighbor_id", "code_pack"))
     }
   }
