@@ -1336,29 +1336,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** One-shot materialization of the whole duplicate-cluster family:
-    * the component labels — the expensive part (pair relation + CC
-    * fixpoint) that [[dedupClusters]], [[dedupCanonical]],
-    * [[dedupClusterStats]] and [[dedupSurvivorship]] each recompute
-    * when run standalone — are computed ONCE and persisted, and all
-    * four frames derive from them through the very same per-frame code
-    * the standalone operators run (DedupSpec pins frame-for-frame
-    * equality). This is the deployment shape: a 100 TB dedup pass
-    * labels once and writes the manifest, the savings report and the
-    * survivorship census from the one labeling, at ~1× the family's
-    * standalone ~4× cost (priced at sf10 in SURVEY §7.14). The caller
-    * owns the persist: unpersist via the returned labels frame after
-    * the derived frames are written. */
-  def dedupFamily(spark: SparkSession, dir: String): Map[String, DataFrame] = {
-    val labels = connectedComponentsOf(dupPairs(spark, dir)).persist()
-    Map(
-      "labels" -> labels,
-      "dedup_clusters" -> clustersFromLabels(labels),
-      "dedup_canonical" -> canonicalFromLabels(spark, dir, labels),
-      "dedup_cluster_stats" -> clusterStatsFromLabels(spark, dir, labels),
-      "dedup_survivorship" -> survivorshipFromLabels(spark, dir, labels))
-  }
-
   /** Shared oracle CTE chain ending in `lab(doc_id, cluster_id)` — the
     * recursive-CTE transitive closure of the duplicate edge set. */
   private val clusterLabCtes: String =
@@ -1572,8 +1549,7 @@ object Dedup {
     * doc lists); islands form with a per-doc window (partitioned by
     * doc_id — no global sort); output rows ∝ offending spans, never
     * corpus size. */
-  def dupSpansOf(docs: DataFrame, minSpanShingles: Int = MinSpanShingles,
-                 dropSpanWords: Int = DropSpanWords): DataFrame = {
+  def dupSpansOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val psh = docs
       .withColumn("ws", words(col("text")))
@@ -1590,7 +1566,7 @@ object Dedup {
       .withColumn("grp", col("pos") - row_number().over(wPos))
       .groupBy(col("doc_id"), col("grp"))
       .agg(count(lit(1)).as("run_len"), min(col("pos")).as("span_start"))
-      .filter(col("run_len") >= minSpanShingles)
+      .filter(col("run_len") >= MinSpanShingles)
     val wBest = Window.partitionBy(col("doc_id"))
       .orderBy(col("run_len").desc, col("span_start"))
     runs.withColumn("rn", row_number().over(wBest))
@@ -1599,7 +1575,7 @@ object Dedup {
         sum(col("run_len")).as("dup_span_shingles"),
         (max(col("run_len")) + 2L).as("longest_span_words"),
         min(when(col("rn") === 1, col("span_start"))).as("longest_span_start"),
-        (max(col("run_len")) + 2L >= dropSpanWords.toLong).as("drop_candidate"))
+        (max(col("run_len")) + 2L >= DropSpanWords.toLong).as("drop_candidate"))
   }
 
   def textDupSpans(spark: SparkSession, dir: String): DataFrame =
@@ -1669,9 +1645,9 @@ object Dedup {
     * Scale shape identical to dupSpansOf: one codegen kernel pass, one
     * count-only groupBy(h) shuffle (counts travel, never doc lists),
     * per-doc windows for island detection, output ∝ offending spans. */
-  def dupSpansExactOf(docs: DataFrame, k: Int = ExactSpanWords,
-                      dropSpanWords: Int = DropSpanWords): DataFrame = {
+  def dupSpansExactOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val k = ExactSpanWords
     val psh = docs
       .withColumn("ws", words(col("text")))
       .select(col("doc_id"),
@@ -1695,7 +1671,7 @@ object Dedup {
         sum(col("run_len") + lit(k - 1).cast("long")).as("dup_span_words"),
         (max(col("run_len")) + lit(k - 1).cast("long")).as("longest_span_words"),
         min(when(col("rn") === 1, col("span_start"))).as("longest_span_start"),
-        (max(col("run_len")) + lit(k - 1).cast("long") >= dropSpanWords.toLong)
+        (max(col("run_len")) + lit(k - 1).cast("long") >= DropSpanWords.toLong)
           .as("drop_candidate"))
   }
 
@@ -1742,25 +1718,25 @@ object Dedup {
 
   /** Generic line-level dedup accounting (the C4/RefinedWeb
     * repeated-line removal step, one granularity below doc-level
-    * dedup): each doc's word stream splits into fixed `lineWords`
+    * dedup): each doc's word stream splits into fixed [[LineWords]]-word
     * lines, a line is duplicated when it appears in ≥2 distinct docs,
     * and the per-doc report carries the duplicated-line count plus the
     * md5 fingerprint of the doc with its duplicated lines REMOVED —
     * the verifiable artifact of the cleaning step.
     *
-    * Scale shape: lines explode ∝ corpus words / lineWords; the
+    * Scale shape: lines explode ∝ corpus words / LineWords; the
     * distinct-doc frequency is one groupBy on the 128-bit line
     * fingerprint (map-side combined), joined back and rolled up per
     * doc. Only fingerprints shuffle twice; line text shuffles once
     * into the per-doc rollup (and a production variant would carry
     * line hashes + reconstruct from the source). */
-  def lineDedupOf(docs: DataFrame, lineWords: Int = LineWords): DataFrame = {
+  def lineDedupOf(docs: DataFrame): DataFrame = {
     // line fan-out runs as the native WordLines kernel — one codegen'd
     // loop per doc instead of an interpreted lambda + slice per line
     val lines = docs
       .select(col("doc_id"),
         posexplode(org.apache.spark.sql.graftvec.NgramExpressions
-          .wordLines(words(col("text")), lineWords)).as(Seq("l", "line")))
+          .wordLines(words(col("text")), LineWords)).as(Seq("l", "line")))
       .withColumn("fp", md5(col("line").cast("binary")))
     // ndocs (distinct docs per fp) via dense_rank+max over one window
     // instead of distinct→groupBy(fp)→join-back: the old shape planned

@@ -41,15 +41,6 @@ object Multimodal {
     hist
   }
 
-  /** Stub "decode": 16-bin byte histogram, L2-normalized. Deterministic
-    * placeholder with the exact shape of a real feature extractor
-    * (bytes → fixed-dim float vector). */
-  private[graft] def decodeStub(payload: Array[Byte]): Array[Double] = {
-    val hist = rawHistogram(payload)
-    val norm = math.sqrt(hist.map(x => x * x).sum)
-    if (norm == 0) hist else hist.map(_ / norm)
-  }
-
   /** Stub "resize": 2× average-pool of a feature map (the image-resize
     * analog on the extracted representation). */
   private[graft] def resizeStub(feature: Array[Double]): Array[Double] =
@@ -60,14 +51,13 @@ object Multimodal {
   private[graft] def fingerprint(v: Array[Double]): String =
     v.map(x => math.floor(x * 1e9 + 0.5).toLong).mkString(",")
 
-  /** Stub "frame sampling": the payload is treated as fixed-size frames
-    * (a video's GOP analog); every `stride`-th frame is selected.
-    * Returns the sampled frame count — a real pipeline would emit the
-    * frame byte slices for per-frame decode. */
-  private[graft] def frameSample(payload: Array[Byte], frameBytes: Int = 256,
-                                 stride: Int = 4): Int = {
-    val frames = (payload.length + frameBytes - 1) / frameBytes
-    (frames + stride - 1) / stride
+  /** Stub "frame sampling": the payload is treated as 256-byte frames
+    * (a video's GOP analog); every 4th frame is selected, as in
+    * mm_frames. Returns the sampled frame count — a real pipeline would
+    * emit the frame byte slices for per-frame decode. */
+  private[graft] def frameSample(payload: Array[Byte]): Int = {
+    val frames = (payload.length + 255) / 256
+    (frames + 3) / 4
   }
 
   /** The multimodal table: documents' text bytes standing in for an

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Debezium JSON change-event parsing (SURVEY.md §2.A; reference:
-  * debezium-connector-config.json — JsonConverter envelopes, and the
-  * `unwrap` ExtractNewRecordState SMT with
-  * delete.handling.mode=rewrite).
+  * debezium-connector-config.json — JsonConverter envelopes). Only the
+  * full envelope carries the source LSN the loop's fold orders by.
   *
   * Works identically on a batch DataFrame and a streaming DataFrame
   * (e.g. a Kafka `value` column) — `from_json` is a pure projection, so
@@ -64,22 +63,6 @@ object DebeziumJson {
         col("_e.source.lsn").as("lsn"),
         col("_e.ts_ms").as("ts_ms"),
         coalesce(col("_e.after"), col("_e.before")).as("payload"))
-      .filter(col("key").isNotNull)
-  }
-
-  /** Parse unwrapped (ExtractNewRecordState, delete.handling.mode=
-    * rewrite) records: the row is flattened and deletes carry
-    * `__deleted = "true"`. No LSN survives the SMT, so ordering falls to
-    * a caller-supplied offset (e.g. the Kafka offset column). */
-  def parseUnwrapped(df: DataFrame, jsonCol: String, row: StructType,
-                     keyField: String): DataFrame = {
-    val withDeleted = StructType(row.fields :+ StructField("__deleted", StringType))
-    val rec = from_json(col(jsonCol), withDeleted)
-    df.withColumn("_r", rec)
-      .select(
-        col(s"_r.$keyField").as("key"),
-        when(col("_r.__deleted") === "true", "D").otherwise("U").as("op"),
-        col("_r").dropFields("__deleted").as("payload"))
       .filter(col("key").isNotNull)
   }
 }

@@ -258,7 +258,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("Poll.waitFor: completes when the probe flips, times out on a fake clock") {
-    import graft.cdc.Poll
+    import graft.fixtures.Poll
     var t = 0L
     val clock = () => t
     val sleep = (ms: Long) => t += ms
@@ -270,12 +270,6 @@ class CdcSpec extends SparkSpec {
     val t0 = t
     val timedOut = Poll.waitFor(() => None, 5000, 1000, clock, sleep)
     assert(timedOut === Poll.TimedOut(6) && t - t0 === 5000L)
-    // the monitoring-query loop: under the deterministic 3/4 watermark
-    // the latest batch never completes, so the loop must time out (2
-    // polls: the fake sleep jumps straight past the deadline)
-    val r = Poll.waitForLatestBatch(spark, sf, timeoutMs = 1, intervalMs = 10,
-      clock = clock, sleep = sleep)
-    assert(!r.isComplete)
   }
 
   test("recon_backfill_plan: batches cover the full repair set in severity order") {

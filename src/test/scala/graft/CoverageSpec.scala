@@ -83,6 +83,134 @@ class CoverageSpec extends AnyFunSuite {
       s"environment read outside the entry points: ${(envReads.toSet -- allowed).toSeq.sorted}")
   }
 
+  /** `t` with comments blanked and, when `blankLiterals`, string and
+    * char literals blanked too (so braces inside them do not count).
+    * Newlines survive, so line structure does. */
+  private def stripped(t: String, blankLiterals: Boolean): String = {
+    val n = t.length
+    val out = new java.lang.StringBuilder(n)
+    def blank(from: Int, to: Int): Unit =
+      (from until to).foreach(j => out.append(if (t(j) == '\n') '\n' else ' '))
+    var i = 0
+    while (i < n) {
+      if (t.startsWith("/*", i)) { // Scala block comments nest
+        var depth = 1
+        var j = i + 2
+        while (j < n && depth > 0) {
+          if (t.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (t.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        blank(i, j); i = j
+      } else if (t.startsWith("//", i)) {
+        val j = { val k = t.indexOf('\n', i); if (k < 0) n else k }
+        blank(i, j); i = j
+      } else {
+        val j =
+          if (t.startsWith("\"\"\"", i)) {
+            val k = t.indexOf("\"\"\"", i + 3)
+            var e = if (k < 0) n else k + 3
+            while (e < n && t(e) == '"') e += 1
+            e
+          } else if (t(i) == '"') {
+            var k = i + 1
+            while (k < n && t(k) != '"') k += (if (t(k) == '\\') 2 else 1)
+            math.min(k + 1, n)
+          } else if (t(i) == '\'' && i + 2 < n && t(i + 2) == '\'') i + 3
+          else if (t(i) == '\'' && i + 3 < n && t(i + 1) == '\\' && t(i + 3) == '\'') i + 4
+          else i + 1
+        if (j > i + 1 && blankLiterals) blank(i, j) else out.append(t, i, j)
+        i = j
+      }
+    }
+    out.toString
+  }
+
+  private val declaration = ("""^\s*((?:(?:private|protected)(?:\[\w+\])?\s+""" +
+    """|(?:override|final|implicit|lazy|sealed|case|abstract)\s+|@\w+\s+)*)""" +
+    """(def|val|var|object|class|trait|type)\s+([A-Za-z_]\w*)""").r
+
+  /** Library members of one file: each top-level object by name, and
+    * each member declared directly in an object body as `Object.member`,
+    * public or private[graft], except overrides and `main`. */
+  private def libraryMembers(code: String): Seq[String] = {
+    val found = Seq.newBuilder[String]
+    val objectBody = scala.collection.mutable.Map.empty[Int, String] // depth -> object
+    var depth = 0
+    code.linesIterator.foreach { line =>
+      var opening: Option[String] = None
+      declaration.findPrefixMatchOf(line).foreach { m =>
+        val (mods, kind, name) = (m.group(1), m.group(2), m.group(3))
+        val visible = "(private|protected)(?!\\[graft\\])".r.findFirstIn(mods).isEmpty
+        val scanned = visible && !mods.contains("override") && name != "main"
+        if (scanned && depth == 0 && kind == "object") found += name
+        else if (scanned) objectBody.get(depth - 1).foreach(o => found += s"$o.$name")
+        if (kind == "object") opening = Some(name)
+      }
+      line.foreach {
+        case '{' =>
+          opening.foreach(o => objectBody(depth) = o)
+          opening = None
+          depth += 1
+        case '}' =>
+          depth -= 1
+          objectBody.remove(depth)
+        case _ =>
+      }
+    }
+    found.result()
+  }
+
+  /** Library members no main or graftbench code reaches, with why each
+    * stays. Every entry must still be unreached: a member that gains a
+    * caller leaves the list. */
+  private val noCallerAllowed = Map(
+    "SparkEntry.entry" -> "smoke-check entry of the SparkEntry contract, called by name",
+    "Bench" -> "entry point, run as `runMain graft.Bench`",
+    "ScaleGen" -> "entry point, run as `runMain graft.tools.ScaleGen`",
+    "KafkaSource" -> "deployment input path of the replication loop",
+    "KafkaSource.options" ->
+      "deployment input path: options of the `format(\"kafka\")` read (SourcesSpec)",
+    "KafkaSource.decoded" ->
+      "deployment input path: decodes the Kafka frame parseEnvelope reads (SourcesSpec)",
+    "JdbcSource" -> "source-side read of a deployed reconcile",
+    "JdbcSource.readPartitioned" ->
+      "source-side read a deployed reconcile runs against the source DB (JdbcIntegrationSpec)",
+    "Dedup.containmentPairsOf" ->
+      "test seam: DedupSpec feeds it hand-built docs that no sf table contains")
+
+  test("every library member has a caller outside src/test, or an allowlisted reason") {
+    // a caller is the name as a whole word outside comments: in another
+    // library file, in graftbench, or a second time in its own file
+    def wordCounts(t: String): Map[String, Int] =
+      "[A-Za-z0-9_]+".r.findAllIn(stripped(t, blankLiterals = false)).toSeq
+        .groupMapReduce(identity)(_ => 1)(_ + _)
+    val main = mainSources.map { case (f, t) => f -> wordCounts(t) }
+    val bench = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("graftbench/src"))
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
+        .flatMap(p => wordCounts(java.nio.file.Files.readString(p)).keys).toSet
+      finally walk.close()
+    }
+    val members = for {
+      (f, t) <- mainSources.toSeq if f.startsWith("graft/")
+      m <- libraryMembers(stripped(t, blankLiterals = true))
+    } yield (f, m)
+    assert(members.size > 500, s"the scan found only ${members.size} members")
+    val unreached = members.filterNot { case (f, m) =>
+      val name = m.split('.').last
+      main(f).getOrElse(name, 0) >= 2 || bench(name) ||
+        main.exists { case (g, w) => g != f && w.contains(name) }
+    }
+    val bad = unreached.filterNot { case (_, m) => noCallerAllowed.contains(m) }
+    assert(bad.isEmpty, "library members with no caller outside src/test — delete them, " +
+      "move them to src/test, or allowlist them with a reason:\n" +
+      bad.sorted.map { case (f, m) => s"  $f: $m" }.mkString("\n"))
+    val stale = noCallerAllowed.keySet -- unreached.map(_._2)
+    assert(stale.isEmpty, s"allowlisted members that now have a caller: ${stale.toSeq.sorted}")
+  }
+
   test("no process-global atomics in the library") {
     // per-call statistics come back from the call: a process-global
     // counter is overwritten by any concurrent call, and a global cap

@@ -427,17 +427,6 @@ class DedupSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  test("dedupFamily: one labeling, every derived frame equals its standalone operator") {
-    val fam = Dedup.dedupFamily(spark, sf)
-    try {
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-      assert(rows(fam("dedup_clusters")) === rows(Dedup.dedupClusters(spark, sf)))
-      assert(rows(fam("dedup_canonical")) === rows(Dedup.dedupCanonical(spark, sf)))
-      assert(rows(fam("dedup_cluster_stats")) === rows(Dedup.dedupClusterStats(spark, sf)))
-      assert(rows(fam("dedup_survivorship")) === rows(Dedup.dedupSurvivorship(spark, sf)))
-    } finally fam("labels").unpersist()
-  }
-
   test("connectedComponentsOf: candidate-cap overflow pays the exact census and labels stay exact") {
     import spark.implicits._
     // adversarial near-threshold degree distribution: 40 medium nodes

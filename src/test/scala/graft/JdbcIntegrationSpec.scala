@@ -15,10 +15,11 @@ import graft.sources.JdbcSource
   * runs inside this JVM, so this exercises Spark's real JDBC scan —
   * partition-clause generation, pushdown, type mapping — not a mock.
   *
-  * Kafka remains discipline-only: /opt/spark/jars ships no kafka-clients
-  * or spark-sql-kafka connector and the build has zero egress, so
-  * `KafkaSource.readTopic` cannot be integration-tested here (the
-  * envelope decode it feeds IS oracle-checked via DebeziumJson).
+  * Kafka remains discipline-only: the Spark distribution ships no
+  * kafka-clients or spark-sql-kafka connector, so a
+  * `format("kafka")` read cannot be integration-tested here (the
+  * `KafkaSource.decoded` frame it feeds IS checked through
+  * DebeziumJson.parseEnvelope in SourcesSpec).
   */
 class JdbcIntegrationSpec extends SparkSpec {
 

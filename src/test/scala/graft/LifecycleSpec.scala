@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.{FeedSink, FeedSource}
+import graft.fixtures.{FeedSink, FeedSource, Poll}
 import graft.streaming.CdcStream
-import graft.cdc.{Poll, Reconcile}
+import graft.cdc.Reconcile
 
 /** End-to-end reference lifecycle, composed from the already-tested
   * pieces (reference: manage.sh drives data_generator.py →
@@ -14,6 +14,11 @@ import graft.cdc.{Poll, Reconcile}
   *   FeedSink.genBatch/writeBatch → FeedSource.readFeedsStream →
   *   CdcStream.streamApplyToLakeOf → Poll.waitFor → count→digest→
   *   bucket→row ladder → repair plan applied → re-verify clean.
+  *
+  * The feed generator and reader (FeedSink, FeedSource) and the poll
+  * loop (Poll.waitFor) are test fixtures in graft.fixtures: they stand
+  * in for the reference's CSV generator and verifier loop around the
+  * library's apply and reconcile.
   *
   * The replicated state is per-customer latest order (LWW upsert keyed
   * by customer_id, ordered by feed position) — the same apply semantics

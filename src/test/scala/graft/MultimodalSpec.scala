@@ -52,11 +52,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("decode stub is deterministic") {
-    val b = "hello world".getBytes("UTF-8")
-    assert(Multimodal.decodeStub(b).toSeq === Multimodal.decodeStub(b).toSeq)
-  }
-
   test("mm_chunk_dedup: byte accounting exact, planted duplicates dedup") {
     val res = graft.operators.Multimodal.mmChunkDedup(spark, sf).collect()
     val docs = spark.read.parquet(s"$sf/documents.parquet")

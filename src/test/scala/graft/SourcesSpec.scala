@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{DebeziumJson, FeedSink, FeedSource, KafkaSource}
+import graft.sources.{DebeziumJson, KafkaSource}
+import graft.fixtures.{FeedSink, FeedSource}
 import graft.cdc.CdcOps
 
 class SourcesSpec extends SparkSpec {
@@ -34,17 +35,6 @@ class SourcesSpec extends SparkSpec {
     assert(snapshot === Map(1L -> 7.5)) // key 2 deleted at lsn 300
   }
 
-  test("parseUnwrapped: __deleted rewrite mode") {
-    import spark.implicits._
-    val recs = Seq(
-      s"""{"order_id":1,"customer_id":10,"amount":5.0,"timestamp":"t","batch_id":"b1","__deleted":"false"}""",
-      s"""{"order_id":2,"customer_id":20,"amount":9.0,"timestamp":"t","batch_id":"b1","__deleted":"true"}"""
-    ).toDF("value")
-    val parsed = DebeziumJson.parseUnwrapped(recs, "value", DebeziumJson.ordersRow, "order_id")
-      .collect().map(r => r.getAs[Long]("key") -> r.getAs[String]("op")).toMap
-    assert(parsed === Map(1L -> "U", 2L -> "D"))
-  }
-
   test("Sinks.writeSnapshot: bucket-partitioned, idempotent overwrite, readable") {
     import spark.implicits._
     val out = tempDir("graft-sink")
@@ -56,33 +46,6 @@ class SourcesSpec extends SparkSpec {
     assert(back.columns.contains("_bucket"))
     assert(back.select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
       Set((1L, "a"), (2L, "b"), (3L, "c")))
-  }
-
-  test("JsonlSource: shard read, corrupt-line quarantine, shard ledger") {
-    import graft.sources.JsonlSource
-    val dir = java.nio.file.Paths.get(tempDir("graft-jsonl"))
-    java.nio.file.Files.write(dir.resolve("shard00.jsonl"),
-      ("""{"doc_id":1,"text":"hello world","source":"src0","lang":"en"}""" + "\n" +
-       """{"doc_id":2,"text":"more text","source":"src1","lang":"de"}""" + "\n").getBytes)
-    java.nio.file.Files.write(dir.resolve("shard01.jsonl"),
-      ("""{"doc_id":3,"text":"fine","source":"src0","lang":"en"}""" + "\n" +
-       """{"doc_id":"not-a-number","text":"bad id","source":"src1","lang":"en"}""" + "\n" +
-       """{torn line""" + "\n").getBytes)
-    val corpus = JsonlSource.readCorpus(spark, dir.toString)
-    val clean = JsonlSource.cleanDocs(corpus)
-    assert(clean.count() === 3)
-    assert(clean.filter(col("doc_id") === 3).select("text").collect()(0).getString(0) === "fine")
-    val ledger = JsonlSource.shardLedger(corpus).collect()
-      .map(r => r.getAs[String]("shard") ->
-        (r.getAs[Long]("row_count"), r.getAs[Long]("corrupt_rows"), r.getAs[String]("status"))).toMap
-    assert(ledger("shard00") === ((2L, 0L, "COMPLETED")))
-    assert(ledger("shard01")._2 >= 1L && ledger("shard01")._3 === "FAILED")
-    // the corrupt raw lines are preserved for repair (a data column must
-    // ride along: Spark disallows querying ONLY the corrupt column from
-    // raw JSON)
-    val corrupt = corpus.filter(col("_corrupt").isNotNull).select("doc_id", "_corrupt")
-      .collect().map(_.getString(1))
-    assert(corrupt.exists(_.contains("torn line")))
   }
 
   test("FeedSource: reads batch feed files, ledger counts + corrupt quarantine") {

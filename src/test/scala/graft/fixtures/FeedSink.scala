@@ -1,12 +1,12 @@
-package graft.sources
+package graft.fixtures
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** CSV feed-file WRITE side — the round-trip twin of [[FeedSource]]
-  * (reference: data_generator.py:45-128 generates random order batches,
-  * writes `orders_batch_<id>.csv` with header
+/** Test fixture: CSV feed-file WRITE side — the round-trip twin of
+  * [[FeedSource]] (reference: data_generator.py:45-128 generates random
+  * order batches, writes `orders_batch_<id>.csv` with header
   * `customer_id,amount,timestamp`, COPY-loads, and records the batch in
   * batch_control).
   *

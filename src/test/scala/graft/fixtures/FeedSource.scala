@@ -1,12 +1,13 @@
-package graft.sources
+package graft.fixtures
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** CSV feed-file ingestion (reference: data_generator.py:57-63 writes
-  * `orders_batch_<id>.csv` with header `customer_id,amount,timestamp`,
-  * then COPY-loads it and records the batch in batch_control).
+/** Test fixture: CSV feed-file ingestion (reference:
+  * data_generator.py:57-63 writes `orders_batch_<id>.csv` with header
+  * `customer_id,amount,timestamp`, then COPY-loads it and records the
+  * batch in batch_control).
   *
   * The Spark analog: read the feed directory with an explicit schema
   * (never inferSchema — a second full pass at 100 TB), extract the

@@ -1,12 +1,10 @@
-package graft.cdc
+package graft.fixtures
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
-
-/** Poll-until-timeout verification loop — the orchestration helper of
-  * the reference's verifier (verify_replication.py:71-98: re-check a
-  * batch's replication status every `check_interval` seconds until
-  * `replication_complete` or `timeout`).
+/** Test fixture: poll-until-timeout verification loop — the
+  * orchestration helper of the reference's verifier
+  * (verify_replication.py:71-98: re-check a batch's replication status
+  * every `check_interval` seconds until `replication_complete` or
+  * `timeout`).
   *
   * The loop is driver-side by construction (each poll runs one tiny
   * monitoring query); clock and sleep are injectable so the discipline
@@ -44,16 +42,4 @@ object Poll {
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** verify_replication.check_batch_status's loop: poll the latest-batch
-    * monitoring query until it reports replication_complete. */
-  def waitForLatestBatch(spark: SparkSession, dir: String,
-                         timeoutMs: Long, intervalMs: Long,
-                         clock: () => Long = () => System.currentTimeMillis(),
-                         sleep: Long => Unit = Thread.sleep): Result[Row] =
-    waitFor(() =>
-      Reconcile.latestBatchStatus(spark, dir)
-        .filter(col("replication_complete"))
-        .collect().headOption,
-      timeoutMs, intervalMs, clock, sleep)
 }
