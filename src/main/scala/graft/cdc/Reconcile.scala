@@ -139,10 +139,6 @@ object Reconcile {
     (key * 2654435761L % 1000000007L +
       floor(amount * 100d + 0.5d).cast("long") % 1000000007L) % 1000000007L
 
-  /** recon_hash_bucket — the 100 TB reconciliation path: aggregate each
-    * side to B bucket digests (count + sum of row digests); only buckets
-    * whose digests differ need row-level drill-down. Map-side combine makes
-    * this near scan-speed; the shuffle is B rows per side. */
   /** Generic bucketed digest compare: aggregate each side to `buckets`
     * (count, sum-of-row-digests) pairs; only buckets whose digests differ
     * need row-level drill-down. The digest column expression must be an
@@ -154,9 +150,9 @@ object Reconcile {
       bucketDigestsOf(src, keyCol, digestOf, buckets, "src_count", "src_digest"),
       bucketDigestsOf(tgt, keyCol, digestOf, buckets, "tgt_count", "tgt_digest"))
 
-  /** One side's per-bucket (count, sum-of-row-digests) rollup — the
-    * additive digest state streaming maintenance folds into
-    * (CdcStream.streamReconDigest). */
+  /** One side's per-bucket (count, sum-of-row-digests) rollup. Additive:
+    * the streaming digests (CdcStream.streamReconDigest) apply it to each
+    * micro-batch and sum the partials per bucket. */
   private[graft] def bucketDigestsOf(df: DataFrame, keyCol: String, digestOf: Column,
                                      buckets: Int, cnt: String, dig: String): DataFrame =
     df.withColumn("bucket", pmod(col(keyCol), lit(buckets.toLong)))
@@ -184,6 +180,10 @@ object Reconcile {
     rowDiffOf(restrict(src), restrict(tgt), keyCol, valueCol)
   }
 
+  /** recon_hash_bucket — the 100 TB reconciliation path: aggregate each
+    * side to B bucket digests (count + sum of row digests); only buckets
+    * whose digests differ need row-level drill-down. Map-side combine makes
+    * this near scan-speed; the shuffle is B rows per side. */
   def reconHashBucket(spark: SparkSession, dir: String): DataFrame =
     hashBucketDiffOf(
       Tables.orders(spark, dir).select(col("o_orderkey"), col("o_totalprice")),

@@ -1326,10 +1326,8 @@ object Dedup {
     * per cluster" step of a dedup pipeline). Oracle: DuckDB recursive-CTE
     * transitive closure — tractable because components are tiny; the
     * Spark side never materializes the closure, only labels. */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersFromLabels(connectedComponentsOf(dupPairs(spark, dir)))
-
-  private def clustersFromLabels(labels: DataFrame): DataFrame = {
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
+    val labels = connectedComponentsOf(dupPairs(spark, dir))
     val sizes = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("cluster_id"))
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
@@ -1381,16 +1379,14 @@ object Dedup {
     * doc_id survives; unclustered docs are their own cluster and are
     * kept). Downstream training reads `WHERE is_kept`. One left join of
     * the corpus against the (small) cluster labels. */
-  def dedupCanonical(spark: SparkSession, dir: String): DataFrame =
-    canonicalFromLabels(spark, dir, connectedComponentsOf(dupPairs(spark, dir)))
-
-  private def canonicalFromLabels(spark: SparkSession, dir: String,
-      labels: DataFrame): DataFrame =
+  def dedupCanonical(spark: SparkSession, dir: String): DataFrame = {
+    val labels = connectedComponentsOf(dupPairs(spark, dir))
     corpus(spark, dir).select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
       .withColumn("is_kept", col("cluster_id") === col("doc_id"))
       .orderBy(col("doc_id"))
+  }
 
   val dedupCanonicalSql: String =
     s"""WITH RECURSIVE $clusterLabCtes
@@ -1411,11 +1407,8 @@ object Dedup {
     * base = id % 1M). Cost: the CC labels the cluster family already
     * computes + one id-keyed join + a sources-sized rollup; shares
     * everything with dedup_canonical. */
-  def dedupSurvivorship(spark: SparkSession, dir: String): DataFrame =
-    survivorshipFromLabels(spark, dir, connectedComponentsOf(dupPairs(spark, dir)))
-
-  private def survivorshipFromLabels(spark: SparkSession, dir: String,
-      labels: DataFrame): DataFrame = {
+  def dedupSurvivorship(spark: SparkSession, dir: String): DataFrame = {
+    val labels = connectedComponentsOf(dupPairs(spark, dir))
     val man = corpus(spark, dir)
       .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
       .join(labels, Seq("doc_id"), "left")
@@ -1952,11 +1945,8 @@ object Dedup {
     * one row per CLUSTER, so everything after the labeling is
     * negligible. Share is one IEEE divide against the scalar corpus
     * count. */
-  def dedupClusterStats(spark: SparkSession, dir: String): DataFrame =
-    clusterStatsFromLabels(spark, dir, connectedComponentsOf(dupPairs(spark, dir)))
-
-  private def clusterStatsFromLabels(spark: SparkSession, dir: String,
-      labels: DataFrame): DataFrame = {
+  def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = {
+    val labels = connectedComponentsOf(dupPairs(spark, dir))
     val nDocs = corpus(spark, dir).agg(count(lit(1)).as("n_docs"))
     labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))

@@ -46,8 +46,8 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   * Each micro-batch folds its raw events with the lake's newest version
   * (`CdcOps.opFoldOf`, batch `applyLogOf`'s fold) over one key
   * exchange and publishes the next whole version, flat parquet sized by
-  * adaptive execution, through [[publishVersion]], as the recon digest
-  * state does. Deleted keys stay as tombstones
+  * adaptive execution, through [[publishVersion]], as every replay's
+  * sink does. Deleted keys stay as tombstones
   * (`last_op = 'D'`); [[readLake]] returns them, live readers filter
   * `last_op <> 'D'`. stream_cdc_apply replays the events table into a
   * scratch lake and returns it tombstones included.
@@ -61,9 +61,9 @@ case class BurstState(user_id: Long, n_gaps: Long, sx: Long, sxx: Long,
   * Tests drive the lake sink and `windowCounts` through MemoryStream
   * and feed directories (StreamingSpec). The SparkEntry `stream_*`
   * operators stream a table's parquet through a file source with
-  * Trigger.AvailableNow. All but the lake and the recon digests run
-  * through [[replay]], whose one sink publishes each micro-batch's
-  * output as version <batch id> through the same [[publishVersion]].
+  * Trigger.AvailableNow. All but the lake run through [[replay]], whose
+  * one sink publishes each micro-batch's output as version <batch id>
+  * through the same [[publishVersion]].
   */
 object CdcStream {
 
@@ -687,8 +687,8 @@ object CdcStream {
       })
 
   /** Publish version `v` of the parquet state under `base` — the one way
-    * [[streamApplyToLakeOf]], [[foldVersionedState]] and [[replay]] keep
-    * parquet across micro-batches. `write` fills a fresh `_tmp_v<v>` and
+    * [[streamApplyToLakeOf]] and [[replay]] keep parquet across
+    * micro-batches. `write` fills a fresh `_tmp_v<v>` and
     * one rename makes it `state_v<v>`, so a crash or failed rename at any
     * step leaves the earlier versions whole for the retry (a
     * dynamic-partition commit in place deletes each bucket before renaming
@@ -708,104 +708,26 @@ object CdcStream {
   private def dropVersionsBelow(fs: FileSystem, base: Path, keep: Long, listed: Seq[Long]): Unit =
     listed.filter(_ < keep).foreach(m => fs.delete(new Path(base, s"state_v$m"), true))
 
-  /** One fold step of the digest state of stream_recon_digest /
-    * stream_recon_incremental: state_v(k) = per-bucket sum-merge of
-    * state_v(k-1) and `partial`, published through [[publishVersion]]
-    * with k = batch id, since the fold re-reads its exact predecessor.
-    *
-    * Retry-idempotent under foreachBatch's at-least-once contract:
-    * v(k) is a pure function of v(k-1) and the batch's rows, and only
-    * v(k-2) — whose consuming batch k-1 must have COMMITTED to the
-    * offset log before batch k could start — is deleted. A retry of
-    * batch k (crash anywhere after the fold, including after the GC
-    * and a partial or complete v(k) write, before the offset commit)
-    * therefore always finds an intact v(k-1) and replaces v(k) with an
-    * identical one. Deleting v(k-1) inside batch k (the round-8
-    * formulation) left a crash window between the delete and the
-    * commit in which the retry found no predecessor and silently
-    * reset the accumulated digest to the batch's own partial —
-    * RecoverySpec's foldVersionedState case replays that schedule. Live
-    * state is at most two versions × bucket-count rows. */
-  private[graft] def foldVersionedState(spark: SparkSession, stateBase: String,
-      partial: DataFrame, batchId: Long, sumCols: Seq[String]): Unit = {
-    val base = new Path(stateBase)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = new Path(base, s"state_v${batchId - 1}")
-    val merged =
-      if (!fs.exists(prev)) partial
-      else {
-        val aggs = sumCols.map(c => sum(col(c)).as(c))
-        spark.read.parquet(prev.toString).unionByName(partial)
-          .groupBy(col("bucket"))
-          .agg(aggs.head, aggs.tail: _*)
-      }
-    // bucket-count rows by construction: one file per version is the
-    // right layout at any scale (guide §6 small-files point) — without
-    // the coalesce each 16-64-row version lands as one part file per
-    // shuffle partition, paying dozens of opens per micro-batch
-    publishVersion(fs, base, batchId)(merged.coalesce(1).write.parquet(_))
-    dropVersionsBelow(fs, base, batchId - 1, versions(fs, base))
-  }
-
-  /** The newest state_v* table under `stateBase` (see
-    * [[foldVersionedState]]). */
-  private[graft] def latestVersionedState(spark: SparkSession, stateBase: String): DataFrame = {
-    val base = new Path(stateBase)
-    val newest = versions(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base)
-    require(newest.nonEmpty, s"no state_v* under $stateBase — the stream processed zero batches")
-    spark.read.parquet(new Path(base, s"state_v${newest.max}").toString)
-  }
-
-  /** Streaming digest fold shared by stream_recon_digest and
-    * stream_recon_incremental: the orders feed replays as a multi-file
-    * stream (maxFilesPerTrigger=1 forces several micro-batches), and
-    * each micro-batch folds the per-bucket (row count, digest sum)
-    * partial of its `slice` into a `buckets`-row persistent state
-    * table. After replay the final state joins the `slice` of the
-    * drifted target's digests into recon_hash_bucket's output shape.
-    *
-    * State is versioned parquet (read v(b-1), publish v(b),
-    * garbage-collect v(b-2) — see [[foldVersionedState]] for the
-    * retry-window proof): a retried micro-batch re-reads its intact
-    * predecessor and publishes the same successor — idempotent under
-    * foreachBatch's at-least-once contract, the same [[publishVersion]]
-    * the CDC lake commits through, and never reads the path it is
-    * writing. State rows ∝ buckets (metadata-sized), shuffled
-    * once per batch with map-side combine. */
+  /** Streaming digest shared by stream_recon_digest and
+    * stream_recon_incremental: [[replay]] streams `orders` and each
+    * micro-batch publishes the per-bucket (row count, digest sum)
+    * partial of its `slice`. The digest is an additive sum of longs, so
+    * summing the partials per bucket gives the full-table digest under
+    * any batching, and a retried batch replaces its own partial instead
+    * of adding it twice. The sums join the `slice` of the drifted
+    * target's digests into recon_hash_bucket's output shape. */
   private def streamDigestFold(spark: SparkSession, dir: String,
                                slice: DataFrame => DataFrame,
                                buckets: Int): DataFrame = {
     import graft.cdc.Reconcile
-    val src = graft.core.Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"))
     val digest = Reconcile.rowDigest(col("o_orderkey"), col("o_totalprice"))
-    val stage = scratchDir("graft-recon-stream")
-    // stage the feed as several files so AvailableNow actually runs
-    // multiple incremental batches (a single file would be one batch);
-    // 4 batches exercise the fold at half the per-batch replay
-    // overhead of 8 — the incremental semantics don't depend on count.
-    // Hash-repartition on the key, not round-robin: keyless
-    // repartition(n) pays a local sort of its input (sortBeforeRepartition)
-    // purely for retry determinism, and the fold is additive — ANY
-    // deterministic batch split folds to the identical digest.
-    src.repartition(4, col("o_orderkey")).write.mode("overwrite")
-      .parquet(s"$stage/feed")
-    val stateBase = scratchDir("graft-recon-state").toString
-    val stream = spark.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$stage/feed")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        foldVersionedState(spark, stateBase,
-          Reconcile.bucketDigestsOf(slice(batch.toDF()), "o_orderkey",
-            digest, buckets, "src_count", "src_digest"),
-          batchId, Seq("src_count", "src_digest"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val partials = replay(spark, dir, OutputMode.Append, identity,
+      normalize = false, table = "orders",
+      perBatch = b => Reconcile.bucketDigestsOf(slice(b), "o_orderkey",
+        digest, buckets, "src_count", "src_digest"))
     Reconcile.digestJoin(
-      latestVersionedState(spark, stateBase),
+      partials.groupBy(col("bucket"))
+        .agg(sum(col("src_count")).as("src_count"), sum(col("src_digest")).as("src_digest")),
       Reconcile.bucketDigestsOf(slice(Reconcile.driftedTarget(spark, dir)),
         "o_orderkey", digest, buckets, "tgt_count", "tgt_digest"))
       .orderBy(col("bucket"))
@@ -826,21 +748,20 @@ object CdcStream {
   /** stream_recon_incremental — recon_incremental maintained under
     * streaming ingest: the watermark ("key deciles 0-7 were verified
     * last run") restricts re-verification to the RECENT slice, and the
-    * slice's digest state is folded per micro-batch instead of being
-    * recomputed from the full table. Each arriving batch filters to
-    * keys above the watermark AT SCAN SPEED (the watermark is one
+    * slice's digest is summed from per-micro-batch partials instead of
+    * being recomputed from the full table. Each arriving batch filters
+    * to keys above the watermark AT SCAN SPEED (the watermark is one
     * driver-side scalar from the ledger, captured before the replay —
-    * never a per-batch re-aggregation), reduces to ≤16 (count, digest)
-    * partials with map-side combine, and folds them into the same
-    * versioned-swap parquet state table stream_recon_digest uses
-    * (idempotent under foreachBatch retries; per-batch cost ∝ the
-    * batch's recent rows, state rows ∝ buckets). Rows below the
+    * never a per-batch re-aggregation) and reduces to ≤16 (count,
+    * digest) partials with map-side combine, through the same
+    * [[streamDigestFold]] stream_recon_digest uses (per-batch cost ∝
+    * the batch's recent rows, partial rows ∝ buckets). Rows below the
     * watermark cost a codegen'd comparison and nothing else — exactly
     * the "daily verify proportional to the day's churn" contract of
     * the batch op, now paid as the churn ARRIVES.
     *
     * Oracle ≡ batch recon_incremental (Reconcile.reconIncremental): after
-    * replay the folded slice digests join the target's recent digests
+    * replay the summed slice digests join the target's recent digests
     * into the identical 16-bucket compare, bit-for-bit. */
   def streamReconIncremental(spark: SparkSession, dir: String): DataFrame = {
     // Verified watermark from the ledger: one scalar, captured once.

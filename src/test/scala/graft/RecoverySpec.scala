@@ -21,18 +21,15 @@ import graft.streaming.CdcStream
   *    store. A rename that fails inside the lake commit must lose no
   *    key either, and the restart must converge the same way.
   *
-  * 2. foldVersionedState: the versioned-swap digest state replayed
-  *    under the crash-retry schedule that broke the round-8
-  *    formulation (delete v(k-1) before commit): retry of an
-  *    uncommitted batch must find an intact predecessor and rewrite
-  *    the identical successor, keeping the accumulated digest exact.
+  * 2. dropDuplicatesWithinWatermark: Spark's OWN state store must
+  *    come back from the checkpoint on restart. Duplicates are planted
+  *    ACROSS the crash boundary — batch 2 re-delivers batch-0
+  *    event_ids — so a restart that lost the dedup state would visibly
+  *    re-emit them.
   *
-  * 3. dropDuplicatesWithinWatermark: Spark's OWN state store (the
-  *    third recovery mechanism, distinct from the idempotent sink of
-  *    #1 and the hand-rolled versioned parquet of #2) must come back
-  *    from the checkpoint on restart. Duplicates are planted ACROSS
-  *    the crash boundary — batch 2 re-delivers batch-0 event_ids — so
-  *    a restart that lost the dedup state would visibly re-emit them.
+  * These are graft's two recovery mechanisms: the idempotent versioned
+  * publish of #1, which every `stream_*` replay's sink also commits
+  * through, and Spark's state store of #2.
   */
 class RecoverySpec extends SparkSpec {
 
@@ -156,38 +153,6 @@ class RecoverySpec extends SparkSpec {
       assert(lakeRows(CdcStream.readLake(spark, lake)) === lakeRows(CdcStream.readLake(spark, cleanLake)),
         "the recovered lake, tombstones included, must equal the uninterrupted run's")
     }
-  }
-
-  test("foldVersionedState: crash-retry schedule keeps the accumulated digest exact, GC stays bounded") {
-    import spark.implicits._
-    val stateBase = tempDir("graft-fold-state")
-    def partial(seed: Int): DataFrame =
-      (0 until 8).map(b => (b, (seed * 10 + b).toLong, (seed * 1000 + b * 7).toLong))
-        .toDF("bucket", "src_count", "src_digest")
-    val cols = Seq("src_count", "src_digest")
-
-    CdcStream.foldVersionedState(spark, stateBase, partial(1), 0L, cols)
-    CdcStream.foldVersionedState(spark, stateBase, partial(2), 1L, cols)
-    // batch 2 runs fully (fold + GC of v0) but its offset never commits…
-    CdcStream.foldVersionedState(spark, stateBase, partial(3), 2L, cols)
-    // …so the stream retries batch 2 after restart: the round-8
-    // formulation had deleted v1 here and the retry silently reset the
-    // state to partial(3) alone
-    CdcStream.foldVersionedState(spark, stateBase, partial(3), 2L, cols)
-    CdcStream.foldVersionedState(spark, stateBase, partial(4), 3L, cols)
-
-    val got = CdcStream.latestVersionedState(spark, stateBase)
-      .collect().map(r => r.getAs[Int]("bucket") ->
-        ((r.getAs[Long]("src_count"), r.getAs[Long]("src_digest")))).toMap
-    (0 until 8).foreach { b =>
-      val expCount = (1 to 4).map(s => s * 10L + b).sum
-      val expDigest = (1 to 4).map(s => s * 1000L + b * 7L).sum
-      assert(got(b) === ((expCount, expDigest)), s"bucket $b")
-    }
-    // GC keeps at most the two newest versions
-    val versions = new java.io.File(stateBase).listFiles()
-      .map(_.getName).filter(_.startsWith("state_v")).sorted.toSeq
-    assert(versions === Seq("state_v2", "state_v3"))
   }
 
   /** 4-file feed with duplicates planted ACROSS micro-batch

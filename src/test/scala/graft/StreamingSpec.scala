@@ -91,6 +91,41 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.values.exists(!_._3))
   }
 
+  test("stream_recon_digest: per-batch partials summed over micro-batches equal the batch digest") {
+    import graft.cdc.Reconcile
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // replay streams the single-file sf orders as one micro-batch, so
+    // the multi-batch sum is pinned here: the same per-batch step on
+    // three MemoryStream batches, partials summed per bucket
+    val rows = spark.read.parquet(s"$sf/orders.parquet")
+      .select("o_orderkey", "o_totalprice").as[(Long, Double)].collect()
+    val digest = Reconcile.rowDigest(col("o_orderkey"), col("o_totalprice"))
+    val partials = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    val input = MemoryStream[(Long, Double)]
+    val q = input.toDS().toDF("o_orderkey", "o_totalprice").writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        Reconcile.bucketDigestsOf(batch, "o_orderkey", digest, 64, "src_count", "src_digest")
+          .collect().foreach(partials.add)
+      }
+      .start()
+    try {
+      rows.grouped(rows.length / 3 + 1).foreach { part =>
+        input.addData(part.toSeq); q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
+    val summed = partials.toArray(Array.empty[Row]).toSeq
+      .groupBy(_.getAs[Long]("bucket"))
+      .map { case (b, ps) =>
+        b -> ((ps.map(_.getAs[Long]("src_count")).sum, ps.map(_.getAs[Long]("src_digest")).sum))
+      }
+    val batch = Reconcile.reconHashBucket(spark, sf).collect()
+      .filter(r => !r.isNullAt(r.fieldIndex("src_count")))
+      .map(r => r.getLong(0) -> ((r.getAs[Long]("src_count"), r.getAs[Long]("src_digest")))).toMap
+    assert(summed === batch)
+  }
+
   test("stream_recon_incremental: watermark-sliced streaming fold equals batch incremental verify") {
     val streamed = CdcStream.streamReconIncremental(spark, sf).collect()
       .map(r => r.getLong(0) -> ((r.getAs[Long]("src_count"), r.getAs[Long]("src_digest"),
